@@ -13,8 +13,9 @@ package graft.mr
  *  - `map` is a UDTF: one input record (in the reference, one whole file:
  *    key = path, value = contents) produces zero or more KV pairs.
  *  - `reduce` is a *holistic* UDAF: it receives the complete value list for
- *    a key, **sorted lexicographically** (the reference sorts the full
- *    `(k, v)` pair list before grouping — `sequential/src/main.rs:30`,
+ *    a key, **sorted by UTF-8 bytes** (Unicode code-point order; the
+ *    reference sorts the full `(k, v)` pair list of Rust `String`s before
+ *    grouping — `sequential/src/main.rs:30`,
  *    `worker.rs:174` — so value order within a key is a load-bearing,
  *    observable guarantee; the bundled indexer app depends on it).
  *  - Keys must not contain whitespace if the line-text sink is used
@@ -28,7 +29,7 @@ trait MrApp extends Serializable {
   /** UDTF: one input record to N intermediate KV pairs. */
   def map(key: String, value: String): Seq[(String, String)]
 
-  /** Holistic UDAF: complete, lexicographically sorted value list. */
+  /** Holistic UDAF: the complete value list, sorted by UTF-8 bytes. */
   def reduce(key: String, values: Seq[String]): String
 }
 

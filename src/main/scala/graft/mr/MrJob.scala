@@ -49,6 +49,31 @@ object MrJob {
     * Tungsten encoders end-to-end. */
   case class KV(key: String, value: String)
 
+  /** Strings in UTF-8 byte order, which is Unicode code-point order: the
+    * order of Rust's `String` and of Spark's string comparison. Scala's
+    * default `String` order compares UTF-16 code units instead, which puts
+    * supplementary characters (surrogate pairs) before U+E000..U+FFFF. */
+  val Utf8Order: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n) {
+        val x = a.charAt(i)
+        val y = b.charAt(i)
+        if (x != y) return codePointRank(x) - codePointRank(y)
+        i += 1
+      }
+      a.length - b.length
+    }
+    // lifts surrogates (D800..DFFF) above E000..FFFF, so the first differing
+    // code unit decides in code-point order
+    private def codePointRank(c: Char): Int =
+      if (c < 0xD800) c else if (c >= 0xE000) c - 0x800 else c + 0x2000
+  }
+
+  /** `(key, value)` pairs in [[Utf8Order]], key first: the reference's sort. */
+  val PairOrder: Ordering[(String, String)] = Ordering.Tuple2(Utf8Order, Utf8Order)
+
   /** Default reduce-partition count, mirroring the reference's `-r 10`
     * (`coordinator.rs:31-32`, `Makefile:17`). */
   val DefaultNumReduce = 10
@@ -85,11 +110,13 @@ object MrJob {
    *
    * The reduce stage (E5-E7) runs as the native
    * [[graft.functions.HolisticReduce]] aggregate: one typed imperative
-   * aggregate that collects values (with partial buffers through the
-   * shuffle), sorts once per group at eval (§1.4's guarantee), and applies
-   * the app's reduce — no intermediate array column and no UDF conversion
-   * boundary. [[runDeclarative]] is the builtins-only formulation of the
-   * same semantics; MrEngineSpec holds them differentially equal.
+   * aggregate that collects values as UTF-8 bytes, sorts once per group at
+   * eval (§1.4's guarantee), and applies the app's reduce — no
+   * intermediate array column and no UDF conversion boundary. The key
+   * shuffle below already clusters every key, so the partial and final
+   * aggregates run back to back in the same task and no partial buffer
+   * crosses a shuffle. [[runDeclarative]] is the builtins-only formulation
+   * of the same semantics; MrEngineSpec holds them differentially equal.
    */
   def run(input: Dataset[KV], app: MrApp, nReduce: Int = DefaultNumReduce): Dataset[KV] = {
     val spark = input.sparkSession
@@ -156,6 +183,7 @@ object MrJob {
   def runRdd(input: Dataset[KV], app: MrApp, nReduce: Int = DefaultNumReduce): Dataset[KV] = {
     val spark = input.sparkSession
     import spark.implicits._
+    implicit val sortOrder: Ordering[(String, String)] = PairOrder
     val sorted = input.rdd
       .flatMap(r => app.map(r.key, r.value))                       // E2
       .map(kv => (kv, ()))                                         // sort on (k, v): §1.4
@@ -215,15 +243,15 @@ object MrJob {
   /**
    * The sequential executor — a direct 15-line port of the reference's
    * semantic oracle (`sequential/src/main.rs:22-40`): eager flat-map, full
-   * lexicographic pair sort, consecutive-run grouping, reduce. Used by the
-   * test suite to differentially validate the Spark plan, exactly as
+   * (k, v) pair sort by UTF-8 bytes, consecutive-run grouping, reduce. Used
+   * by the test suite to differentially validate the Spark plan, exactly as
    * `test-mr.sh:29-31,52` diffs distributed output against the sequential
    * binary.
    */
   def runSequential(app: MrApp, input: Seq[(String, String)]): Seq[(String, String)] = {
     val intermediate = input
       .flatMap { case (k, v) => app.map(k, v) }
-      .sorted // Rust `Vec<(String, String)>::sort()` = lexicographic (k, v)
+      .sorted(PairOrder) // Rust `Vec<(String, String)>::sort()`: (k, v) by UTF-8 bytes
     // itertools::group_by on the sorted run (main.rs:33-38)
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var i = 0

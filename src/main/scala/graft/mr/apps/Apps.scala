@@ -1,6 +1,6 @@
 package graft.mr.apps
 
-import graft.mr.MrApp
+import graft.mr.{MrApp, MrJob}
 
 /**
  * Word count — port of the reference's `app-wc` (`app-wc/src/lib.rs:8-18`):
@@ -59,5 +59,5 @@ object SortedConcatApp extends MrApp {
   )
 
   def reduce(key: String, values: Seq[String]): String =
-    values.sorted.mkString(" ")
+    values.sorted(MrJob.Utf8Order).mkString(" ")
 }

@@ -20,9 +20,11 @@ import org.apache.spark.sql.SparkSession
   * stays negligible and the A/B isolates the pair kernel. Token spaces
   * are disjoint across clusters, so no cross-cluster bucket collisions.
   *
-  * Usage: HotBucketGen [nClusters] [clusterSize] [outDir]; then
-  *   SPARK_GRAFT_SF_DIR=<outDir> AbConf 7 spark.graft.hofPairs=true \
-  *     dedup_minhash_lsh
+  * Usage: HotBucketGen [nClusters] [clusterSize] [outDir]; then time
+  * `dedup_minhash_lsh` with `SPARK_GRAFT_SF_DIR=<outDir>`. The A/B this
+  * corpus was built for is settled and its conf gate deleted: at the
+  * defaults the native pair kernel took 13.79 s against 19.95 s for the
+  * higher-order-function form it replaced (NOTES.md records the run).
   */
 object HotBucketGen {
   def main(args: Array[String]): Unit = {

@@ -129,10 +129,27 @@ class MrEngineSpec extends AnyFunSuite {
     }
   }
 
+  /** Registers `graft_mr_reduce` into the live session: the same builder
+    * GraftExtensions injects. */
+  private def registerMrReduce(): Unit =
+    org.apache.spark.sql.GraftShims.registerFunction(spark, "graft_mr_reduce",
+      children => {
+        val app = MrApps.load(children.head.eval().toString)
+        graft.functions.HolisticReduce(children(1), children(2), app.reduce _)
+      })
+
+  /** Looks through adaptive query stages for the plan nodes `pf` matches. */
+  private def planNodes[B](df: org.apache.spark.sql.Dataset[_])(
+      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, B]): Seq[B] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan)(pf)
+
   test("HolisticReduce partial buffers survive serialize/merge across many input partitions") {
-    // Force partial aggregation by spreading each key's values over many
-    // input partitions — merge() then combines shuffled partial buffers,
-    // and §1.4's sort must still hold on the merged whole.
+    // A plain GROUP BY over 16 input partitions plans a partial aggregate
+    // in each map task and ships its serialized buffer through the shuffle
+    // (MrJob.run never does: its key shuffle comes first, so partial and
+    // final aggregates share a task). merge() then combines buffers from
+    // different tasks, and §1.4's sort must still hold on the merged whole.
     import spark.implicits._
     val probe = new MrApp {
       val name = "merge_probe"
@@ -140,20 +157,81 @@ class MrEngineSpec extends AnyFunSuite {
       def reduce(k: String, vs: Seq[String]): String =
         (if (vs == vs.sorted) "sorted:" else "UNSORTED:") + vs.mkString(",")
     }
+    MrApps.register(probe)
+    registerMrReduce()
     val values = (0 until 200).map(i => f"v$i%03d")
-    val input = scala.util.Random.shuffle(values).map(v => MrJob.KV("in", v))
-    val ds = spark.createDataset(input).repartition(16)
-    val out = MrJob.run(ds, probe, nReduce = 3).collect()
-    assert(out.length == 1 && out.head.value == "sorted:" + values.mkString(","))
+    scala.util.Random.shuffle(values).map(v => MrJob.KV("v", v)).toDS()
+      .repartition(16).createOrReplaceTempView("merge_probe_in")
+    val result = spark.sql(
+      """SELECT key, graft_mr_reduce('merge_probe', key, value) AS value
+        |FROM merge_probe_in GROUP BY key""".stripMargin).as[MrJob.KV]
+    assert(result.collect().toSeq == Seq(MrJob.KV("v", "sorted:" + values.mkString(","))))
+    // one partial buffer per input partition crossed the aggregate's shuffle
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val shipped = planNodes(result) {
+      case e: ShuffleExchangeExec if e.child.isInstanceOf[ObjectHashAggregateExec] =>
+        e.metrics("shuffleRecordsWritten").value
+    }
+    assert(shipped == Seq(16L))
+  }
+
+  test("sort-based object-aggregate fallback (serialized, spilled buffers) == oracle") {
+    // Past 128 groups a task (Spark's default threshold, pinned here; the
+    // bench harness raises it to 1,000,000) the object aggregate falls back
+    // to sorting: it spills its buffers through serialize/deserialize and
+    // merges them back in key order. A few hundred distinct words per
+    // reduce partition pass it.
+    import spark.implicits._
+    val rnd = new scala.util.Random(31)
+    def word(i: Int): String =
+      Iterator.iterate(i)(_ / 26).takeWhile(_ > 0).map(d => ('a' + d % 26).toChar).mkString + "x"
+    val vocab = (1 to 900).map(word)
+    val input = (0 until 40).map { d =>
+      (s"doc$d", Seq.fill(200)(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    }
+    val app = MrApps.load("wc")
+    val ds = spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
+    val threshold = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val saved = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "128")
+    try {
+      val result = MrJob.run(ds, app, nReduce = 2)
+      val got = result.collect().map(kv => (kv.key, kv.value)).toSeq
+      assert(got.size > 2 * 128)
+      assert(got.sorted == MrJob.runSequential(app, input).sorted)
+      import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+      val fellBack = planNodes(result) {
+        case a: ObjectHashAggregateExec => a.metrics("numTasksFallBacked").value
+      }.sum
+      assert(fellBack > 0, "no task fell back to sort-based aggregation")
+    } finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+  }
+
+  test("value order is UTF-8 byte order on every path (run, declarative, RDD, sequential)") {
+    // Rust sorts `String`s by bytes, and so does Spark's sort_array; Scala's
+    // default String order (UTF-16 code units) would put the surrogate pair
+    // of U+1F600 before U+FFFD.
+    import spark.implicits._
+    val probe = new MrApp {
+      val name = "utf8_order_probe"
+      def map(k: String, v: String): Seq[(String, String)] = Seq(("k", v))
+      def reduce(k: String, vs: Seq[String]): String = vs.mkString(",")
+    }
+    val byteOrder = Seq("z", "\u00e9", "\ufffd", "\ud83d\ude00")
+    val input = scala.util.Random.shuffle(byteOrder).map(v => ("in", v))
+    val ds = spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
+    val expected = Seq(("k", byteOrder.mkString(",")))
+    def pairs(r: org.apache.spark.sql.Dataset[MrJob.KV]) =
+      r.collect().map(kv => (kv.key, kv.value)).toSeq
+    assert(MrJob.runSequential(probe, input) == expected)
+    assert(pairs(MrJob.run(ds, probe, 2)) == expected)
+    assert(pairs(MrJob.runDeclarative(ds, probe, 2)) == expected)
+    assert(pairs(MrJob.runRdd(ds, probe, 2)) == expected)
   }
 
   test("graft_mr_reduce is callable from SQL (extensions-equivalent registration)") {
-    // same builder GraftExtensions injects, registered into the live session
-    org.apache.spark.sql.GraftShims.registerFunction(spark, "graft_mr_reduce",
-      children => {
-        val app = MrApps.load(children.head.eval().toString)
-        graft.functions.HolisticReduce(children(1), children(2), app.reduce _)
-      })
+    registerMrReduce()
     import spark.implicits._
     val input = corpus(seed = 5, nDocs = 10)
     spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
