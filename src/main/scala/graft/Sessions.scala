@@ -1,8 +1,39 @@
 package graft
 
-/** Session-construction helpers shared by the harness entry points
-  * (Bench / Verify / tools). */
+import org.apache.spark.sql.SparkSession
+
+/** The one place harness sessions are built: Bench, Verify and every tool
+  * main run on the session [[harness]] returns, so what a tool reports is
+  * what the bench measures. */
 object Sessions {
+
+  /** Core count of a harness session: `SPARK_GRAFT_CPUS`, else 4. */
+  def harnessCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The harness session: `local[cpus]` with one shuffle partition per
+    * core, UTC, no UI, a RAM-backed local dir, nanosecond event
+    * timestamps, the bounded-buffer object-aggregate threshold and a
+    * codegen cache large enough for the whole suite.
+    *
+    * The whole-stage-codegen class cache defaults to 100 entries; the
+    * suite compiles far more fragments than that, so with interleaved
+    * bench passes every query's codegen was evicted by the queries
+    * between its reps and recompiled (+ re-JITed) each pass — measured
+    * ~26 s across a 161-query suite (94.4 vs 68 s totals). A deployment
+    * sizes this cache to its workload's plan count; 10k entries is a few
+    * hundred MB ceiling. */
+  def harness(cpus: String = harnessCpus): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC") // timestamp literals/windows
+      .config("spark.ui.enabled", "false")
+      .config("spark.local.dir", ramLocalDir("graft_local"))
+      .config(graft.operators.Tables.NanosConf, "true") // events TIMESTAMP(NANOS)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+              ObjectAggFallbackGroups)
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .getOrCreate()
 
   /** `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` value for
     * the harness entry points. The Spark default (128 distinct groups per

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,16 +7,7 @@ object Verify {
     // driver contract: 2 args. Extra args (local dev loop) name a query
     // subset to dump, skipping the other ~80.
     val sfDir = args(0); val outDir = args(1); val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.operators.Tables.NanosConf, "true") // events TIMESTAMP(NANOS)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              graft.Sessions.ObjectAggFallbackGroups)
-      .getOrCreate()
+    val spark = Sessions.harness()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -235,9 +235,6 @@ object Dedup {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
-  private def bandedSignatures(spark: SparkSession, dir: String): DataFrame =
-    bandedSignaturesOf(t(spark, dir, "documents"))
-
   /** Oracle CTE body (no leading WITH) ending in `bands(doc_id, band,
     * sig)`, over any source relation `src(doc_id, text)`. */
   private def bandedSignaturesCtesFrom(src: String): String =

@@ -598,12 +598,11 @@ object Events {
 
   // ------------------------------------------------------- path mining
 
-  /** Path n-gram width and the result cut. */
-  private val PathN = 3
+  /** Result cut of the path top-k. */
   private val PathTopK = 20
 
   /**
-   * Top navigation paths [EXT]: the most frequent length-[[PathN]]
+   * Top navigation paths [EXT]: the most frequent length-3
    * event-type sequences across user streams — the "what do users do
    * next" product-analytics staple. Each user's events are ordered by
    * (ts, event_id) and every consecutive trigram counts once; output is

@@ -597,7 +597,6 @@ object Similarity {
     for (_ <- 1 to KmIters)
       cents = trainCents(kmAssign(c, cents).select(col("cluster"), col("v")))
     val assigned = kmAssign(c, cents)
-    import spark.implicits._
     val cent = centDf(spark, cents)
     val q = c.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -1061,17 +1060,6 @@ object Similarity {
               lit(0.0), (acc, x) => acc + x)
   private def l2sqSql(a: String, b: String): String =
     s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(list_zip($a, $b), p -> (p[1] - p[2]) * (p[1] - p[2]))), (acc, x) -> acc + x)"
-
-  /** Quantized per-cluster subvector means (same exact-integer-sum
-    * determinism as [[kmCentroids]], no norm — PQ trains on L2). */
-  private def pqCentroids(assigned: DataFrame): DataFrame =
-    assigned.select(col("cluster"), posexplode(col("sv")).as(Seq("dim", "x")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg((sum(floor(col("x") * lit(1e6))).cast("double")
-              / (count(lit(1)).cast("double") * lit(1e6))).as("m"))
-      .groupBy(col("cluster"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-                     s => s.getField("m")).as("cv"))
 
   /** Nearest-code assignment for one subspace as a zero-shuffle literal
     * projection: argmin squared-L2, ties to the smaller code
@@ -2043,7 +2031,6 @@ object Similarity {
     var cents = trainCents(c.select(col("label").as("cluster"), col("v")))
     for (_ <- 1 to KmIters)
       cents = trainCents(kmAssign(c, cents).select(col("cluster"), col("v")))
-    import spark.implicits._
     val cent = centDf(spark, cents)
     val m = kmAssign(c, cents)
       .join(broadcast(cent), "cluster")

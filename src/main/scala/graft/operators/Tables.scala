@@ -96,8 +96,8 @@ object Tables {
    *
    * The nanos conf is deliberately NOT set here: a table loader mutating
    * session state would silently switch every later nanos read in the
-   * session to the legacy path; entry points owning a session (Verify,
-   * Bench, Scratch, TestSpark) enable it at construction instead.
+   * session to the legacy path; entry points owning a session
+   * (`Sessions.harness`, TestSpark) enable it at construction instead.
    */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val raw =

@@ -274,7 +274,6 @@ object TextAnalysis {
    * All ratios divide exact integer counts — bit-identical in the oracle.
    */
   def textRepetition(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = t(spark, dir, "documents")
       .select(col("doc_id"), toks(col("text")).as("ts"))
       .select(col("doc_id"), col("ts"),

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.Ascending
@@ -193,7 +192,7 @@ case class AsofJoinExec(leftKey: Expression, rightKey: Expression,
 }
 
 object AsofJoinPlan {
-  import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+  import org.apache.spark.sql.{DataFrame, GraftShims}
   import org.apache.spark.sql.functions.col
 
   /**

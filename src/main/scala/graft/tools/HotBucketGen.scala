@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Synthetic hot-bucket corpus for the bucketPairs volume proof
   * (VERDICT r17 item 3): the r17 native `CombinationPairs` substitution
   * in the LSH bucket explode shipped on structural argument because the
@@ -31,9 +29,7 @@ object HotBucketGen {
     val nClusters = args.lift(0).map(_.toInt).getOrElse(500)
     val clusterSize = args.lift(1).map(_.toInt).getOrElse(200)
     val out = args.lift(2).getOrElse("/dev/shm/graft_hotbuckets")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.harness()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val docs = (0 until nClusters).flatMap { c =>

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -10,16 +9,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * guesswork. Usage: OpProf <query>... */
 object OpProf {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.ramLocalDir("graft_opprof_local"))
-      .config(graft.operators.Tables.NanosConf, "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-              graft.Sessions.ObjectAggFallbackGroups)
-      .getOrCreate()
+    val spark = graft.Sessions.harness()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -47,36 +37,19 @@ object OpProf {
       })
       kids.foreach(walk(_, depth + 1, out))
     }
-    // df.count() executes a DERIVED QueryExecution — capture the executed
-    // one (with its metric values) via a listener instead of df's own
-    @volatile var lastQe: org.apache.spark.sql.execution.QueryExecution = null
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        lastQe = qe
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    })
     for (n <- args) {
       // run twice: first warms codegen/JIT, second is the measured profile
       graft.SparkEntry.queries(n)(spark, dir).count()
       graft.operators.Checkpoints.releaseAll(spark)
       val df = graft.SparkEntry.queries(n)(spark, dir)
-      // capture the pre-measurement listener state so the wait below can
-      // tell the measured run's QueryExecution from the warm-up's
-      // (ADVICE r17: a fixed sleep could profile the stale run)
-      val before = lastQe
+      // the plan Dataset.count() runs, kept in hand so its executed plan
+      // (with metric values) is walked directly, with no listener
+      val c = df.groupBy().count()
       val t0 = System.nanoTime()
-      df.count()
+      c.collect()
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener delivery is async: poll until lastQe changes identity,
-      // bounded so a dropped event can't hang the profile
-      var waited = 0
-      while ((lastQe eq before) && waited < 5000) {
-        Thread.sleep(50); waited += 50
-      }
-      if (lastQe eq before)
-        System.err.println(s"[opprof] $n: listener never delivered; profiling stale plan")
       val sb = new StringBuilder
-      walk(finalPlan(lastQe.executedPlan), 0, sb)
+      walk(finalPlan(c.queryExecution.executedPlan), 0, sb)
       println(f"OPPROF $n wall=$wall%.3f\n$sb")
       graft.operators.Checkpoints.releaseAll(spark)
     }

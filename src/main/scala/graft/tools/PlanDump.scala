@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Checked-in plan artifact (VERDICT r6 item 8): dumps the FORMATTED
@@ -20,13 +19,8 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("docs/PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.operators.Tables.NanosConf, "true")
-      .getOrCreate()
+    // 8 cores whatever the host: the dumped plans show 8 shuffle partitions
+    val spark = graft.Sessions.harness("8")
     spark.sparkContext.setLogLevel("ERROR")
 
     def normalize(plan: String): String = plan

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Whole-surface repeated-scan audit — the standing gate for the one class
  * of scale bug that recurred in r15 (q21/q11/mad_outliers: AQE broadcast
@@ -180,12 +178,8 @@ object RescanAudit {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.operators.Tables.NanosConf, "true")
-      .getOrCreate()
+    // 8 cores, as PlanDump: the audited plans are the shapes docs/PLANS.md shows
+    val spark = graft.Sessions.harness("8")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val multi = scala.collection.mutable.SortedMap[String, Map[String, Int]]()

@@ -83,14 +83,8 @@ object StreamAmort {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.ramLocalDir("graft_samort"))
-      .config(graft.operators.Tables.NanosConf, "true")
-      .getOrCreate()
+    val cpus = graft.Sessions.harnessCpus
+    val spark = graft.Sessions.harness(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
     val gates = if (args.nonEmpty) args.toSeq

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Per-trigger profiler for the stream gates (not part of the library
@@ -25,14 +24,8 @@ object StreamProf {
                           d: Map[String, Long])
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Sessions.ramLocalDir("graft_sprof_local"))
-      .config(graft.operators.Tables.NanosConf, "true")
-      .getOrCreate()
+    val cpus = graft.Sessions.harnessCpus
+    val spark = graft.Sessions.harness(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).selectExpr("sum(id)").collect()

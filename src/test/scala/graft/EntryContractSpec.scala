@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /**
  * The driver contract, end-to-end on sf0.001: every registered query runs
@@ -20,6 +21,22 @@ class EntryContractSpec extends AnyFunSuite {
     // it emits ε-bound verdicts the oracle asserts as literal TRUEs
     assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty)
     assert((SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet).isEmpty)
+  }
+
+  test("only Sessions.scala builds a SparkSession in src/main") {
+    // every harness entry point gets the session the bench measures from
+    // Sessions.harness; a hand-rolled builder elsewhere drifts from it
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found")
+    val files = java.nio.file.Files.walk(root)
+    val builders =
+      try files.iterator.asScala.toSeq
+        .filter(p => p.toString.endsWith(".scala") &&
+          java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+        .map(root.relativize(_).toString)
+      finally files.close()
+    assert(builders == Seq("graft/Sessions.scala"),
+      s"SparkSession.builder outside Sessions.scala: $builders")
   }
 
   /** Queries whose correct answer on this data is legitimately empty. */

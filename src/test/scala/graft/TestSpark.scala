@@ -3,7 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (Spark startup is the
-  * dominant cost; suites must not stop() it). */
+  * dominant cost; suites must not stop() it).
+  *
+  * It keeps its own builder rather than `Sessions.harness` on purpose:
+  * `local[4, 2]` for task retry, a temp warehouse, and Spark's default
+  * object-aggregate fallback threshold (128 groups), so the suite keeps
+  * exercising the sort-based spill path of every TypedImperativeAggregate
+  * that the harness's 1M-group threshold skips. */
 object TestSpark {
   // local[4, 2]: 4 threads, maxFailures=2 — plain local[4] never retries a
   // failed task, which would make fault-tolerance specs (FaultToleranceSpec)

@@ -84,5 +84,4 @@ out = {
 with open("docs/BENCH_SF1.json", "w") as f:
     json.dump(out, f)
 print(f"sf1 pair: spark {spark_total} s vs duckdb {oracle_total} s = "
-      f"{spark_total / oracle_total:.3f}x; weak entries: {len(weak)}; "
-      f"dirty_passes: {bench['env']['dirty_passes']}")
+      f"{spark_total / oracle_total:.3f}x; weak entries: {len(weak)}")
