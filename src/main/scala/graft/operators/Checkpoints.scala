@@ -74,8 +74,8 @@ object Checkpoints {
   def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    spark.catalog.listTables().collect()
-      .filter(t => t.isTemporary && t.name.startsWith("graft_stream_"))
-      .foreach(t => spark.catalog.dropTempView(t.name))
+    org.apache.spark.sql.GraftShims.tempViewNames(spark)
+      .filter(_.startsWith("graft_stream_"))
+      .foreach(spark.catalog.dropTempView)
   }
 }

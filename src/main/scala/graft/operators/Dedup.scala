@@ -290,11 +290,12 @@ object Dedup {
     * (r17 build); pair sets and order are identical (ids are sorted, so
     * i<j pairs come out (a<b) in the same order). Proven at real pair
     * volume in r18 (the r17 A/B was noise-bound at this corpus' bucket
-    * occupancy): on a synthetic 500×200-doc hot-bucket corpus
-    * (tools/HotBucketGen, 39.8M exploded pairs, occupancy near the
-    * MaxBucketDocs cap) the native kernel ran 13.79 s vs 19.95 s for the
-    * HOF form — 31% faster where the explode IS the workload. The
-    * `spark.graft.hofPairs` A/B gate is deleted with that proof. */
+    * occupancy): on a synthetic 500×200-doc hot-bucket corpus (39.8M
+    * exploded pairs, occupancy near the MaxBucketDocs cap) the native
+    * kernel ran 13.79 s vs 19.95 s for the HOF form — 31% faster where
+    * the explode IS the workload (OPTIMIZATION_r18.md change 3 records
+    * the corpus and the run). The `spark.graft.hofPairs` A/B gate is
+    * deleted with that proof. */
   private def bucketPairs(banded: DataFrame): DataFrame =
     banded
       .groupBy(col("band"), col("sig"))

@@ -241,18 +241,19 @@ object Relational {
    * date.
    *
    * Plan shape at scale: `late` is a fact⋈fact join pre-filtered on both
-   * sides (status F orders, one shuffle on orderkey); the EXISTS becomes
-   * a LeftSemi and the NOT EXISTS a LeftAnti, both hash-partitioned on
-   * the SAME key (l_orderkey) so the exchanges line up back-to-back
-   * without re-shuffling; the supplier dimension broadcasts; the final
-   * top-100 is TakeOrderedAndProject, never a global sort.
+   * sides (status F orders, one shuffle on orderkey); the NOT EXISTS
+   * becomes a LeftAnti self-join of `late` whose two sides share one
+   * exchange, and the EXISTS a LeftSemi, both hash-partitioned on the
+   * SAME key (l_orderkey) so the exchanges line up back-to-back without
+   * re-shuffling; the supplier dimension broadcasts; the final top-100
+   * is TakeOrderedAndProject, never a global sort.
    */
   def q21WaitingOrders(spark: SparkSession, dir: String): DataFrame = {
     val li = t(spark, dir, "lineitem")
-    // late is consumed TWICE (as the semijoin probe side and as the
-    // NOT-EXISTS build side) — cut its lineage so the fact⋈fact join
-    // runs once; at sf1 AQE stopped reusing the exchange and the whole
-    // chain re-executed (the events_mad_outliers finding, same fix).
+    // late is consumed TWICE (as the probe side and as the NOT-EXISTS
+    // build side) — cut its lineage so the fact⋈fact join runs once; at
+    // sf1 AQE stopped reusing the exchange and the whole chain
+    // re-executed (the events_mad_outliers finding, same fix).
     val late = Checkpoints.cut(li
       .join(t(spark, dir, "orders")
               .filter(col("o_orderstatus") === "F")
@@ -262,12 +263,17 @@ object Relational {
       .select(col("l_orderkey"), col("l_suppkey")),
       eager = false)
     val others = li.select(col("l_orderkey").as("o2"), col("l_suppkey").as("s2"))
-    val otherLate = late.select(col("l_orderkey").as("o3"), col("l_suppkey").as("s3"))
-    late
+    // The NOT EXISTS runs first, as a self-join of late with no renaming:
+    // both sides then hash the same canonical plan, so one exchange
+    // serves both and every execution takes one plan. With the EXISTS
+    // first, the anti join's probe exchange waited on the lineitem
+    // broadcast and raced its build side's stage, and AQE planned one
+    // more job and a second shuffle of late whenever the broadcast won.
+    late.as("l1")
+      .join(late.as("l3"), col("l1.l_orderkey") === col("l3.l_orderkey") &&
+                           col("l1.l_suppkey") =!= col("l3.l_suppkey"), "left_anti")
       .join(others, col("l_orderkey") === col("o2") &&
                     col("l_suppkey") =!= col("s2"), "left_semi")
-      .join(otherLate, col("l_orderkey") === col("o3") &&
-                       col("l_suppkey") =!= col("s3"), "left_anti")
       .join(t(spark, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("s_name"))
       .agg(count(lit(1)).as("numwait"))

@@ -150,19 +150,13 @@ object StreamQueries {
     runStagedStream(spark, src, mode, xform, needsNoDataBatch)
   }
 
-  /** Env override for the state-store partition count (diagnostics/A-B
-    * runs); unset → [[statePartitionsFor]] sizes it from the staged
-    * batch volume. A streaming query pins `spark.sql.shuffle.partitions`
-    * state stores per stateful operator PER MICRO-BATCH (each pays task
-    * launch + snapshot + commit every trigger, data or not) — a fixed
-    * cost a deployment sizes to stream THROUGHPUT, not to the host's
-    * core count: 32 stores for a 25k-row micro-batch is ~4x pure
-    * overhead (measured: addBatch ~1.0 s -> ~0.3 s at 8, and 1 shaves
-    * the remaining snapshot/commit fan-out at that trigger size). */
-  private val StreamStatePartitions =
-    sys.env.get("GRAFT_STREAM_STATE_PARTITIONS").map(_.toInt)
-
-  /** Adaptive state-partition count (r14): one state store per ~512 KiB
+  /** A streaming query pins `spark.sql.shuffle.partitions` state stores
+    * per stateful operator per micro-batch, and each pays task launch,
+    * snapshot and commit every trigger, data or not: a fixed cost sized
+    * to stream throughput, not to the host's core count (r9: 32 stores
+    * for a 25k-row micro-batch was ~4x pure overhead).
+    *
+    * Adaptive state-partition count (r14): one state store per ~512 KiB
     * of staged micro-batch parquet (~25k events), capped at 16 — i.e.
     * sized to TRIGGER VOLUME, which is what "size to stream throughput"
     * means in code. sf0.01's ~70 KiB batches keep 1 store; sf0.1's
@@ -177,13 +171,12 @@ object StreamQueries {
     * Results are store-count invariant (hash state keying), which
     * StreamingSpec's differentials and the oracle gates' local[7] and
     * explicit 1/2/4/8-store hash-match runs pin. */
-  private def statePartitionsFor(src: File): Int =
-    StreamStatePartitions.getOrElse {
-      val maxBatch = Option(src.listFiles()).getOrElse(Array.empty[File])
-        .filter(_.getName.endsWith(".parquet"))
-        .foldLeft(0L)((m, f) => math.max(m, f.length()))
-      math.min(16L, math.max(1L, (maxBatch + (1L << 19) - 1) / (1L << 19))).toInt
-    }
+  private def statePartitionsFor(src: File): Int = {
+    val maxBatch = Option(src.listFiles()).getOrElse(Array.empty[File])
+      .filter(_.getName.endsWith(".parquet"))
+      .foldLeft(0L)((m, f) => math.max(m, f.length()))
+    math.min(16L, math.max(1L, (maxBatch + (1L << 19) - 1) / (1L << 19))).toInt
+  }
 
   /** @param needsNoDataBatch whether the drained result depends on the
     *   trailing NO-DATA micro-batch (the extra trigger Spark runs so the

@@ -1,26 +1,31 @@
 package graft.tools
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 /**
  * Whole-surface repeated-scan audit — the standing gate for the one class
  * of scale bug that recurred in r15 (q21/q11/mad_outliers: AQE broadcast
  * conversion detaching a multi-consumer subtree from exchange reuse, so
  * the corpus subtree silently executes twice).
  *
- * Executes every query and inspects its POST-AQE plan for the same
- * parquet table scanned more than once. A multi-scan is not automatically
- * wrong — self-joins, sketch-vs-exact comparisons, and query-sample
- * sides scan a table twice BY DESIGN — so every legitimate case is
- * pinned in [[allowed]] with its reason and a MAX scan count per table.
+ * Runs every query through [[Prof.run]] and inspects the POST-AQE plan
+ * of the count it ran for the same parquet table scanned more than
+ * once. A multi-scan is not automatically wrong — self-joins,
+ * sketch-vs-exact comparisons, and query-sample sides scan a table
+ * twice BY DESIGN — so every legitimate case is pinned in [[allowed]]
+ * with its reason and a MAX scan count per table.
  * Output: `docs/RESCAN.json` with the per-query observed counts; any
  * query that multi-scans without an allowlist entry, or beyond its
  * pinned count, lands in `"unexplained"` and the tool exits 1 — a new
  * AQE-detached rescan fails loud instead of surfacing as an sf1 mystery
  * two rounds later.
  */
-object RescanAudit {
+object RescanAudit extends AdaptiveSparkPlanHelper {
 
   /** query -> (max scans of any single table, why that is the design).
-    * Grouped by the reason families; counts observed at sf0.001. */
+    * Grouped by the reason families; each max is the count observed in
+    * the executed plan at sf0.001. */
   val allowed: Map[String, (Int, String)] = {
     val selfJoinAnn =
       "query side IS a bounded sample/centroid grid of the corpus table; " +
@@ -45,33 +50,29 @@ object RescanAudit {
       "ann_ivf_topk" -> (3, selfJoinAnn),
       "ann_kmeans_topk" -> (2, selfJoinAnn),
       "ann_multiprobe_lsh" -> (2, selfJoinAnn),
-      "ann_nndescent" -> (2, selfJoinAnn),
       "ann_pq_topk" -> (2, selfJoinAnn),
       "ann_range_search" -> (3, selfJoinAnn),
       "ann_rerank" -> (4, selfJoinAnn + "; coarse (quantized) and exact stages " +
         "each pair queries with the corpus"),
-      "dedup_embedding" -> (4, selfJoinAnn),
-      "dedup_semantic" -> (4, selfJoinAnn),
+      "dedup_embedding" -> (2, selfJoinAnn),
+      "dedup_semantic" -> (2, selfJoinAnn),
       "embed_centroid_outliers" -> (2, selfJoinAnn),
-      "embed_matryoshka" -> (4, selfJoinAnn + "; prefix-dim and full-dim arms " +
+      "embed_matryoshka" -> (2, selfJoinAnn + "; prefix-dim and full-dim arms " +
         "are compared, each pairing queries with the corpus"),
       "eval_knn_label" -> (2, selfJoinAnn),
-      "eval_retrieval" -> (12, "multi-arm retrieval eval: each retrieval arm " +
+      "eval_retrieval" -> (2, "multi-arm retrieval eval: each retrieval arm " +
         "(exact / LSH probes) pairs the bounded query sample with the corpus, " +
         "and the relevance-label side re-reads ids; every scan beyond the " +
         "corpus pass is bounded-sample-sized"),
       "split_semantic_decontam" -> (2, selfJoinAnn),
       // --- sketch / filter vs exact ground truth
-      "bloom_membership" -> (3, sketchVsExact),
       // cms_heavy_hitters left the list in r17: sketch build and exact
       // top-K now share one cut per-user aggregate (single corpus scan)
-      "hll_distinct" -> (2, sketchVsExact),
       "events_hll_sliding" -> (3, sketchVsExact),
       "layout_zorder" -> (2, "before/after layout comparison reads the fact " +
         "table under both orderings by design"),
       // --- two-role / self-join relational shapes
       "join_theta" -> (2, twoRoles),
-      "q7_volume_shipping" -> (2, twoRoles + " (customer and supplier nations)"),
       "q8_market_share" -> (2, twoRoles + " (customer and supplier nations)"),
       "set_ops" -> (2, twoRoles + " (two set operands)"),
       "subquery_correlated" -> (2, twoRoles + " (outer rows vs per-key average)"),
@@ -83,21 +84,20 @@ object RescanAudit {
         "per-part threshold, both from lineitem — Q20's nested aggregate"),
       "q22_idle_customers" -> (2, "global average balance (bounded scalar) vs " +
         "per-customer rows — Q22's scalar subquery"),
-      "q2_min_cost_supplier" -> (3, "per-part minimum cost (correlated " +
+      "q2_min_cost_supplier" -> (2, "per-part minimum cost (correlated " +
         "subquery) joins back; part feeds the filter and both sides"),
       // --- event-stream self-joins / multi-pass analytics
       "events_attribution" -> (2, twoRoles + " (conversions vs prior touches)"),
-      "events_bot_filter" -> (2, "per-user rate stats vs per-event rows"),
-      "events_cusum" -> (6, "per-type mean/sd baseline, the cumulative path, " +
+      "events_cusum" -> (2, "per-type mean/sd baseline, the cumulative path, " +
         "and the alarm join each read the (narrow) hourly series; the series " +
         "is cells-sized after the first aggregate, only the first scan is " +
         "corpus-sized"),
-      "events_ewma" -> (3, "seed row + recursive smoothing + final join over " +
+      "events_ewma" -> (2, "seed row + recursive smoothing + final join over " +
         "the hourly series"),
-      "events_funnel" -> (6, "k-stage funnel: each stage's matches join the " +
+      "events_funnel" -> (5, "k-stage funnel: each stage's matches join the " +
         "next stage's candidate events — a k-way self-join of the event " +
         "stream, the funnel's definition"),
-      "events_gapfill" -> (3, "observed cells vs generated calendar spine vs " +
+      "events_gapfill" -> (2, "observed cells vs generated calendar spine vs " +
         "fill-source rows"),
       "events_outliers" -> (2, "per-type robust stats vs per-event rows"),
       "events_retention" -> (3, "cohort anchor events vs return events vs " +
@@ -105,47 +105,31 @@ object RescanAudit {
       "events_rfm" -> (2, "per-user aggregates vs corpus-level quantile cuts"),
       "events_transitions" -> (2, "event stream self-joined with its lead " +
         "(from->to transition pairs)"),
-      "join_asof_clicks" -> (2, "trades and quotes are both derived from " +
-        "events (two filtered roles)"),
       "join_asof_native" -> (2, "same two-role derivation through the native " +
         "as-of plan"),
-      "join_asof_nearest" -> (4, "both directions (backward/forward) pair the " +
+      "join_asof_nearest" -> (2, "both directions (backward/forward) pair the " +
         "two event roles"),
       // --- text: corpus-stats side + per-doc side
-      "text_bigram_lm" -> (5, stagedText + "; train/held-out split plus " +
+      "text_bigram_lm" -> (2, stagedText + "; train/held-out split plus " +
         "unigram and bigram count sides"),
       "text_bm25" -> (4, stagedText),
-      "text_boilerplate" -> (3, stagedText),
       "text_burstiness" -> (2, stagedText),
-      "text_rake_keywords" -> (2, stagedText),
       "text_repetition" -> (2, stagedText),
-      "text_span_dedup" -> (2, "tile table self-joined to find shared spans"),
       "text_tfidf" -> (3, stagedText),
-      "text_unigram_lm" -> (3, stagedText),
-      "text_vocab_growth" -> (2, stagedText),
-      "eval_langid" -> (2, "labeled sample vs prediction side"),
-      "dsir_importance" -> (3, "target-domain n-gram stats, source stats, and " +
-        "per-doc scoring all read documents; the stats sides are " +
-        "aggregate-pruned"),
-      "split_contamination" -> (3, "train split, eval split, and n-gram " +
+      "text_unigram_lm" -> (2, stagedText),
+      "split_contamination" -> (2, "train split, eval split, and n-gram " +
         "overlap all derive from documents"),
       // --- dedup pipelines with sample/threshold sides
-      "dedup_edit_distance" -> (3, "LSH candidate pairs join back to both " +
+      "dedup_edit_distance" -> (2, "LSH candidate pairs join back to both " +
         "members' texts (two roles) plus the bucket side"),
-      "dedup_incr" -> (3, "existing corpus vs incoming batch (two roles) plus " +
-        "the join-back for winners"),
-      "dedup_substr" -> (3, "bigram tiles self-joined (two roles) plus the " +
-        "winner join-back"),
       "pack_sequences" -> (2, "token counts + bin assignment join back to rows"),
       "dedup_source_profile" -> (3, "the duplicate-docs-sized component table " +
         "looks up the source of BOTH its member and its representative (two " +
         "roles) against the 2-column (doc_id, source) projection; both " +
         "lookups are column-pruned scans, the text column is read once by " +
         "the LSH pass"),
-      "media_phash" -> (4, "phash bands self-joined (two roles) plus the " +
+      "media_phash" -> (3, "phash bands self-joined (two roles) plus the " +
         "pair join-back to both members' metadata"),
-      "corpus_attrition" -> (2, "per-stage attrition reads the rule booleans " +
-        "twice: per-source stage counts and corpus totals"),
       "stats_chi2_drift" -> (2, "baseline-window vs current-window " +
         "distributions from the same stream")
     )
@@ -153,16 +137,17 @@ object RescanAudit {
 
   private val table = "(region|nation|customer|supplier|part|orders|lineitem|events|documents|embeddings)\\.parquet".r
 
-  /** Tables scanned more than once in the ALREADY-EXECUTED (post-AQE)
-    * plan of `df` — call after an action, or the adaptive plan is still
-    * the initial one and reuse/detachment hasn't been decided. */
-  def multiScans(df: org.apache.spark.sql.DataFrame): Map[String, Int] = {
-    val p = df.queryExecution.executedPlan.toString
-    val scans = p.split("\n").filter(_.contains("Scan parquet"))
-      .flatMap(l => table.findFirstMatchIn(l).map(_.group(1)))
-    scans.groupBy(identity).filter(_._2.length > 1)
-      .map { case (t, v) => t -> v.length }
-  }
+  /** Scans of each table in an executed plan, subqueries and adaptive
+    * stages included ([[Prof.Run.plan]]). A plan that has not run is
+    * still the initial adaptive plan, where reuse and broadcast
+    * detachment are undecided, so it is not audited. */
+  def scans(plan: SparkPlan): Map[String, Int] =
+    collectWithSubqueries(plan) { case s: FileSourceScanExec => s.relation.location.rootPaths }
+      .flatten.map(_.getName).collect { case table(t) => t }
+      .groupBy(identity).map { case (t, v) => t -> v.size }
+
+  /** The tables an executed plan scans more than once. */
+  def multiScans(plan: SparkPlan): Map[String, Int] = scans(plan).filter(_._2 > 1)
 
   /** The gate: Some(violation message) when `dup` has a table not
     * covered by — or beyond the pinned max of — the allowlist entry. */
@@ -184,14 +169,11 @@ object RescanAudit {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val multi = scala.collection.mutable.SortedMap[String, Map[String, Int]]()
     val errs = scala.collection.mutable.ArrayBuffer[String]()
-    for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
+    for (name <- graft.SparkEntry.queries.keys.toSeq.sorted) {
       try {
-        val df = fn(spark, dir)
-        df.count()
-        val dup = multiScans(df)
+        val dup = multiScans(Prof.run(spark, name, dir).plan)
         if (dup.nonEmpty) multi(name) = dup
       } catch { case e: Throwable => errs += s"$name: ${e.getMessage}" }
-      graft.operators.Checkpoints.releaseAll(spark)
     }
     spark.stop()
     val unexplained =

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /**
  * Stream-floor AMORTIZATION evidence (VERDICT r14 item 6):
@@ -86,7 +85,6 @@ object StreamAmort {
     val cpus = graft.Sessions.harnessCpus
     val spark = graft.Sessions.harness(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
     val gates = if (args.nonEmpty) args.toSeq
                 else Seq("stream_hourly_counts", "stream_sessionize")
     val sfSel = sys.env.getOrElse("SPARK_GRAFT_AMORT_SFS", "sf0.1,sf1,sf10")
@@ -106,42 +104,17 @@ object StreamAmort {
         case _            => ()
       }
 
-    @volatile var sink: java.util.List[(Long, Long)] = null
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val s = sink
-        if (s != null) s.add((e.progress.numInputRows,
-          e.progress.durationMs.getOrDefault("addBatch", -1L).longValue()))
-      }
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    })
-
     def med(xs: Seq[Long]): Long = if (xs.isEmpty) -1 else xs.sorted.apply(xs.size / 2)
 
     val cells = for (g <- gates; (sfName, dir) <- dirs) yield {
       // rep 1 warms plan/codegen; rep 2 is the measured protocol cost
-      var rows = Seq.empty[(Long, Long)]
-      var wall = 0.0
-      for (rep <- 1 to 2) {
-        val buf = java.util.Collections.synchronizedList(
-          new java.util.ArrayList[(Long, Long)]())
-        sink = buf
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(g)(spark, dir).count()
-        wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // drain listener bus
-        sink = null
-        import scala.jdk.CollectionConverters._
-        rows = buf.asScala.toSeq
-        graft.operators.Checkpoints.releaseAll(spark)
-      }
-      val fed = rows.filter(_._1 > 0) // drop the zero-row watermark-flush trigger
-      val totalRows = fed.map(_._1).sum
-      val medBatch = med(fed.map(_._2))
-      val nsPerRow =
-        if (totalRows == 0) -1
-        else fed.map(_._2).sum * 1000000L / totalRows
+      val run = Seq.fill(2)(Prof.run(spark, g, dir)).last
+      val wall = run.wallS
+      val fed = run.triggers.filter(_.rows > 0) // drop the zero-row watermark-flush trigger
+      val addBatch = fed.map(_.durationMs.getOrElse("addBatch", -1L))
+      val totalRows = fed.map(_.rows).sum
+      val medBatch = med(addBatch)
+      val nsPerRow = if (totalRows == 0) -1 else addBatch.sum * 1000000L / totalRows
       println(f"SAMORT $g%-22s $sfName%-6s rows=$totalRows%8d triggers=${fed.size} medAddBatch=${medBatch}ms ns/row=$nsPerRow wall=$wall%.2f s")
       (g, sfName, totalRows, fed.size, medBatch, nsPerRow, wall)
     }

@@ -27,6 +27,16 @@ object GraftShims {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
+  /** Block until the listener bus has delivered every event posted so
+    * far (`listenerBus` is `private[spark]`). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The session's temp view names: a catalog lookup that, unlike
+    * `spark.catalog.listTables()`, runs no Spark job. */
+  def tempViewNames(spark: SparkSession): Seq[String] =
+    spark.sessionState.catalog.getTempViewNames()
+
   /** `AbstractDataType` is `private[sql]`; re-export the type so graft
     * expressions can declare `inputTypes` for analysis-time checking. */
   type AbstractType = org.apache.spark.sql.types.AbstractDataType

@@ -23,20 +23,34 @@ class EntryContractSpec extends AnyFunSuite {
     assert((SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet).isEmpty)
   }
 
-  test("only Sessions.scala builds a SparkSession in src/main") {
-    // every harness entry point gets the session the bench measures from
-    // Sessions.harness; a hand-rolled builder elsewhere drifts from it
+  /** Files under src/main/scala (relative paths, sorted) containing `text`. */
+  private def mainSourcesWith(text: String): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"$root not found")
     val files = java.nio.file.Files.walk(root)
-    val builders =
-      try files.iterator.asScala.toSeq
-        .filter(p => p.toString.endsWith(".scala") &&
-          java.nio.file.Files.readString(p).contains("SparkSession.builder"))
-        .map(root.relativize(_).toString)
-      finally files.close()
+    try files.iterator.asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") &&
+        java.nio.file.Files.readString(p).contains(text))
+      .map(root.relativize(_).toString).sorted
+    finally files.close()
+  }
+
+  test("only Sessions.scala builds a SparkSession in src/main") {
+    // every harness entry point gets the session the bench measures from
+    // Sessions.harness; a hand-rolled builder elsewhere drifts from it
+    val builders = mainSourcesWith("SparkSession.builder")
     assert(builders == Seq("graft/Sessions.scala"),
       s"SparkSession.builder outside Sessions.scala: $builders")
+  }
+
+  test("only Prof.scala installs listeners in src/main; no tool sleeps") {
+    // Prof attributes events by job tag and drains the listener bus
+    // exactly; a second hand-rolled listener would race the bus again
+    for (call <- Seq("addSparkListener", "streams.addListener"))
+      assert(mainSourcesWith(call) == Seq("graft/tools/Prof.scala"),
+        s"$call outside Prof.scala: ${mainSourcesWith(call)}")
+    val sleepers = mainSourcesWith("Thread.sleep").filter(_.startsWith("graft/tools/"))
+    assert(sleepers.isEmpty, s"Thread.sleep under graft/tools: $sleepers")
   }
 
   /** Queries whose correct answer on this data is legitimately empty. */
@@ -45,18 +59,17 @@ class EntryContractSpec extends AnyFunSuite {
     // there is no non-edge to predict (2 rows at sf0.01, 478 at sf1)
     "graph_common_neighbors", "graph_jaccard_links")
 
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+  for (name <- SparkEntry.queries.keys.toSeq.sorted) {
     test(s"$name runs on sf0.001") {
-      val df = fn(spark, TestSpark.Sf0001)
-      assert(df.columns.nonEmpty)
-      val n = df.count()
-      if (!mayBeEmpty(name)) assert(n > 0, s"$name returned no rows")
-      // standing rescan gate (VERDICT r16 item 3): the post-AQE plan may
-      // not scan a table more often than the RescanAudit allowlist pins —
-      // a new AQE-detached multi-consumer subtree fails HERE, in CI,
-      // instead of surfacing as an sf1 perf mystery rounds later
+      val run = graft.tools.Prof.run(spark, name, TestSpark.Sf0001)
+      assert(run.schema.nonEmpty)
+      if (!mayBeEmpty(name)) assert(run.rows > 0, s"$name returned no rows")
+      // standing rescan gate (VERDICT r16 item 3): the post-AQE plan that
+      // ran may not scan a table more often than the RescanAudit allowlist
+      // pins — a new AQE-detached multi-consumer subtree fails HERE, in
+      // CI, instead of surfacing as an sf1 perf mystery rounds later
       val v = graft.tools.RescanAudit.violation(
-        name, graft.tools.RescanAudit.multiScans(df))
+        name, graft.tools.RescanAudit.multiScans(run.plan))
       assert(v.isEmpty, s"RESCAN: ${v.getOrElse("")}")
     }
   }

@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
-"""Merge two Timeit sweep logs (sf0.1 and sf1) into docs/SF1_SWEEP.tsv.
+"""Merge two Prof sweep logs (sf0.1 and sf1) into docs/SF1_SWEEP.tsv.
 
 Usage: merge_sweep.py <sf01.log> <sf1.log> [out.tsv]
-Parses `TIMEIT <name> median=..  min=..  max=..` lines.
+Parses the `PROF <name> wall=.. min=.. max=..` lines that
+`graft.tools.Prof <reps> <query>...` prints (wall = build + count, the
+Bench action).
 """
 import re, sys
 
-PAT = re.compile(r"TIMEIT (\S+)\s+median=\s*([\d.]+)\s+min=\s*([\d.]+)\s+max=\s*([\d.]+)")
+PAT = re.compile(r"PROF (\S+)\s+wall=\s*([\d.]+)\s+min=\s*([\d.]+)\s+max=\s*([\d.]+)")
 
 def parse(path):
     out = {}
