@@ -50,22 +50,30 @@ object Sessions {
     * per its executor memory instead. */
   val ObjectAggFallbackGroups = "1000000"
 
-  /** A RAM-backed `spark.local.dir` (shuffle files, spill, broadcast
-    * scratch) when the host has a writable tmpfs, else the JVM temp dir.
-    * Local-disk writeback stalls showed up as random multi-second spikes
-    * in otherwise-stable bench reps (shuffle-heavy queries only — the
-    * zero-shuffle ones never spiked); shuffle bytes at bench scale are
-    * MBs, so RAM is safe. A real cluster leaves this alone: executors
-    * get fast local disks sized for shuffle, and losing a shuffle file
-    * there is recoverable, so this is harness hygiene, not a deployment
-    * recommendation. Cleaned by Spark on context stop + a JVM hook. */
-  def ramLocalDir(prefix: String): String = {
+  /** A fresh temp directory on a RAM-backed tmpfs (`/dev/shm`) when the
+    * host has a writable one, else in the JVM temp dir. Harness scratch
+    * that is cheap to lose lives here: shuffle files ([[ramLocalDir]]) and
+    * the stream gates' staged batches and checkpoints. */
+  def ramTempDir(prefix: String): java.io.File = {
     val shm = new java.io.File("/dev/shm")
     val base =
       if (shm.isDirectory && shm.canWrite)
         java.nio.file.Files.createTempDirectory(shm.toPath, prefix)
       else java.nio.file.Files.createTempDirectory(prefix)
-    val f = base.toFile
+    base.toFile
+  }
+
+  /** A RAM-backed `spark.local.dir` (shuffle files, spill, broadcast
+    * scratch) from [[ramTempDir]]. Local-disk writeback stalls showed up
+    * as random multi-second spikes in otherwise-stable bench reps
+    * (shuffle-heavy queries only — the zero-shuffle ones never spiked);
+    * shuffle bytes at bench scale are MBs, so RAM is safe. A real cluster
+    * leaves this alone: executors get fast local disks sized for shuffle,
+    * and losing a shuffle file there is recoverable, so this is harness
+    * hygiene, not a deployment recommendation. Cleaned by Spark on
+    * context stop + a JVM hook. */
+  def ramLocalDir(prefix: String): String = {
+    val f = ramTempDir(prefix)
     sys.addShutdownHook {
       def rm(x: java.io.File): Unit = {
         if (x.isDirectory) Option(x.listFiles).foreach(_.foreach(rm))

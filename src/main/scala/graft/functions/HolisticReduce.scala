@@ -87,8 +87,8 @@ object HolisticReduceBuffer {
  * engine sorted — `worker.rs:174,181`) as a native Catalyst
  * [[TypedImperativeAggregate]].
  *
- * Versus the declarative `sort_array(collect_list(v))` + scalar-UDF
- * formulation it replaces in the engine hot path:
+ * Versus the same reduce from Spark builtins, `sort_array(collect_list(v))`
+ * plus a scalar UDF:
  *  - values accumulate as raw UTF-8 bytes in one growable array — no
  *    per-value `String`, no per-group UnsafeArrayData materialization, no
  *    array-column copy through the ScalaUDF converter boundary;

@@ -17,19 +17,16 @@ import org.apache.spark.sql.functions._
  *      -> `repartition(nReduce, $"key")` (Murmur3 HashPartitioning; the
  *         reference uses SipHash — key->partition mapping is opaque in both,
  *         only per-job consistency is observable, SURVEY.md §1.5)
- *  - E5+E6 sort then consecutive-run group (`main.rs:30-38`, `worker.rs:174-181`)
- *      -> `groupBy($"key").agg(sort_array(collect_list($"value")))`; the
- *         `sort_array` reproduces the load-bearing value-order guarantee
- *         (SURVEY.md §1.4) that a bare `collect_list` would break (shuffle
- *         arrival order is nondeterministic).
- *  - E7 holistic reduce (`main.rs:38`, `worker.rs:181`) -> the native
- *      [[graft.functions.HolisticReduce]] TypedImperativeAggregate (or the
- *      builtins-only `sort_array(collect_list)` + UDF twin,
- *      [[MrJob.runDeclarative]]). The reference has no combiner (every map
- *      output pair crosses the shuffle, `app-wc/src/lib.rs:12`); we keep the
- *      same holistic contract for generality, and ship DataFrame-native
- *      "twins" of the bundled apps for the decomposable cases
- *      (graft.operators).
+ *  - E5+E6+E7 sort, consecutive-run group and holistic reduce
+ *      (`main.rs:30-38`, `worker.rs:174-181`) -> the native
+ *      [[graft.functions.HolisticReduce]] TypedImperativeAggregate, which
+ *      sorts each group's values by UTF-8 bytes before the app's reduce:
+ *      the load-bearing value-order guarantee (SURVEY.md §1.4) that
+ *      shuffle arrival order alone would break. The reference has no
+ *      combiner (every map output pair crosses the shuffle,
+ *      `app-wc/src/lib.rs:12`); we keep the same holistic contract for
+ *      generality, and ship DataFrame-native "twins" of the bundled apps
+ *      for the decomposable cases (graft.operators).
  *  - E8 atomic text sink (`worker.rs:178-190`) -> `df.write.text` under
  *      Spark's FileOutputCommitter (temp + rename protocol, same
  *      exactly-once-visibility guarantee).
@@ -38,7 +35,7 @@ import org.apache.spark.sql.functions._
  *
  * Scale notes (100 TB target): the shuffle is a single hash exchange on the
  * intermediate key — exactly one wide dependency, same as the reference.
- * `collect_list` makes per-key memory O(values-per-key), which is the
+ * The holistic reduce holds per-key memory O(values-per-key), which is the
  * reference's own behavior (`worker.rs:150-176` materializes everything);
  * for skewed keys prefer the decomposable DataFrame twins, which Spark
  * partial-aggregates map-side.
@@ -115,102 +112,24 @@ object MrJob {
    * intermediate array column and no UDF conversion boundary. The key
    * shuffle below already clusters every key, so the partial and final
    * aggregates run back to back in the same task and no partial buffer
-   * crosses a shuffle. [[runDeclarative]] is the builtins-only formulation
-   * of the same semantics; MrEngineSpec holds them differentially equal.
+   * crosses a shuffle. MrEngineSpec holds it differentially equal to
+   * [[runSequential]].
    */
   def run(input: Dataset[KV], app: MrApp, nReduce: Int = DefaultNumReduce): Dataset[KV] = {
     val spark = input.sparkSession
     import spark.implicits._
 
+    // E2: UDTF flat-map; Dataset.flatMap keeps the app's Scala signature
+    // verbatim (`fn map(k, v) -> Vec<(k, v)>`, common/src/lib.rs:6).
     // E3: hash shuffle into exactly nReduce partitions on the key; then
     // E5+E6+E7 fused into the native holistic-reduce aggregate.
-    mapStage(input, app)
+    input.flatMap(r => app.map(r.key, r.value).map { case (k, v) => KV(k, v) })
       .repartition(nReduce, $"key")
       .groupBy($"key")
       .agg(graft.functions.HolisticReduce(app.reduce _)($"key", $"value").as("value"))
       .orderBy($"key") // E9: global merge-sort of partition outputs
       .as[KV]
   }
-
-  /**
-   * The declarative twin of [[run]]'s reduce stage, from builtins only:
-   * `sort_array(collect_list(value))` (E5+E6, the §1.4 value-order
-   * guarantee a bare collect_list would break — shuffle arrival order is
-   * nondeterministic) + a scalar reduce UDF (E7). Semantically identical
-   * to the native aggregate; kept as the cross-check and as the
-   * formulation that needs zero custom Catalyst code.
-   */
-  def runDeclarative(input: Dataset[KV], app: MrApp,
-                     nReduce: Int = DefaultNumReduce): Dataset[KV] = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    val reduceUdf = udf((k: String, vs: Seq[String]) => app.reduce(k, vs))
-    mapStage(input, app)
-      .repartition(nReduce, $"key")
-      .groupBy($"key")
-      .agg(sort_array(collect_list($"value")).as("values"))
-      .select($"key", reduceUdf($"key", $"values").as("value"))
-      .orderBy($"key")
-      .as[KV]
-  }
-
-  /** E2: UDTF flat-map. Dataset.flatMap keeps the app's Scala signature
-    * verbatim (`fn map(k, v) -> Vec<(k, v)>`, common/src/lib.rs:6). */
-  private def mapStage(input: Dataset[KV], app: MrApp): Dataset[KV] = {
-    import input.sparkSession.implicits._
-    input.flatMap(r => app.map(r.key, r.value).map { case (k, v) => KV(k, v) })
-  }
-
-  /**
-   * The RDD-primitive formulation of the same pipeline — MapReduce is
-   * directly translatable to Spark's original RDD transformations, and
-   * this is that translation, stage for stage:
-   * `flatMap` (E2) → `repartitionAndSortWithinPartitions` with a
-   * `HashPartitioner(nReduce)` (E3 hash shuffle + E5 sort, in ONE
-   * primitive — the shuffle writes sorted runs and the reducer merges
-   * them, which is the closest Spark gets to classic MapReduce's
-   * sort-based shuffle) → per-partition consecutive-run grouping (E6, the
-   * `itertools::group_by` twin — valid because the partitioner clusters
-   * each key into one partition and the sort makes runs contiguous) →
-   * `app.reduce` (E7). Output collected per partition ≙ `mr-out-<j>`.
-   *
-   * The Dataset path ([[run]]) is the production engine — Tungsten
-   * encoders, codegen, AQE; this twin exists because the mapping is the
-   * point: it proves the reference's exact execution strategy (partition,
-   * sort, run-group) expresses in Spark primitives with identical
-   * results (MrEngineSpec holds all three paths equal).
-   */
-  def runRdd(input: Dataset[KV], app: MrApp, nReduce: Int = DefaultNumReduce): Dataset[KV] = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    implicit val sortOrder: Ordering[(String, String)] = PairOrder
-    val sorted = input.rdd
-      .flatMap(r => app.map(r.key, r.value))                       // E2
-      .map(kv => (kv, ()))                                         // sort on (k, v): §1.4
-      .repartitionAndSortWithinPartitions(                         // E3 + E5
-        new org.apache.spark.HashPartitioner(nReduce) {
-          override def getPartition(key: Any): Int =
-            super.getPartition(key.asInstanceOf[(String, String)]._1)
-        })
-    val reduced = sorted.mapPartitions { it =>                     // E6 + E7
-      new Iterator[KV] {
-        private val buf = it.buffered
-        def hasNext: Boolean = buf.hasNext
-        def next(): KV = {
-          val k = buf.head._1._1
-          val vs = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (buf.hasNext && buf.head._1._1 == k) { vs += buf.next()._1._2 }
-          KV(k, app.reduce(k, vs.toSeq))
-        }
-      }
-    }
-    spark.createDataset(reduced).orderBy($"key")                   // E9
-  }
-
-  /** Convenience: load the app by name (E11) and run over whole files. */
-  def runFiles(spark: SparkSession, appName: String, inputPaths: Seq[String],
-               nReduce: Int = DefaultNumReduce): Dataset[KV] =
-    run(wholeFileInput(spark, inputPaths), MrApps.load(appName), nReduce)
 
   // ------------------------------------------------------------------ sink
 

@@ -27,11 +27,18 @@ object Checkpoints {
     * iterative lineage cut from localCheckpoint to reliable checkpoint. */
   val DirConf = "spark.graft.checkpointDir"
 
-  /** Cut lineage under the session policy. `eager` has checkpoint()'s
-    * usual meaning: materialize now vs at the first downstream action.
-    * (The r17 global lazy-cuts A/B conf is gone — r18 took the measured
-    * per-site wins as explicit `eager = false` call sites and deleted
-    * the gate, per VERDICT r17.) */
+  /** Cut lineage under the session policy.
+    *
+    * `eager = true` runs the whole plan now: its shuffle stages, then a
+    * result job that stores the cut's blocks. `eager = false` defers only
+    * that last part. The Dataset builds the cut's RDD through
+    * `executedPlan.execute()`, and an adaptive plan runs every shuffle
+    * (and broadcast) stage under the cut to do so, at cut time, before
+    * any action. The final stage — the one that computes and stores the
+    * blocks — runs inside the first job that reads the cut. So a lazy cut
+    * saves the separate result job, not the work below its last
+    * exchange; only a plan with no exchange under the cut is deferred
+    * whole. CheckpointsSpec pins this on a one-shuffle plan. */
   def cut(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption(DirConf).filter(_.nonEmpty) match {

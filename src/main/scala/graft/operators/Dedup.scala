@@ -398,8 +398,8 @@ object Dedup {
   /** The CC loop over any candidate-pair table (doc_a, doc_b) — reused by
     * [[Pipeline.corpusPrep]] on its filtered corpus. */
   private[operators] def componentsOf(pairs: DataFrame): DataFrame = {
-    // LAZY cut: the first round's action below materializes it once;
-    // every later round reads the persisted blocks.
+    // Lazy cut: the shuffle stages of `pairs` run here; the first round's
+    // action computes and stores the blocks every later round reads.
     val edges = Checkpoints.cut(pairs
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))),
       eager = false)
@@ -428,8 +428,10 @@ object Dedup {
     var prevSum: Option[Long] = None
     var converged = false
     while (!converged) {
-      // ONE round per action, LAZY checkpoint: the labelSum action right
-      // below materializes it, so each round schedules one job chain.
+      // ONE round per action, lazy checkpoint: the round's shuffle stages
+      // run when the cut is taken, and the labelSum action right below
+      // runs its final stage and stores the blocks — no separate
+      // materialization job per round.
       // (r18 measured and REJECTED two-rounds-per-action here: it halves
       // the driver actions but executes up to two extra no-op rounds
       // past the fixpoint plus a duplicated inner agg pass — a paired

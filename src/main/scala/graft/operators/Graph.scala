@@ -196,8 +196,9 @@ object Graph {
       val reached = edges.join(frontier, edges("doc_a") === frontier("doc_id"))
         .select(col("doc_b").as("doc_id"), lit(r).as("d"),
                 lit(null).cast("int").as("old"))
-      // LAZY: both consumers (next round's visited side + frontier) run
-      // inside the next single action, which materializes the cut once
+      // Lazy cut: its shuffle stage runs here; its final aggregate runs
+      // once, in the first job that reads it (the next round's cut), and
+      // both consumers (visited side + frontier) read those blocks
       val merged = Checkpoints.cut(
         dist.select(col("doc_id"), col("dist").as("d"), col("dist").as("old"))
           .union(reached)
@@ -272,8 +273,9 @@ object Graph {
       val relax = edges.join(frontier, edges("doc_a") === frontier("doc_id"))
         .select(col("doc_b").as("doc_id"), (col("cost") + col("w")).as("c"),
                 lit(null).cast("long").as("old"))
-      // LAZY: both consumers (next round's settled side + frontier) run
-      // inside the next single action, which materializes the cut once
+      // Lazy cut: its shuffle stage runs here; its final aggregate runs
+      // once, in the first job that reads it (the next round's cut), and
+      // both consumers (settled side + frontier) read those blocks
       val merged = Checkpoints.cut(
         dist.select(col("doc_id"), col("cost").as("c"), col("cost").as("old"))
           .union(relax)
@@ -416,11 +418,12 @@ object Graph {
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
     var alive = edges.select(col("doc_a").as("doc_id")).distinct()
     for (_ <- 1 to KcoreRounds) {
-      // LAZY cut (r18): the peel's two consumers of the alive set (both
-      // endpoint semi-joins) run inside the NEXT peel's single action, so
-      // the lazy checkpoint materializes once on first compute and is
-      // reused — one materialization job per peel saved. Measured r17
-      // (lazyCuts A/B, this query): −11% sf0.1 / −5% sf1.
+      // Lazy cut (r18): the peel's join and partial degree count run as
+      // shuffle stages when the cut is taken; its final aggregate runs
+      // once, in the first job that reads it (the next peel's cut, whose
+      // two endpoint semi-joins both read the blocks) — one
+      // materialization job per peel saved. Measured r17 (lazyCuts A/B,
+      // this query): −11% sf0.1 / −5% sf1.
       val deg = Checkpoints.cut(edges
         .join(alive.select(col("doc_id").as("doc_a")), "doc_a")
         .join(alive.select(col("doc_id").as("doc_b")), "doc_b")
@@ -740,11 +743,12 @@ object Graph {
     // hub0 = 1 unit per user
     var hub = e.select(col("u")).distinct().withColumn("hub", lit(1L))
     for (_ <- 1 to HitsRounds) {
-      // LAZY cuts (r18): each raw-sum table's two consumers (values +
-      // normalizing total) run inside ONE downstream action, so the lazy
-      // checkpoint is materialized once on first compute and reused —
-      // no separate materialization job per half-round. Measured r17
-      // (lazyCuts A/B, this query): −17% sf0.1 / −12% sf1.
+      // Lazy cuts (r18): each raw-sum table's join and partial sum run as
+      // shuffle stages when its cut is taken; the final aggregate runs
+      // once, in the first job that reads it, and both consumers (values
+      // + normalizing total) read those blocks — no separate
+      // materialization job per half-round. Measured r17 (lazyCuts A/B,
+      // this query): −17% sf0.1 / −12% sf1.
       val ar = Checkpoints.cut(e.join(hub, "u")
         .groupBy(col("i")).agg(sum(col("hub") * col("w")).as("s")),
         eager = false)

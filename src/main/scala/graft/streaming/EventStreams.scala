@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /**
@@ -158,14 +158,14 @@ object EventStreams {
 
   private def cents(v: Double): Long = math.round(v * 100)
 
-  /** THE state transition, shared by both stateful APIs: fold a
-    * micro-batch's events (sorted by event time) into the open session,
-    * returning the sessions closed by >gap jumps and the new open tail. */
-  private def foldSessions(userId: Long, open0: Option[Open],
-                           evs: Iterator[Ev]): (Seq[SessionOut], Option[Open]) = {
+  /** The state transition: fold a micro-batch's events (sorted by event
+    * time) into the user's open session, emitting the sessions closed by
+    * >gap jumps and keeping the new open tail in state. */
+  private def sessionStep(userId: Long, evs: Iterator[Ev],
+                          state: GroupState[Open]): Iterator[SessionOut] = {
     val sorted = evs.toIndexedSeq.sortBy(e => (e.ts_us, e.event_id))
     val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-    var open = open0
+    var open = state.getOption
     for (e <- sorted) {
       open = open match {
         case Some(o) if e.ts_us - o.last_us > GapUs =>
@@ -177,15 +177,8 @@ object EventStreams {
           Some(Open(e.ts_us, e.ts_us, 1, cents(e.value)))
       }
     }
-    (out.toSeq, open)
-  }
-
-  /** [[foldSessions]] plumbed into the GroupState API. */
-  private def sessionStep(userId: Long, evs: Iterator[Ev],
-                          state: GroupState[Open]): Iterator[SessionOut] = {
-    val (closed, open) = foldSessions(userId, state.getOption, evs)
     open.foreach(state.update)
-    closed.iterator
+    out.iterator
   }
 
   /**
@@ -209,43 +202,6 @@ object EventStreams {
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(sessionStep)
-  }
-
-  /**
-   * The same sessionizer on the `transformWithState` arbitrary-state API
-   * (the successor to flatMapGroupsWithState: named state variables via a
-   * [[StatefulProcessor]] handle instead of one opaque GroupState; adds
-   * composable value/list/map state, TTL, and timers). The state
-   * transition is the shared [[sessionStep]] logic re-expressed against a
-   * ValueState; StreamingSpec holds this path equal to the
-   * flatMapGroupsWithState one across the same micro-batches.
-   */
-  class SessionProcessor extends StatefulProcessor[Long, Ev, SessionOut] {
-    @transient private var open: ValueState[Open] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getValueState[Open](
-        "open", org.apache.spark.sql.Encoders.product[Open], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, evs: Iterator[Ev],
-                                 timers: TimerValues): Iterator[SessionOut] = {
-      val open0 = if (open.exists()) Some(open.get()) else None
-      val (closed, tail) = foldSessions(userId, open0, evs)
-      tail.foreach(open.update)
-      closed.iterator
-    }
-  }
-
-  /** [[sessionizeStateful]] on the transformWithState API. */
-  def sessionizeTws(events: DataFrame): Dataset[SessionOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("user_id"), col("event_id"),
-              unix_micros(col("ts")).as("ts_us"), col("value"))
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor, TimeMode.None(), OutputMode.Append())
   }
 
   // ------------------------------------------- streaming LSH near-dup

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
  * checksummed `LocalFileSystem`, so every offset-log / commit-log /
  * state-delta write pays a CRC32 shadow file (open + compute + write +
  * rename ×2) — pure overhead when the checkpoint's durability story is
- * "deleted as soon as the sink is drained" ([[StreamQueries.scratchDir]]).
+ * "deleted as soon as the sink is drained" (StreamQueries' RAM scratch).
  * Binding the same public rename-based manager to `RawLocalFileSystem`
  * keeps the atomic temp-file + rename commit protocol (the part the
  * exactly-once claim rests on) and drops only the checksum mirror.

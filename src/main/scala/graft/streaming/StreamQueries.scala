@@ -34,21 +34,6 @@ object StreamQueries {
     f.delete()
   }
 
-  /** Scratch root for staging dirs and per-run checkpoints: a RAM-backed
-    * tmpfs when the host has one (`/dev/shm`), else the JVM temp dir.
-    * The checkpoint content is per-run throwaway (deleted as soon as the
-    * sink is drained), so its durability is a harness non-goal — a real
-    * deployment points `checkpointLocation` at HDFS/object storage and
-    * sizes that choice to its recovery SLA, not to micro-batch latency.
-    * On local disk the state-store delta commits + offset/commit log
-    * fsyncs dominate small-trigger cost; tmpfs removes exactly that. */
-  private def scratchDir(prefix: String): File = {
-    val shm = new File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite)
-      Files.createTempDirectory(shm.toPath, prefix).toFile
-    else Files.createTempDirectory(prefix).toFile
-  }
-
   /** Staged micro-batch dirs, keyed by (events dir, chunk count): staging
     * is a deterministic function of the source table, so one session
     * stages each corpus ONCE and every later stream run (Bench reps, the
@@ -84,7 +69,7 @@ object StreamQueries {
     * jobs and a localCheckpoint of the whole ranked corpus). */
   private def stageFiles(ranked: org.apache.spark.sql.DataFrame,
                          chunks: Int): File = {
-    val tmp = scratchDir("graft_stream_q")
+    val tmp = graft.Sessions.ramTempDir("graft_stream_q")
     val stage = new File(tmp, "_stage")
     ranked.repartition(chunks, col("mb"))
       .write.partitionBy("mb").parquet(stage.toString)
@@ -199,7 +184,12 @@ object StreamQueries {
                               needsNoDataBatch: Boolean,
                               read: (SparkSession, String) => DataFrame =
                                 EventStreams.readEventsStream): DataFrame = {
-    val ckpt = scratchDir("graft_stream_ckpt")
+    // per-run throwaway checkpoint (deleted as soon as the sink is
+    // drained), so it goes to RAM scratch: on local disk the state-store
+    // delta commits and offset/commit log fsyncs dominate small-trigger
+    // cost. A real deployment points `checkpointLocation` at durable
+    // storage sized to its recovery SLA.
+    val ckpt = graft.Sessions.ramTempDir("graft_stream_ckpt")
     val name = s"graft_stream_${runId.incrementAndGet()}"
     // the partition count and the no-data-batch policy are read at query
     // START (the stream clones the session conf; each run's checkpoint

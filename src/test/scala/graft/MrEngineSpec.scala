@@ -36,6 +36,11 @@ class MrEngineSpec extends AnyFunSuite {
       val input = corpus(seed = 42, nDocs = 30)
       val expected = MrJob.runSequential(app, input).sorted
       assert(runSpark(app, input).sorted == expected)
+      for (seed <- Seq(77, 99); n <- Seq(1, 3)) {
+        val in = corpus(seed, nDocs = 25)
+        assert(runSpark(app, in, n).sorted == MrJob.runSequential(app, in).sorted,
+               s"seed=$seed nReduce=$n")
+      }
     }
   }
 
@@ -84,8 +89,8 @@ class MrEngineSpec extends AnyFunSuite {
       texts.foreach { case (n, s) =>
         java.nio.file.Files.writeString(new java.io.File(tmp, n).toPath, s)
       }
-      val result = MrJob.runFiles(spark, "wc",
-        texts.keys.map(n => new java.io.File(tmp, n).getPath).toSeq)
+      val paths = texts.keys.map(n => new java.io.File(tmp, n).getPath).toSeq
+      val result = MrJob.run(MrJob.wholeFileInput(spark, paths), MrApps.load("wc"))
       val outDir = new java.io.File(tmp, "out").getPath
       MrJob.writeText(result, outDir)
       // `sort mr-out* | grep .` ≙ readText (Makefile:33-34)
@@ -96,36 +101,6 @@ class MrEngineSpec extends AnyFunSuite {
         if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
       }
       rm(tmp)
-    }
-  }
-
-  test("RDD-primitive pipeline (repartitionAndSortWithinPartitions) == Dataset engine == oracle") {
-    import spark.implicits._
-    for (appName <- Seq("wc", "indexer", "sorted_concat"); n <- Seq(1, 3)) {
-      val app = MrApps.load(appName)
-      val input = corpus(seed = 77, nDocs = 25)
-      val ds = spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
-      val viaRdd = MrJob.runRdd(ds, app, n).collect().toSeq
-      val viaDataset = MrJob.run(ds, app, n).collect().toSeq
-      assert(viaRdd == viaDataset, s"$appName nReduce=$n")
-      assert(viaRdd.map(kv => (kv.key, kv.value)).sorted ==
-             MrJob.runSequential(app, input).sorted, s"$appName nReduce=$n")
-    }
-  }
-
-  test("native HolisticReduce aggregate == declarative collect_list twin == oracle") {
-    // The engine hot path (TypedImperativeAggregate) and the builtins-only
-    // formulation must be indistinguishable for every app and any nReduce.
-    import spark.implicits._
-    for (appName <- Seq("wc", "indexer", "sorted_concat"); n <- Seq(1, 3)) {
-      val app = MrApps.load(appName)
-      val input = corpus(seed = 99, nDocs = 25)
-      val ds = spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
-      val native = MrJob.run(ds, app, n).collect().toSeq
-      val declarative = MrJob.runDeclarative(ds, app, n).collect().toSeq
-      val oracle = MrJob.runSequential(app, input).sorted
-      assert(native == declarative, s"$appName nReduce=$n")
-      assert(native.map(kv => (kv.key, kv.value)).sorted == oracle, s"$appName nReduce=$n")
     }
   }
 
@@ -208,8 +183,8 @@ class MrEngineSpec extends AnyFunSuite {
     } finally saved.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
   }
 
-  test("value order is UTF-8 byte order on every path (run, declarative, RDD, sequential)") {
-    // Rust sorts `String`s by bytes, and so does Spark's sort_array; Scala's
+  test("value order is UTF-8 byte order on run and the sequential oracle") {
+    // Rust sorts `String`s by bytes, and so does HolisticReduce; Scala's
     // default String order (UTF-16 code units) would put the surrogate pair
     // of U+1F600 before U+FFFD.
     import spark.implicits._
@@ -226,8 +201,6 @@ class MrEngineSpec extends AnyFunSuite {
       r.collect().map(kv => (kv.key, kv.value)).toSeq
     assert(MrJob.runSequential(probe, input) == expected)
     assert(pairs(MrJob.run(ds, probe, 2)) == expected)
-    assert(pairs(MrJob.runDeclarative(ds, probe, 2)) == expected)
-    assert(pairs(MrJob.runRdd(ds, probe, 2)) == expected)
   }
 
   test("graft_mr_reduce is callable from SQL (extensions-equivalent registration)") {

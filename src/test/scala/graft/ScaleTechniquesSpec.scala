@@ -16,8 +16,11 @@ class ScaleTechniquesSpec extends AnyFunSuite {
       .select(col("o_orderkey"), col("o_totalprice"))
     val lineitem = graft.operators.Tables.t(spark, TestSpark.Sf0001, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"))
-    graft.sources.Bucketed.writeBucketed(orders, "orders_b", "o_orderkey", 8)
-    graft.sources.Bucketed.writeBucketed(lineitem, "lineitem_b", "l_orderkey", 8)
+    // both sides bucketed and bucket-sorted on the join key
+    orders.write.mode("overwrite").format("parquet")
+      .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable("orders_b")
+    lineitem.write.mode("overwrite").format("parquet")
+      .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable("lineitem_b")
     try {
       val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ

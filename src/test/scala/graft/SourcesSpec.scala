@@ -52,142 +52,6 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back == direct)
   }
 
-  test("DSv2 kv source reads the engine sink as a (key, value) table, one partition per file") {
-    val result = graft.mr.MrJob.run(
-      graft.mr.MrJob.tableInput(docs, "doc_id", "text"),
-      graft.mr.MrApps.load("wc"), nReduce = 3)
-    val out = s"$dir/wc_kv_dsv2"
-    graft.mr.MrJob.writeText(result, out)
-    val table = spark.read.format(graft.sources.KvTextSource.Format).load(out)
-    assert(table.schema.fieldNames.toSeq == Seq("key", "value"))
-    val got = table.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    val want = result.collect().map(kv => (kv.key, kv.value)).sorted.toSeq
-    assert(got == want)
-    // reference granularity: one input partition per part file
-    val nFiles = new java.io.File(out).listFiles()
-      .count(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    assert(table.rdd.getNumPartitions == nFiles)
-  }
-
-  test("DSv2 kv source resolves Hadoop FileSystem URIs (file: scheme)") {
-    val out = s"$dir/kv_uri"
-    new java.io.File(out).mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$out/part-0"), "x 1\ny 2\n")
-    val got = spark.read.format(graft.sources.KvTextSource.Format)
-      .load(s"file://$out") // explicit scheme → Hadoop FS resolution path
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(got == Seq(("x", "1"), ("y", "2")))
-  }
-
-  test("DSv2 kv source splits a large single file into line-aligned partitions") {
-    val out = s"$dir/kv_split"
-    new java.io.File(out).mkdirs()
-    // one file, deliberately "giant" relative to the split size; varied
-    // line lengths so split boundaries land mid-line
-    val lines = (0 until 5000).map(i => s"key$i ${"v" * (i % 37 + 1)}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$out/big-file"), lines.mkString("\n") + "\n")
-    val whole = spark.read.format(graft.sources.KvTextSource.Format).load(out)
-    val split = spark.read.format(graft.sources.KvTextSource.Format)
-      .option(graft.sources.KvTextSource.SplitBytesOption, "4096")
-      .load(out)
-    assert(whole.rdd.getNumPartitions == 1)
-    assert(split.rdd.getNumPartitions > 10,
-           s"expected many splits, got ${split.rdd.getNumPartitions}")
-    // no record lost or duplicated across split boundaries
-    def canonKv(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(canonKv(split) == canonKv(whole))
-    assert(canonKv(split).size == 5000)
-  }
-
-  test("DSv2 kv split protocol: no loss or dup over random corpora and split sizes") {
-    // property-style sweep of the TextInputFormat boundary protocol:
-    // random line lengths (including lines LONGER than the split, which
-    // span several splits and must be read by exactly the split they
-    // start in), blank lines, and a coin-flip trailing newline
-    val rnd = new scala.util.Random(17)
-    for (trial <- 1 to 8) {
-      val out = s"$dir/kv_prop_$trial"
-      new java.io.File(out).mkdirs()
-      val nLines = 1 + rnd.nextInt(120)
-      val lines = (0 until nLines).map { i =>
-        if (rnd.nextInt(10) == 0) "" // blank line (dropped by the parse)
-        else s"k${trial}_$i " + ("v" * (1 + rnd.nextInt(200)))
-      }
-      val body = lines.mkString("\n") + (if (rnd.nextBoolean()) "\n" else "")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$out/f"), body)
-      val whole = spark.read.format(graft.sources.KvTextSource.Format).load(out)
-        .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-      // 50 < the max line length (some lines span several splits and
-      // must be read by exactly the split they start in)
-      for (split <- Seq(50, 333, 4096)) {
-        val got = spark.read.format(graft.sources.KvTextSource.Format)
-          .option(graft.sources.KvTextSource.SplitBytesOption, split.toString)
-          .load(out)
-          .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-        assert(got == whole,
-          s"trial $trial split=$split: ${got.size} records vs ${whole.size}")
-      }
-    }
-  }
-
-  test("DSv2 kv WRITE commits via temp + rename (E8 protocol), round-trips exactly") {
-    import org.apache.spark.sql.functions.col
-    val out = s"$dir/kv_write"
-    val kv = docs.selectExpr("cast(doc_id as string) as key", "lang as value")
-    kv.write.format(graft.sources.KvTextSource.Format).mode("append").save(out)
-    // all temp files renamed away; visible files are the finals (the
-    // local ChecksumFileSystem's .crc sidecars are dotfiles the reader
-    // skips — same class as _SUCCESS markers)
-    val leftover = new java.io.File(out).listFiles().map(_.getName)
-    assert(!leftover.exists(_.contains(".tmp")), leftover.toSeq)
-    val visible = leftover.filterNot(_.startsWith("."))
-    assert(visible.nonEmpty && visible.forall(_.startsWith("part-")), leftover.toSeq)
-    val back = spark.read.format(graft.sources.KvTextSource.Format).load(out)
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    val want = kv.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    assert(back == want)
-  }
-
-  test("DSv2 kv write: failed first attempts leave no dupes and no temp residue") {
-    import spark.implicits._
-    val out = s"$dir/kv_write_flaky"
-    val kv = spark.range(0, 200, 1, 6)
-      .selectExpr("cast(id as string) as key", "'v' as value")
-      .as[(String, String)]
-      .mapPartitions { it =>
-        val tc = org.apache.spark.TaskContext.get()
-        if (tc.partitionId() % 2 == 0 && tc.attemptNumber() == 0)
-          throw new RuntimeException(
-            s"injected write-task failure: partition ${tc.partitionId()}")
-        it
-      }.toDF("key", "value")
-    kv.write.format(graft.sources.KvTextSource.Format).mode("append").save(out)
-    val files = new java.io.File(out).listFiles().map(_.getName)
-    assert(!files.exists(_.contains(".tmp")),
-      s"failed attempts must not leave temp files: ${files.toSeq}")
-    assert(files.filterNot(_.startsWith(".")).forall(_.startsWith("part-")),
-      s"only committed part files may be visible: ${files.toSeq}")
-    val back = spark.read.format(graft.sources.KvTextSource.Format).load(out)
-      .collect().map(_.getString(0).toLong).sorted.toSeq
-    assert(back == (0L until 200L), "committed output must be exactly-once")
-  }
-
-  test("DSv2 kv source reproduces the reference's two-token truncation parse") {
-    val out = s"$dir/kv_trunc"
-    new java.io.File(out).mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$out/part-0"),
-      "a 1\nb two words dropped\n\nc\n  d  4  \n")
-    val got = spark.read.format(graft.sources.KvTextSource.Format).load(out)
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
-    // whitespace-split, first two tokens only (worker.rs:156-162); blank
-    // lines dropped; a key with no value reads as ""
-    assert(got == Seq(("a", "1"), ("b", "two"), ("c", ""), ("d", "4")))
-  }
-
   test("schema evolution: mergeSchema unions generations, old files backfill added columns with null") {
     // the lakehouse reality at 100 TB: a table written over months gains
     // columns; readers must see the union schema without rewriting history

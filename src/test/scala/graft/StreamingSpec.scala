@@ -183,29 +183,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
            oracleClosedSessions.sortBy(s => (s.user_id, s.start_us)))
   }
 
-  test("transformWithState sessionizer == flatMapGroupsWithState == oracle (streamed)") {
-    // transformWithState needs multi-column-family state -> RocksDB
-    // provider; conf is read at query START, so a set/run/restore scope
-    // is safe (unlike execution-time confs)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val streamed =
-      try runToMemory(
-        EventStreams.sessionizeTws(EventStreams.readEventsStream(spark, srcDir)).toDF(),
-        "sessions_tws", "append")
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    val got = streamed.collect().map(r =>
-      SessionOut(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
-    assert(got.nonEmpty)
-    assert(got.sortBy(s => (s.user_id, s.start_us)) ==
-           oracleClosedSessions.sortBy(s => (s.user_id, s.start_us)))
-  }
-
   test("StreamQueries.streamSessionize: self-staged micro-batch harness == oracle") {
     // the oracle-gated query surface stages its own micro-batches (ntile
     // over global event-time order, no driver collect) — this pins that

@@ -3,6 +3,8 @@ package graft.operators
 import java.nio.file.Files
 
 import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.GraftShims
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -49,6 +51,40 @@ class CheckpointsSpec extends AnyFunSuite {
     // this is what an executor loss does to localCheckpoint on a cluster
     val ex = intercept[SparkException](cut.count())
     assert(ex.getMessage.toLowerCase.contains("checkpoint"))
+  }
+
+  test("a lazy cut runs its shuffle stage at cut time and its result stage at the first action") {
+    // localCheckpoint(eager = false) builds its RDD with executedPlan.execute(),
+    // and an adaptive plan materializes every shuffle stage to do that
+    import org.apache.spark.sql.functions.col
+    val sc = spark.sparkContext
+    val jobs, mapTasks, resultTasks = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        e.stageIds.foreach(stages.add)
+      }
+      // only tasks of jobs started here: the previous test's failed job
+      // can still post its killed tasks' ends
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) {
+          if (e.taskType == "ResultTask") resultTasks.incrementAndGet()
+          else mapTasks.incrementAndGet()
+        }
+    }
+    GraftShims.drainListeners(spark)
+    sc.addSparkListener(l)
+    try {
+      val oneShuffle = spark.range(0, 1000, 1, 4).groupBy((col("id") % 10).as("k")).count()
+      val cut = Checkpoints.cut(oneShuffle, eager = false)
+      GraftShims.drainListeners(spark)
+      assert(jobs.get == 1 && mapTasks.get == 4, "the shuffle-map job runs when the cut is taken")
+      assert(resultTasks.get == 0, "no result stage runs before an action")
+      assert(cut.count() == 10L)
+      GraftShims.drainListeners(spark)
+      assert(jobs.get > 1 && resultTasks.get > 0)
+    } finally sc.removeSparkListener(l)
   }
 
   test("reliable mode: the same loss is survivable — data re-read from the checkpoint dir") {
