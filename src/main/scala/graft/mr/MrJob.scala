@@ -1,7 +1,11 @@
 package graft.mr
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /**
  * The engine core: the reference's single physical pipeline
@@ -10,7 +14,9 @@ import org.apache.spark.sql.functions._
  *
  * Stage mapping (reference cite -> Spark primitive):
  *  - E1 whole-file scan (`sequential/src/main.rs:22-28`, `worker.rs:112-117`)
- *      -> `spark.read.option("wholetext", true).text(paths)` + `input_file_name()`
+ *      -> a `wholetext` text relation + `input_file_name()`, whose paths
+ *         are stat-ed on the driver (the coordinator's own file list,
+ *         `coordinator.rs:55-64`) instead of by a Spark listing job
  *  - E2 flat-map UDTF (`main.rs:24-29`, `worker.rs:119`)
  *      -> `Dataset.flatMap(app.map)`
  *  - E3 hash shuffle by key to nReduce partitions (`worker.rs:121-135`)
@@ -30,11 +36,16 @@ import org.apache.spark.sql.functions._
  *  - E8 atomic text sink (`worker.rs:178-190`) -> `df.write.text` under
  *      Spark's FileOutputCommitter (temp + rename protocol, same
  *      exactly-once-visibility guarantee).
+ *  - E9 the harness's global merge (`sort mr-out* | grep .`,
+ *      `Makefile:33-34`) -> the sink's own `orderBy(key)`, behind a
+ *      round-robin exchange, so the range sampler reads the reduce's
+ *      shuffle output instead of running the reduce again ([[writeText]]).
  *  - E10 scheduling/fault tolerance (`coordinator.rs`) is inherited from
  *      Spark's DAGScheduler/OutputCommitCoordinator — nothing to build.
  *
  * Scale notes (100 TB target): the shuffle is a single hash exchange on the
  * intermediate key — exactly one wide dependency, same as the reference.
+ * The sink's global sort shuffles only the reduce output, one row per key.
  * The holistic reduce holds per-key memory O(values-per-key), which is the
  * reference's own behavior (`worker.rs:150-176` materializes everything);
  * for skewed keys prefer the decomposable DataFrame twins, which Spark
@@ -81,12 +92,36 @@ object MrJob {
    * E1: whole-file scan — each input file becomes exactly one
    * `(path, contents)` record, like `read_to_string` per `MapTask` file
    * (`worker.rs:112-117`; one file per map task, `coordinator.rs:55-64`).
+   *
+   * The same relation `spark.read.option("wholetext", true).text(paths)`
+   * builds, but its paths are globbed and stat-ed here on the driver, and
+   * the statuses of plain files seed the index's listing cache. Spark would
+   * list more than 32 paths with a Spark job, one task per path. Directories
+   * miss the cache, so the index lists them as it always does. A path that
+   * matches nothing fails here, as in Spark's reader, with `PATH_NOT_FOUND`.
    */
   def wholeFileInput(spark: SparkSession, paths: Seq[String]): Dataset[KV] = {
     import spark.implicits._
-    spark.read
-      .option("wholetext", "true")
-      .text(paths: _*)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val roots = paths.flatMap { p =>
+      val given = new Path(p)
+      val fs = given.getFileSystem(hadoopConf)
+      val path = fs.makeQualified(given)
+      val found = Option(fs.globStatus(path)).filter(_.nonEmpty).getOrElse(
+        throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> path.toString)))
+      // a glob spells its matches `file:/x` and a listing `file:///x`:
+      // respell them as a listing does, so `input_file_name()` is the
+      // string Spark's reader gives
+      found.foreach(f => f.setPath(fs.makeQualified(Path.getPathWithoutSchemeAndAuthority(f.getPath))))
+      found
+    }
+    val cache = FileStatusCache.getOrCreate(spark)
+    roots.filterNot(_.isDirectory).foreach(f => cache.putLeafFiles(f.getPath, Array(f)))
+    val options = Map("wholetext" -> "true")
+    val index = new InMemoryFileIndex(spark, roots.map(_.getPath), options, None, cache)
+    val relation = HadoopFsRelation(index, index.partitionSchema,
+      new StructType().add("value", StringType), None, new TextFileFormat, options)(spark)
+    spark.baseRelationToDataFrame(relation)
       .select(input_file_name().as("key"), col("value"))
       .as[KV]
   }
@@ -101,9 +136,10 @@ object MrJob {
   // ------------------------------------------------------------------- run
 
   /**
-   * Execute `app` over `input`, returning the final `(key, value)` table,
-   * globally sorted by key — the observable equivalent of the reference's
-   * merged `sort mr-out* | grep .` output (`Makefile:33-34`).
+   * Execute `app` over `input`, returning one `(key, value)` row per key:
+   * the reduce output, hash-partitioned into `nReduce` partitions like the
+   * reference's `mr-out-<j>` files, in no global order. [[writeText]]
+   * commits the globally sorted merge.
    *
    * The reduce stage (E5-E7) runs as the native
    * [[graft.functions.HolisticReduce]] aggregate: one typed imperative
@@ -127,20 +163,30 @@ object MrJob {
       .repartition(nReduce, $"key")
       .groupBy($"key")
       .agg(graft.functions.HolisticReduce(app.reduce _)($"key", $"value").as("value"))
-      .orderBy($"key") // E9: global merge-sort of partition outputs
       .as[KV]
   }
 
   // ------------------------------------------------------------------ sink
 
   /**
-   * E8: line-text sink, `"{k} {v}"` per row (`worker.rs:180-183`). Spark's
-   * FileOutputCommitter supplies the temp-write + atomic-rename protocol the
-   * reference hand-rolls (`worker.rs:185-189`): output is never visible
-   * partially. One `part-*` file per partition ≙ `mr-out-<j>`.
+   * E8 + E9: commits the globally sorted merge of `result` as line text,
+   * `"{k} {v}"` per row (`worker.rs:180-183`): the `part-*` files, read in
+   * file-name order, are sorted by key, as the reference's
+   * `sort mr-out* | grep .` is (`Makefile:33-34`). Spark's
+   * FileOutputCommitter supplies the temp-write + atomic-rename protocol
+   * the reference hand-rolls (`worker.rs:185-189`): output is never
+   * visible partially.
+   *
+   * The round-robin exchange stores `result` as shuffle files before the
+   * sort, so the range partitioner's sampling job reads those files: the
+   * reduce under `result` runs once, not once for the sample and again for
+   * the sort. The exchange is as wide as the range exchange after it, the
+   * session's shuffle-partition count.
    */
   def writeText(result: Dataset[KV], outDir: String): Unit =
     result
+      .repartition(result.sparkSession.sessionState.conf.numShufflePartitions)
+      .orderBy(col("key"))
       .select(concat_ws(" ", col("key"), col("value")).as("value"))
       .write
       .mode("overwrite")

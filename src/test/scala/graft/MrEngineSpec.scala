@@ -1,7 +1,19 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.{AnalysisException, GraftShims}
+import org.apache.spark.sql.functions.{col, input_file_name}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.mr.{MrApp, MrApps, MrJob}
+
+/** Calls of [[MrEngineSpec]]'s counting app's reduce. Local mode runs the
+  * tasks in this JVM, so a static counter sees every call. */
+object ReduceCalls {
+  val n = new AtomicInteger
+}
 
 /**
  * Differential tests of the MR engine against the sequential oracle —
@@ -81,26 +93,133 @@ class MrEngineSpec extends AnyFunSuite {
     }
   }
 
+  private def withTempDir[A](prefix: String)(body: File => A): A = {
+    val tmp = Files.createTempDirectory(prefix).toFile
+    def rm(f: File): Unit = {
+      if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
+    }
+    try body(tmp) finally rm(tmp)
+  }
+
+  private def write(dir: File, name: String, text: String): String = {
+    val f = new File(dir, name)
+    Files.writeString(f.toPath, text)
+    f.getPath
+  }
+
   test("whole-file scan + text sink round-trips through the reference's merge normalization") {
-    val tmp = java.nio.file.Files.createTempDirectory("mr_e2e").toFile
-    try {
-      val texts = Map("f1.txt" -> "apple banana apple", "f2.txt" -> "banana Cherry",
-                      "f3.txt" -> "apple")
-      texts.foreach { case (n, s) =>
-        java.nio.file.Files.writeString(new java.io.File(tmp, n).toPath, s)
-      }
-      val paths = texts.keys.map(n => new java.io.File(tmp, n).getPath).toSeq
+    withTempDir("mr_e2e") { tmp =>
+      val paths = Seq("f1.txt" -> "apple banana apple", "f2.txt" -> "banana Cherry",
+                      "f3.txt" -> "apple").map { case (n, s) => write(tmp, n, s) }
       val result = MrJob.run(MrJob.wholeFileInput(spark, paths), MrApps.load("wc"))
-      val outDir = new java.io.File(tmp, "out").getPath
+      val outDir = new File(tmp, "out").getPath
       MrJob.writeText(result, outDir)
       // `sort mr-out* | grep .` ≙ readText (Makefile:33-34)
       val merged = MrJob.readText(spark, outDir).collect().toSeq
       assert(merged == Seq("Cherry 1", "apple 3", "banana 2"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm); f.delete()
+    }
+  }
+
+  /** The committed lines of a text-sink directory: its `part-*` files
+    * read in file-name order, as the benchmark's global-order check
+    * reads them, with no re-sort. */
+  private def partLines(dir: String): Seq[String] =
+    new File(dir).listFiles.filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .toSeq.flatMap(f => Files.readAllLines(f.toPath).toArray(Array.empty[String]))
+      .filter(_.nonEmpty)
+
+  test("writeText commits the globally sorted merge: part files in name order are key-sorted") {
+    import spark.implicits._
+    val app = MrApps.load("indexer")
+    withTempDir("mr_sink_order") { tmp =>
+      for ((input, n) <- Seq((corpus(seed = 21, nDocs = 40), 1), (corpus(seed = 21, nDocs = 40), 3),
+                             (Seq.empty[(String, String)], 3))) {
+        val out = new File(tmp, s"out_${input.size}_$n").getPath
+        val ds = spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
+        MrJob.writeText(MrJob.run(ds, app, n), out)
+        // the oracle's output is sorted by key, so equal lines are in order
+        val expected = MrJob.runSequential(app, input).map { case (k, v) => s"$k $v" }
+        assert(partLines(out) == expected, s"nReduce=$n")
       }
-      rm(tmp)
+    }
+  }
+
+  test("a committed MR job runs each key's reduce exactly once (nReduce 1 and 3)") {
+    // the sink's sort must read the reduce output, not recompute it: a
+    // range sampler over the aggregate itself would reduce every key twice
+    import spark.implicits._
+    val counting = new MrApp {
+      val name = "reduce_counter"
+      def map(k: String, v: String): Seq[(String, String)] =
+        v.split("[^A-Za-z]+").toSeq.filter(_.nonEmpty).map(w => (w, "1"))
+      def reduce(k: String, vs: Seq[String]): String = {
+        ReduceCalls.n.incrementAndGet()
+        vs.size.toString
+      }
+    }
+    val input = corpus(seed = 3, nDocs = 30)
+    val keys = MrJob.runSequential(counting, input).size
+    val ds = spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
+    withTempDir("mr_reduce_once") { tmp =>
+      for (n <- Seq(1, 3)) {
+        ReduceCalls.n.set(0)
+        MrJob.writeText(MrJob.run(ds, counting, n), new File(tmp, s"out$n").getPath)
+        assert(ReduceCalls.n.get == keys, s"nReduce=$n")
+      }
+    }
+  }
+
+  /** Runs `body` with its jobs tagged: its result, and how many jobs it ran. */
+  private def withJobs[A](tag: String)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    sc.addJobTag(tag)
+    val result = try body finally sc.removeJobTag(tag)
+    GraftShims.drainListeners(spark)
+    (result, sc.statusTracker.getJobIdsForTag(tag).length)
+  }
+
+  /** What Spark's own whole-text reader makes of `paths`. */
+  private def readWholeText(paths: Seq[String]) =
+    spark.read.option("wholetext", "true").text(paths: _*)
+      .select(input_file_name().as("key"), col("value"))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+    df.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+
+  test("wholeFileInput lists 40 files on the driver and reads what spark.read.text reads") {
+    withTempDir("mr_e1") { tmp =>
+      val paths = (0 until 40).map(i => write(tmp, f"f$i%02d.txt", s"doc $i\nline two"))
+      val (input, jobs) = withJobs("mr_e1_build")(MrJob.wholeFileInput(spark, paths))
+      assert(jobs == 0)
+      // control: over the 32-path threshold, Spark's reader lists with a job
+      assert(withJobs("mr_e1_read")(readWholeText(paths))._2 > 0)
+      val got = rows(input.toDF())
+      assert(got.size == 40 && got == rows(readWholeText(paths)))
+    }
+  }
+
+  test("wholeFileInput: directories, globs and empty files as spark.read.text; missing paths fail") {
+    withTempDir("mr_e1_paths") { tmp =>
+      val sub = new File(tmp, "sub")
+      sub.mkdir()
+      write(sub, "a.txt", "alpha")
+      write(sub, "b.md", "beta")
+      write(tmp, "c.txt", "gamma")
+      val empty = write(tmp, "empty.txt", "")
+      // an empty file is no record, in both readers
+      for ((paths, values) <- Seq(Seq(sub.getPath) -> Set("alpha", "beta"),
+                                  Seq(s"$tmp/*.txt") -> Set("gamma"),
+                                  Seq(empty) -> Set.empty[String],
+                                  Seq(sub.getPath, s"$tmp/c*", empty) -> Set("alpha", "beta", "gamma"))) {
+        val got = rows(MrJob.wholeFileInput(spark, paths).toDF())
+        assert(got == rows(readWholeText(paths)), paths)
+        assert(got.map(_._2).toSet == values, paths)
+      }
+      for (missing <- Seq(s"$tmp/nope.txt", s"$tmp/nope*")) {
+        val e = intercept[AnalysisException](MrJob.wholeFileInput(spark, Seq(empty, missing)))
+        assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+        assert(e.getMessage == intercept[AnalysisException](readWholeText(Seq(missing))).getMessage)
+      }
     }
   }
 

@@ -42,6 +42,9 @@ class PlanBudgetSpec extends AnyFunSuite {
       "q6_forecast_revenue" -> 1,
       "q3_shipping_priority" -> 1, // dims broadcast; one fact agg exchange
       "dedup_exact"          -> 1,
+      "mr_wordcount"         -> 1, // the E3 key shuffle; the global sort is
+      "mr_inverted_index"    -> 1, // the sink's (MrJob.writeText), not the
+      "mr_sorted_concat"     -> 1, // query's
       "quality_c4_rules"     -> 1, // explode + single doc-keyed combine
       "text_winnowing"       -> 1, // doc-partitioned window only
       "text_entropy"         -> 2, // (doc,char) combine + doc rollup
