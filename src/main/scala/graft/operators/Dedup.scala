@@ -13,10 +13,10 @@ import Tables._
  * candidate generation is always "shuffle on a blocking key, compare only
  * within blocks":
  *  - exact: one hash aggregate on md5(normalized text);
- *  - MinHash LSH: shingle explode → 16 minhashes (partial-agg'd min) →
- *    band signatures → equi-join on (band, signature). At 100 TB the only
- *    big shuffles are the doc-keyed minhash aggregate and the band-keyed
- *    join, both linear in corpus size;
+ *  - MinHash LSH: each document's 16 minhashes and 4 band signatures are
+ *    computed in the map (one fused kernel per row) → bucket on (band,
+ *    signature). At 100 TB the band-keyed exchange is the chain's only
+ *    corpus-sized shuffle, linear in corpus size;
  *  - SimHash: linear scan + 16-bit-prefix bucketing, occupancy-capped like
  *    the MinHash buckets;
  *  - Jaccard: inverted-index join on shingle (pairs sharing no shingle are
@@ -149,70 +149,27 @@ object Dedup {
   private val NumHashes = 16
   private val RowsPerBand = 4
 
+  /** `(doc_id, keep…, shingles)`: each document's distinct 3-shingles,
+    * for the documents that have one. A document has a 3-shingle iff it
+    * has ≥3 tokens (`wsTokens("")` is one empty token), so the guard
+    * reads the token count. It must not read the signature: a filter on
+    * the signature columns is pushed below their projection and runs
+    * MinHashSigs again for each column it reads. */
+  private def shingled(docs: DataFrame, keep: Column*): DataFrame =
+    docs.filter(size(toks(col("text"))) >= 3)
+      .select((col("doc_id") +: keep) :+
+        shingles3(toks(col("text"))).as("shingles"): _*)
+
   /** Per-document minhash signatures, wide: one row per doc with columns
-    * mh0..mh15. The 16 hash functions are 16 parallel `min` aggregates over
-    * the (doc, shingle-hash) rows — ONE shuffle of the shingle rows (with
-    * map-side partial mins), instead of exploding ×16 through the exchange.
-    * At 100 TB this is the difference between shuffling the corpus'
-    * shingles once vs sixteen times. */
-  private def signaturesWideOf(docs: DataFrame): DataFrame =
-    signaturesWideFromHashed(docs
-      .select(col("doc_id"), toks(col("text")).as("ts"))
-      .select(col("doc_id"), explode(shingles3(col("ts"))).as("shingle"))
-      .select(col("doc_id"), (md5Long(col("shingle")) % M).as("sh")))
-
-  /** The minhash aggregate over an already-hashed shingle table
-    * (doc_id, sh) — split out so [[evalMinhash]] can feed both the LSH
-    * and the Jaccard pipelines from ONE materialized shingle pass. */
-  private def signaturesWideFromHashed(sh: DataFrame): DataFrame = {
-    val mins = (0 until NumHashes).map { i =>
-      min((col("sh") * (2 * i + 1) + (i + 1) * 7919L) % M).as(s"mh$i")
-    }
-    sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-  }
-
-  private def signaturesWide(spark: SparkSession, dir: String): DataFrame =
-    signaturesWideOf(t(spark, dir, "documents"))
-
-  /** Banded signatures computed ROW-LOCALLY — bit-identical to
-    * [[bandedSignaturesOf]] (same md5-derived hash family, same min over
-    * the same shingle multiset: min of a set is insensitive to the
-    * duplicate shingles the aggregate form also folds) but expressed as
-    * array HOFs within the row, no aggregation. This is the form a
-    * STREAMING source composes with: a stateless projection leaves the
-    * plan's stateful-operator slot free for the downstream bucket state
-    * (`flatMapGroupsWithState`), where the groupBy form would claim it.
-    * Scale: per-row work is |shingles| × 16 multiply-mods — embarrassing
-    * parallel, no shuffle at all (the aggregate form shuffles the
-    * shingle rows once). Docs with <3 tokens have no shingles and drop
-    * out, exactly as the aggregate form's explode drops them. */
-  private[graft] def bandedSignaturesRowLocalOf(docs: DataFrame): DataFrame = {
-    // md5 + mod + all 16 mins in ONE native fused pass (r17): the HOF
-    // form — transform(shingles, md5Long % M) then 16
-    // array_min(transform(hs, affine % M)) — ran 17 interpreted lambda
-    // passes per doc (CodegenFallback) with an intermediate array each,
-    // and its `size(hs) > 0` guard re-evaluated the whole md5 pass a
-    // second time (no cross-operator subexpression elimination around
-    // fallback HOFs). MinHashSigs is bit-identical (MinHashSigsSpec)
-    // and codegen-fused. Interleaved A/B (AbConf, this box): 1.85 vs
-    // 2.15 s at sf0.1, 3.71 vs 8.77 s at sf1 — the per-row signature IS
-    // this gate's amortized floor, so the win scales with trigger size.
-    val mh = (0 until NumHashes).map(i => col("mha")(i).as(s"mh$i"))
-    val wide = docs
-      .select(col("doc_id"),
-        graft.functions.MinHashSigs.minHashSigs(
-          shingles3(toks(col("text"))), NumHashes, M).as("mha"))
-      .select(col("doc_id") +: mh: _*)
-    // The no-shingle guard sits BELOW the band explode: any
-    // pre-projection predicate on the signature gets pushed back through
-    // the project and re-evaluates the fused expression per row. A doc
-    // with no shingles has ALL-NULL mins (MinHashSigs contract), so its
-    // band sigs concat_ws to the empty string — while a real sig is 4
-    // comma-joined integers, never empty. `sig != ''` drops exactly the
-    // docs the HOF form's `size(hs) > 0` dropped, evaluated on the 4
-    // generated band rows instead of re-running the signature.
-    bandedSignaturesFromWide(wide).filter(col("sig") =!= lit(""))
-  }
+    * mh0..mh15, over `(doc_id, shingles)`. A signature depends on its
+    * document only, so it is computed in the map: MinHashSigs fuses md5,
+    * mod and all 16 affine mins into one codegen'd pass per row
+    * (bit-identical to the array_min(transform(...)) family,
+    * MinHashSigsSpec), and nothing shuffles. */
+  private def signaturesOf(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"),
+        graft.functions.MinHashSigs.minHashSigs(col("shingles"), NumHashes, M).as("mha"))
+      .select(col("doc_id") +: (0 until NumHashes).map(i => col("mha")(i).as(s"mh$i")): _*)
 
   /** Band signature strings derived row-wise from the wide minhashes (no
     * extra shuffle): band b = "mh(4b),..,mh(4b+3)". */
@@ -221,11 +178,14 @@ object Dedup {
       col(s"mh${b * RowsPerBand + r}").cast("string")): _*)
 
   /** One row per (doc, band) with the band's signature string, for any
-    * corpus with (doc_id, text) — the pipeline entry point that lets
-    * downstream stages (e.g. [[Pipeline.corpusPrep]]) run the minhash
-    * chain on a filtered corpus rather than the raw table. */
-  private def bandedSignaturesOf(docs: DataFrame): DataFrame =
-    bandedSignaturesFromWide(signaturesWideOf(docs))
+    * corpus with (doc_id, text) — the one signature path of the batch LSH
+    * chain (filtered corpora too, e.g. [[Pipeline.corpusPrep]]) and of
+    * the streaming gate ([[graft.streaming.EventStreams
+    * .minhashPairsStateful]]). Row-local: a stateless projection, so a
+    * stream's stateful-operator slot stays free for the bucket state.
+    * Docs with <3 tokens have no shingles and drop out. */
+  private[graft] def bandedSignaturesOf(docs: DataFrame): DataFrame =
+    bandedSignaturesFromWide(signaturesOf(shingled(docs)))
 
   private def bandedSignaturesFromWide(wide: DataFrame): DataFrame = {
     val bandArr = array((0 until NumHashes / RowsPerBand).map(b =>
@@ -655,10 +615,9 @@ object Dedup {
 
   /** Per-document minhash signature table (the reusable artifact a corpus
     * pipeline would persist; also directly checks the minhash math).
-    * Derived row-wise from the wide signature — the minhash aggregate is
-    * the only shuffle. */
+    * Derived row-wise from the wide signature — no shuffle at all. */
   def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    signaturesWide(spark, dir)
+    signaturesOf(shingled(t(spark, dir, "documents")))
       .select(col("doc_id"),
               concat_ws(";", (0 until NumHashes / RowsPerBand).map(bandSig): _*)
                 .as("signature"))
@@ -728,7 +687,10 @@ object Dedup {
     * here and exists for the 100 TB case. Implemented as bucket-grouping
     * (collect the bucket's (doc, simhash) list, explode its i<j pairs)
     * rather than a self-join, so the token-explode + 32-bit-sum signature
-    * pipeline runs ONCE instead of once per join side. */
+    * pipeline runs ONCE instead of once per join side. The i<j explode
+    * stays a nested transform(slice(...)): its elements are (doc_id,
+    * simhash) structs, and the native [[graft.functions.CombinationPairs]]
+    * takes an array<bigint> only. */
   def dedupSimhashPairs(spark: SparkSession, dir: String): DataFrame =
     dedupSimhash(spark, dir)
       .groupBy(col("bucket"))
@@ -1323,25 +1285,21 @@ object Dedup {
     // crossJoined count aggregates re-ran the minhash pipeline and the
     // shingle-pair pipeline twice each (measured 1.7x slower at sf0.1).
     // Both pipelines start from the SAME scan + tokenize + 3-shingle
-    // explode (the heaviest map work in either); compute BOTH hash
-    // columns in one pass over it and cut the compact (3 longs/row)
-    // result, so the corpus is scanned and shingled exactly once for
-    // the whole scorecard instead of once per pipeline. Each side's
-    // hash is bit-identical to its standalone query's, so the eval
-    // scores exactly the gated [[dedupMinhashLsh]]/[[dedupNgramJaccard]]
+    // pass (the heaviest map work in either): cut `(doc_id, lang,
+    // shingles)` once, so the corpus is scanned and shingled exactly
+    // once for the whole scorecard. The LSH side signs the shingle
+    // column in the map; the Jaccard side explodes it and hashes each
+    // (lang, shingle) as [[shinglePairCounts]] does. Each side's hash is
+    // bit-identical to its standalone query's, so the eval scores
+    // exactly the gated [[dedupMinhashLsh]]/[[dedupNgramJaccard]]
     // artifacts.
-    val hashed = Checkpoints.cut(t(spark, dir, "documents")
-      .select(col("doc_id"), col("lang"), toks(col("text")).as("ts"))
-      .select(col("doc_id"), col("lang"),
-              explode(shingles3(col("ts"))).as("shingle"))
-      .select(col("doc_id"),
-              (md5Long(col("shingle")) % M).as("sh"),
-              md5Long(concat_ws("\u0001", col("lang"), col("shingle"))).as("h")))
-    val cand = minhashPairsFromBanded(bandedSignaturesFromWide(
-        signaturesWideFromHashed(hashed.select(col("doc_id"), col("sh")))))
+    val sh = Checkpoints.cut(shingled(t(spark, dir, "documents"), col("lang")))
+    val cand = minhashPairsFromBanded(bandedSignaturesFromWide(signaturesOf(sh)))
       .select(col("doc_a"), col("doc_b"), lit(1L).as("in_cand"))
-    val truth = jaccardPairsFrom(
-        shinglePairCountsFromHashed(hashed.select(col("doc_id"), col("h"))))
+    val truth = jaccardPairsFrom(shinglePairCountsFromHashed(sh
+        .select(col("doc_id"), col("lang"), explode(col("shingles")).as("shingle"))
+        .select(col("doc_id"),
+                md5Long(concat_ws("\u0001", col("lang"), col("shingle"))).as("h"))))
       .select(col("doc_a"), col("doc_b"), lit(1L).as("in_truth"))
     cand.join(truth, Seq("doc_a", "doc_b"), "full_outer")
       .agg(

@@ -889,10 +889,9 @@ object Graph {
     val wedges = e
       .groupBy(col("doc_b").as("mid"))
       .agg(sort_array(collect_list(col("doc_a"))).as("ns"))
-      .select(explode(flatten(transform(col("ns"), (x, i) =>
-        transform(slice(col("ns"), i + 2, size(col("ns"))),
-                  y => struct(x.as("u"), y.as("v")))))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
+      .select(explode(
+        graft.functions.CombinationPairs.combinationPairs(col("ns"))).as("p"))
+      .select(col("p.a").as("u"), col("p.b").as("v"))
     val cn = wedges.join(
         e.filter(col("doc_a") < col("doc_b"))
           .select(col("doc_a").as("u"), col("doc_b").as("v")),

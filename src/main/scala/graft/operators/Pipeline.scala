@@ -28,8 +28,15 @@ object Pipeline {
   /** Minimum document length surviving the quality gate (chars). */
   private val MinChars = 200
 
-  def corpusPrep(spark: SparkSession, dir: String): DataFrame = {
-    val quality = t(spark, dir, "documents").filter(col("n_chars") >= MinChars)
+  /** The prep chain's stage tables, each consuming the previous stage's
+    * survivors: raw `docs` → `quality` gate → `exact`-dedup survivors →
+    * near-dup survivors (`kept`). */
+  private final case class Stages(
+      docs: DataFrame, quality: DataFrame, exact: DataFrame, kept: DataFrame)
+
+  private def stages(spark: SparkSession, dir: String): Stages = {
+    val docs = t(spark, dir, "documents")
+    val quality = docs.filter(col("n_chars") >= MinChars)
     val reps = quality
       .select(col("doc_id"), md5(lower(trim(col("text")))).as("h"))
       .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
@@ -42,13 +49,15 @@ object Pipeline {
     val nonReps = Dedup.componentsOf(Dedup.minhashPairsOf(exact))
       .filter(col("rep_doc_id") =!= col("doc_id"))
       .select(col("doc_id"))
-    val kept = exact.join(nonReps, Seq("doc_id"), "left_anti")
-    kept
+    Stages(docs, quality, exact, exact.join(nonReps, Seq("doc_id"), "left_anti"))
+  }
+
+  def corpusPrep(spark: SparkSession, dir: String): DataFrame =
+    stages(spark, dir).kept
       .select(Sampling.splitCol(col("doc_id")).as("split"),
               col("lang"), col("n_chars"))
       .groupBy(col("split"), col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-  }
 
   /**
    * Per-source STAGE ATTRITION of the prep pipeline [EXT] — where each
@@ -68,18 +77,8 @@ object Pipeline {
    * stage that zeroes a source yields NULL for the next stage's rate.
    */
   def corpusAttrition(spark: SparkSession, dir: String): DataFrame = {
-    val docs = t(spark, dir, "documents")
-    val quality = docs.filter(col("n_chars") >= MinChars)
-    val reps = quality
-      .select(col("doc_id"), md5(lower(trim(col("text")))).as("h"))
-      .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    val exact = Checkpoints.cut(quality.join(reps, Seq("doc_id"), "left_semi"))
-    val nonReps = Dedup.componentsOf(Dedup.minhashPairsOf(exact))
-      .filter(col("rep_doc_id") =!= col("doc_id"))
-      .select(col("doc_id"))
-    val kept = exact.join(nonReps, Seq("doc_id"), "left_anti")
-    def cnt(df: org.apache.spark.sql.DataFrame, as: String) =
+    val Stages(docs, quality, exact, kept) = stages(spark, dir)
+    def cnt(df: DataFrame, as: String) =
       df.groupBy(col("source")).agg(count(lit(1)).as(as))
     cnt(docs, "n_raw")
       .join(cnt(quality, "n_quality"), Seq("source"), "left")
@@ -98,7 +97,9 @@ object Pipeline {
           .as("neardup_removed_ppm"))
   }
 
-  val corpusAttritionSql: String =
+  /** DuckDB twin of [[stages]]: the CTE prefix (leading WITH) ending in
+    * `kept`, shared by both pipeline oracles. */
+  private val stagesCtes: String =
     s"""WITH RECURSIVE quality AS (
        |  SELECT * FROM documents WHERE n_chars >= $MinChars),
        |reps AS (
@@ -111,7 +112,10 @@ object Pipeline {
        |kept AS (
        |  SELECT e.* FROM exact e
        |  WHERE e.doc_id NOT IN
-       |        (SELECT doc_id FROM comp WHERE rep_doc_id <> doc_id)),
+       |        (SELECT doc_id FROM comp WHERE rep_doc_id <> doc_id))""".stripMargin
+
+  val corpusAttritionSql: String =
+    s"""$stagesCtes,
        |r AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_raw
        |      FROM documents GROUP BY 1),
        |qc AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_quality
@@ -138,19 +142,7 @@ object Pipeline {
        |LEFT JOIN fc ON fc.source = r.source""".stripMargin
 
   val corpusPrepSql: String =
-    s"""WITH RECURSIVE quality AS (
-       |  SELECT * FROM documents WHERE n_chars >= $MinChars),
-       |reps AS (
-       |  SELECT MIN(doc_id) AS doc_id
-       |  FROM (SELECT doc_id, md5(lower(trim(text))) AS h FROM quality)
-       |  GROUP BY h),
-       |exact AS (
-       |  SELECT q.* FROM quality q WHERE q.doc_id IN (SELECT doc_id FROM reps)),
-       |${Dedup.componentsCtesFrom("exact")},
-       |kept AS (
-       |  SELECT e.* FROM exact e
-       |  WHERE e.doc_id NOT IN
-       |        (SELECT doc_id FROM comp WHERE rep_doc_id <> doc_id))
+    s"""$stagesCtes
        |SELECT ${Sampling.splitSqlExpr} AS split, lang,
        |  COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
        |FROM kept GROUP BY 1, 2""".stripMargin

@@ -277,8 +277,7 @@ object TextAnalysis {
     val base = t(spark, dir, "documents")
       .select(col("doc_id"), toks(col("text")).as("ts"))
       .select(col("doc_id"), col("ts"),
-        expr("transform(slice(ts, 1, size(ts) - 1), (x, i) -> concat_ws(' ', x, ts[i + 1]))")
-          .as("g2"))
+        graft.functions.TextFunctions.ngramsJoined(col("ts"), 2).as("g2"))
       .select(col("doc_id"),
         size(col("ts")).as("n_tokens"),
         size(array_distinct(col("ts"))).as("n_distinct"),

@@ -238,8 +238,8 @@ object EventStreams {
   }
 
   /** Incremental MinHash-LSH candidate pairs over a documents stream:
-    * row-local banded signatures (stateless — see
-    * [[graft.operators.Dedup.bandedSignaturesRowLocalOf]]), then ONE
+    * row-local banded signatures (stateless — the batch chain's own
+    * [[graft.operators.Dedup.bandedSignaturesOf]]), then ONE
     * stateful operator keyed by (band, sig) whose state is the bucket's
     * membership. Each arriving doc emits its pairs against the bucket's
     * prior members at arrival time — the streaming composition of the
@@ -249,7 +249,7 @@ object EventStreams {
   def minhashPairsStateful(docs: DataFrame): Dataset[BandPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.operators.Dedup.bandedSignaturesRowLocalOf(docs)
+    graft.operators.Dedup.bandedSignaturesOf(docs)
       .select(col("band"), col("sig"), col("doc_id"))
       .as[(Int, String, Long)]
       .groupByKey(r => (r._1, r._2))

@@ -36,7 +36,7 @@ class MinHashSigsSpec extends AnyFunSuite {
 
   test("string-array input equals transform(md5Long % m) into the mins family") {
     // pins the computeStrings branch — the one
-    // bandedSignaturesRowLocalOf actually fuses (md5 → mod → mins) —
+    // Dedup.bandedSignaturesOf actually fuses (md5 → mod → mins) —
     // directly against the r16 HOF form it replaced, including empty
     // strings, empty arrays, unicode, and null elements (ADVICE r17)
     import spark.implicits._

@@ -32,7 +32,7 @@ class PlanBudgetSpec extends AnyFunSuite {
   // nothing may ever cross the network
   test("zero-shuffle queries stay zero-shuffle") {
     for (q <- Seq("bpe_encode", "embed_quantize", "text_chunks", "sample_split",
-                  "quality_gopher_rules"))
+                  "quality_gopher_rules", "minhash_signatures"))
       assert(shuffles(q) == 0, s"$q grew a shuffle")
   }
 
@@ -52,7 +52,7 @@ class PlanBudgetSpec extends AnyFunSuite {
       "events_attribution"   -> 2, // as-of union window + channel rollup
       "events_path_topk"     -> 2, // user window + path agg
       "layout_zorder"        -> 2, // bucket agg (+ scalar-domain agg)
-      "dedup_minhash_lsh"    -> 3,
+      "dedup_minhash_lsh"    -> 2, // signatures in the map; band bucket + pair distinct
       "media_phash"          -> 4,
       "eval_langid"          -> 4,
       "bloom_membership"     -> 4,

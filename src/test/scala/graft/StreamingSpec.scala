@@ -208,8 +208,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = graft.streaming.StreamQueries.streamMinhash(spark, TestSpark.Sf0001)
     val gotPairs = got.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-    // batch twin over the SAME row-local signatures: per-band self-join
-    val bands = graft.operators.Dedup.bandedSignaturesRowLocalOf(
+    // batch twin over the SAME signatures (one function for batch and
+    // stream): per-band self-join
+    val bands = graft.operators.Dedup.bandedSignaturesOf(
       graft.operators.Tables.t(spark, TestSpark.Sf0001, "documents"))
     val expect = bands.select(col("band"), col("sig"), col("doc_id").as("doc_a"))
       .join(bands.select(col("band"), col("sig"), col("doc_id").as("doc_b")),
@@ -219,8 +220,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(gotPairs.nonEmpty)
     assert(gotPairs == expect) // == also proves no pair re-emitted across batches
     // and the distinct pair projection IS the batch LSH operator's
-    // candidate set — row-local signatures == aggregate-form signatures,
-    // transitively (cap inert at this scale on both sides)
+    // candidate set (cap inert at this scale on both sides)
     val viaBatchOp = graft.operators.Dedup
       .dedupMinhashLsh(spark, TestSpark.Sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq

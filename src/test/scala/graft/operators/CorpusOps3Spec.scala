@@ -489,6 +489,37 @@ class CorpusOps3Spec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // ------------------------------------------------------ minhash_signatures
+
+  test("minhashSignatures equals a plain-Scala MinHash on sf0.001 plus short docs") {
+    // the reference: distinct 3-shingles of split(text, "\\s+"), each
+    // hashed md5Long % M, then the 16 affine mins ((2i+1)x + (i+1)·7919)
+    // % M, printed as 4 comma-joined bands joined by ';'. A doc with <3
+    // tokens has no shingle and no signature row.
+    val M = 2147483647L
+    def reference(text: String): Option[String] = {
+      val ts = text.split("\\s+", -1)
+      val xs = ts.sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSeq
+        .distinct.map(sh => Tables.md5LongOf(sh.getBytes("UTF-8")) % M)
+      if (xs.isEmpty) None
+      else Some((0 until 16).map(i => xs.map(x => (x * (2 * i + 1) + (i + 1) * 7919L) % M).min)
+        .grouped(4).map(_.mkString(",")).mkString(";"))
+    }
+    val short = Seq("", "a", "a b", "a  b", " a", "a b ", " a b", "a b c",
+                    "x y x y x y", "☃ é ü", "tab\tsep\nline")
+    val real = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("text"), col("lang")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+    val docs = real ++ short.zipWithIndex.map { case (t, i) => (1000000L + i, t, "en") }
+    val sub = writeDocs("mhref", docs)
+    val got = Dedup.minhashSignatures(spark, sub).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val want = docs.flatMap { case (id, t, _) => reference(t).map(id -> _) }.toMap
+    assert(want.size > real.size) // the 3-token short docs sign too
+    assert(!want.contains(1000002L) && want.contains(1000006L))
+    assert(got == want)
+  }
+
   // ------------------------------------------------------------ eval_minhash
 
   test("evalMinhash: set identities hold and the LSH index misses no true pair on sf0.001") {
