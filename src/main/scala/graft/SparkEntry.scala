@@ -1,468 +1,267 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.operators._
+import graft.streaming.StreamQueries
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query surface (SURVEY.md §7).
   *
-  * Every entry in `queries` is one operator from SURVEY.md §2's inventory
-  * (engine ops E1-E9 via the MR queries; [EXT] relational / LLM-pipeline
-  * ops via graft.operators). Each key present in `oracleSql` is
-  * hash-compared against DuckDB by the driver at sf0.01.
+  * [[table]] is the query registry: one row per operator from SURVEY.md
+  * §2's inventory (engine ops E1-E9 via the MR queries; [EXT] relational /
+  * LLM-pipeline ops via graft.operators), giving its name, the function
+  * that builds its DataFrame and its oracle, the ANSI SQL DuckDB runs on
+  * the same parquet tables. `queries` and `oracleSql` are derived from it;
+  * each query is hash-compared against its oracle at sf0.01.
   */
 object SparkEntry {
+  private[graft] type QueryFn = (SparkSession, String) => DataFrame
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One registry row. Its oracle SQL is by name, so, as with the query
+    * function, loading the table initializes no operator object. */
+  private[graft] final class Query(val name: String, val build: QueryFn, sql: => String) {
+    def oracle: String = sql
+  }
+  private def q(name: String, build: QueryFn, sql: => String) = new Query(name, build, sql)
+
+  private[graft] val table: Seq[Query] = Seq(
     // -- reference apps through the faithful MR engine (A1/A2 on E1-E9)
-    "mr_wordcount"      -> (MrQueries.mrWordCount _),
-    "mr_inverted_index" -> (MrQueries.mrInvertedIndex _),
-    "mr_sorted_concat"  -> (MrQueries.mrSortedConcat _),
+    q("mr_wordcount", MrQueries.mrWordCount, MrQueries.mrWordCountSql),
+    q("mr_inverted_index", MrQueries.mrInvertedIndex, MrQueries.mrInvertedIndexSql),
+    q("mr_sorted_concat", MrQueries.mrSortedConcat, MrQueries.mrSortedConcatSql),
     // -- idiomatic DataFrame twins
-    "wc_native"             -> (MrQueries.wcNative _),
-    "inverted_index_native" -> (MrQueries.invertedIndexNative _),
+    q("wc_native", MrQueries.wcNative, MrQueries.wcNativeSql),
+    q("inverted_index_native", MrQueries.invertedIndexNative, MrQueries.invertedIndexNativeSql),
     // -- relational [EXT]
-    "q1_pricing_summary"  -> (Relational.q1PricingSummary _),
-    "q3_shipping_priority" -> (Relational.q3ShippingPriority _),
-    "q5_local_supplier"   -> (Relational.q5LocalSupplier _),
-    "q6_forecast_revenue" -> (Relational.q6ForecastRevenue _),
-    "q18_large_orders"    -> (Relational.q18LargeOrders _),
-    "q21_waiting_orders"  -> (Relational.q21WaitingOrders _),
-    "q13_custdist"        -> (Relational.q13CustDist _),
-    "q4_order_priority"   -> (DecisionSupport.q4OrderPriority _),
-    "q7_volume_shipping"  -> (DecisionSupport.q7VolumeShipping _),
-    "q8_market_share"     -> (DecisionSupport.q8MarketShare _),
-    "q10_returned_items"  -> (DecisionSupport.q10ReturnedItems _),
-    "q14_promo_revenue"   -> (DecisionSupport.q14PromoRevenue _),
-    "q15_top_supplier"    -> (DecisionSupport.q15TopSupplier _),
-    "q17_small_quantity"  -> (DecisionSupport.q17SmallQuantity _),
-    "q19_disjunctive"     -> (DecisionSupport.q19Disjunctive _),
-    "q22_idle_customers"  -> (DecisionSupport.q22IdleCustomers _),
-    "q2_min_cost_supplier" -> (DecisionSupport.q2MinCostSupplier _),
-    "q11_important_parts" -> (DecisionSupport.q11ImportantParts _),
-    "q16_parts_suppliers" -> (DecisionSupport.q16PartsSuppliers _),
-    "q20_excess_suppliers" -> (DecisionSupport.q20ExcessSuppliers _),
-    "q9_product_profit"   -> (DecisionSupport.q9ProductProfit _),
-    "q12_priority_lines"  -> (DecisionSupport.q12PriorityLines _),
-    "join_broadcast_part" -> (Relational.joinBroadcastPart _),
-    "join_semi"           -> (Relational.joinSemi _),
-    "join_anti"           -> (Relational.joinAnti _),
-    "join_full_outer"     -> (Relational.joinFullOuter _),
-    "join_theta"          -> (Relational.joinTheta _),
-    "join_salted"         -> (Skew.joinSalted _),
-    "window_topk"         -> (Relational.windowTopkPerCustomer _),
-    "window_analytics"    -> (Relational.windowAnalytics _),
-    "agg_rollup"          -> (Relational.aggRollup _),
-    "agg_histogram"       -> (Relational.aggHistogram _),
-    "agg_correlation"     -> (Relational.aggCorrelation _),
-    "agg_cube"            -> (Relational.aggCube _),
-    "agg_distinct"        -> (Relational.aggDistinct _),
-    "topk_orders"         -> (Relational.topkOrders _),
-    "orders_market_basket" -> (Relational.ordersMarketBasket _),
-    "set_ops"             -> (Relational.setOps _),
-    "scalar_functions"    -> (Relational.scalarFunctions _),
-    "json_extract"        -> (Relational.jsonExtract _),
+    q("q1_pricing_summary", Relational.q1PricingSummary, Relational.q1Sql),
+    q("q3_shipping_priority", Relational.q3ShippingPriority, Relational.q3Sql),
+    q("q5_local_supplier", Relational.q5LocalSupplier, Relational.q5Sql),
+    q("q6_forecast_revenue", Relational.q6ForecastRevenue, Relational.q6Sql),
+    q("q18_large_orders", Relational.q18LargeOrders, Relational.q18Sql),
+    q("q21_waiting_orders", Relational.q21WaitingOrders, Relational.q21Sql),
+    q("q13_custdist", Relational.q13CustDist, Relational.q13Sql),
+    q("q4_order_priority", DecisionSupport.q4OrderPriority, DecisionSupport.q4Sql),
+    q("q7_volume_shipping", DecisionSupport.q7VolumeShipping, DecisionSupport.q7Sql),
+    q("q8_market_share", DecisionSupport.q8MarketShare, DecisionSupport.q8Sql),
+    q("q10_returned_items", DecisionSupport.q10ReturnedItems, DecisionSupport.q10Sql),
+    q("q14_promo_revenue", DecisionSupport.q14PromoRevenue, DecisionSupport.q14Sql),
+    q("q15_top_supplier", DecisionSupport.q15TopSupplier, DecisionSupport.q15Sql),
+    q("q17_small_quantity", DecisionSupport.q17SmallQuantity, DecisionSupport.q17Sql),
+    q("q19_disjunctive", DecisionSupport.q19Disjunctive, DecisionSupport.q19Sql),
+    q("q22_idle_customers", DecisionSupport.q22IdleCustomers, DecisionSupport.q22Sql),
+    q("q2_min_cost_supplier", DecisionSupport.q2MinCostSupplier, DecisionSupport.q2Sql),
+    q("q11_important_parts", DecisionSupport.q11ImportantParts, DecisionSupport.q11Sql),
+    q("q16_parts_suppliers", DecisionSupport.q16PartsSuppliers, DecisionSupport.q16Sql),
+    q("q20_excess_suppliers", DecisionSupport.q20ExcessSuppliers, DecisionSupport.q20Sql),
+    q("q9_product_profit", DecisionSupport.q9ProductProfit, DecisionSupport.q9Sql),
+    q("q12_priority_lines", DecisionSupport.q12PriorityLines, DecisionSupport.q12Sql),
+    q("join_broadcast_part", Relational.joinBroadcastPart, Relational.joinBroadcastPartSql),
+    q("join_semi", Relational.joinSemi, Relational.joinSemiSql),
+    q("join_anti", Relational.joinAnti, Relational.joinAntiSql),
+    q("join_full_outer", Relational.joinFullOuter, Relational.joinFullOuterSql),
+    q("join_theta", Relational.joinTheta, Relational.joinThetaSql),
+    q("join_salted", Skew.joinSalted, Skew.joinSaltedSql),
+    q("window_topk", Relational.windowTopkPerCustomer, Relational.windowTopkSql),
+    q("window_analytics", Relational.windowAnalytics, Relational.windowAnalyticsSql),
+    q("agg_rollup", Relational.aggRollup, Relational.aggRollupSql),
+    q("agg_histogram", Relational.aggHistogram, Relational.aggHistogramSql),
+    q("agg_correlation", Relational.aggCorrelation, Relational.aggCorrelationSql),
+    q("agg_cube", Relational.aggCube, Relational.aggCubeSql),
+    q("agg_distinct", Relational.aggDistinct, Relational.aggDistinctSql),
+    q("topk_orders", Relational.topkOrders, Relational.topkOrdersSql),
+    q("orders_market_basket", Relational.ordersMarketBasket, Relational.ordersMarketBasketSql),
+    q("set_ops", Relational.setOps, Relational.setOpsSql),
+    q("scalar_functions", Relational.scalarFunctions, Relational.scalarFunctionsSql),
+    q("json_extract", Relational.jsonExtract, Relational.jsonExtractSql),
     // -- Structured Streaming, oracle-gated [EXT]: real micro-batched
     //    streams drained to a sink, hash-compared against batch SQL
-    "stream_hourly_counts" -> (graft.streaming.StreamQueries.streamHourlyCounts _),
-    "stream_sessionize"    -> (graft.streaming.StreamQueries.streamSessionize _),
-    "stream_dedup"         -> (graft.streaming.StreamQueries.streamDedup _),
-    "stream_late_data"     -> (graft.streaming.StreamQueries.streamLateData _),
-    "stream_attribution"   -> (graft.streaming.StreamQueries.streamAttribution _),
-    "stream_minhash"       -> (graft.streaming.StreamQueries.streamMinhash _),
+    q("stream_hourly_counts", StreamQueries.streamHourlyCounts, StreamQueries.streamHourlyCountsSql),
+    q("stream_sessionize", StreamQueries.streamSessionize, StreamQueries.streamSessionizeSql),
+    q("stream_dedup", StreamQueries.streamDedup, StreamQueries.streamDedupSql),
+    q("stream_late_data", StreamQueries.streamLateData, StreamQueries.streamLateDataSql),
+    q("stream_attribution", StreamQueries.streamAttribution, StreamQueries.streamAttributionSql),
+    q("stream_minhash", StreamQueries.streamMinhash, StreamQueries.streamMinhashSql),
     // -- event-time windowing [EXT]
-    "events_hourly"     -> (Events.eventsHourly _),
-    "events_sliding"    -> (Events.eventsSliding _),
-    "events_sessionize" -> (Events.eventsSessionize _),
-    "events_scd2"       -> (Events.eventsScd2 _),
-    "events_bot_filter" -> (Events.eventsBotFilter _),
-    "events_stickiness" -> (Events.eventsStickiness _),
-    "events_lifecycle"  -> (Events.eventsLifecycle _),
-    "events_pareto"     -> (Events.eventsPareto _),
-    "events_funnel"     -> (Events.eventsFunnel _),
-    "events_cohorts"    -> (Events.eventsCohorts _),
-    "events_outliers"   -> (Events.eventsOutliers _),
-    "events_gapfill"    -> (Events.eventsGapfill _),
-    "events_retention"  -> (Events.eventsRetention _),
-    "events_transitions" -> (Events.eventsTransitions _),
-    "events_mad_outliers" -> (Events.eventsMadOutliers _),
-    "events_rfm"          -> (Events.eventsRfm _),
-    "events_attribution"  -> (Events.eventsAttribution _),
-    "events_path_topk"    -> (Events.eventsPathTopk _),
-    "events_cusum"        -> (Events.eventsCusum _),
-    "events_ewma"         -> (Events.eventsEwma _),
-    "events_trend"        -> (Events.eventsTrend _),
-    "events_kanon"        -> (Events.eventsKanon _),
-    "events_ldiversity"   -> (Events.eventsLdiversity _),
-    "events_hll_sliding"  -> (Sketches.hllSliding _),
-    "window_distribution" -> (Relational.windowDistribution _),
+    q("events_hourly", Events.eventsHourly, Events.eventsHourlySql),
+    q("events_sliding", Events.eventsSliding, Events.eventsSlidingSql),
+    q("events_sessionize", Events.eventsSessionize, Events.eventsSessionizeSql),
+    q("events_scd2", Events.eventsScd2, Events.eventsScd2Sql),
+    q("events_bot_filter", Events.eventsBotFilter, Events.eventsBotFilterSql),
+    q("events_stickiness", Events.eventsStickiness, Events.eventsStickinessSql),
+    q("events_lifecycle", Events.eventsLifecycle, Events.eventsLifecycleSql),
+    q("events_pareto", Events.eventsPareto, Events.eventsParetoSql),
+    q("events_funnel", Events.eventsFunnel, Events.eventsFunnelSql),
+    q("events_cohorts", Events.eventsCohorts, Events.eventsCohortsSql),
+    q("events_outliers", Events.eventsOutliers, Events.eventsOutliersSql),
+    q("events_gapfill", Events.eventsGapfill, Events.eventsGapfillSql),
+    q("events_retention", Events.eventsRetention, Events.eventsRetentionSql),
+    q("events_transitions", Events.eventsTransitions, Events.eventsTransitionsSql),
+    q("events_mad_outliers", Events.eventsMadOutliers, Events.eventsMadOutliersSql),
+    q("events_rfm", Events.eventsRfm, Events.eventsRfmSql),
+    q("events_attribution", Events.eventsAttribution, Events.eventsAttributionSql),
+    q("events_path_topk", Events.eventsPathTopk, Events.eventsPathTopkSql),
+    q("events_cusum", Events.eventsCusum, Events.eventsCusumSql),
+    q("events_ewma", Events.eventsEwma, Events.eventsEwmaSql),
+    q("events_trend", Events.eventsTrend, Events.eventsTrendSql),
+    q("events_kanon", Events.eventsKanon, Events.eventsKanonSql),
+    q("events_ldiversity", Events.eventsLdiversity, Events.eventsLdiversitySql),
+    q("events_hll_sliding", Sketches.hllSliding, Sketches.hllSlidingSql),
+    q("window_distribution", Relational.windowDistribution, Relational.windowDistributionSql),
     // -- dedup [EXT]
-    "dedup_exact"         -> (Dedup.dedupExact _),
-    "dedup_url"           -> (Dedup.dedupUrl _),
-    "dedup_best_quality"  -> (Dedup.dedupBestQuality _),
-    "dedup_minhash_lsh"   -> (Dedup.dedupMinhashLsh _),
-    "minhash_signatures"  -> (Dedup.minhashSignatures _),
-    "dedup_simhash"       -> (Dedup.dedupSimhash _),
-    "dedup_simhash_pairs" -> (Dedup.dedupSimhashPairs _),
-    "dedup_ngram_jaccard" -> (Dedup.dedupNgramJaccard _),
-    "dedup_containment"   -> (Dedup.dedupContainment _),
-    "dedup_components"    -> (Dedup.dedupComponents _),
-    "dedup_cluster_sizes" -> (Dedup.dedupClusterSizes _),
-    "dedup_source_profile" -> (Dedup.dedupSourceProfile _),
-    "dedup_apply"         -> (Dedup.dedupApply _),
-    "dedup_edit_distance" -> (Dedup.dedupEditDistance _),
-    "eval_minhash"        -> (Dedup.evalMinhash _),
-    "embed_quantize"      -> (Similarity.embedQuantize _),
-    "embed_centroid_outliers" -> (Similarity.embedCentroidOutliers _),
-    "embed_gram"          -> (Similarity.embedGram _),
-    "embed_pca_project"   -> (Similarity.embedPcaProject _),
+    q("dedup_exact", Dedup.dedupExact, Dedup.dedupExactSql),
+    q("dedup_url", Dedup.dedupUrl, Dedup.dedupUrlSql),
+    q("dedup_best_quality", Dedup.dedupBestQuality, Dedup.dedupBestQualitySql),
+    q("dedup_minhash_lsh", Dedup.dedupMinhashLsh, Dedup.dedupMinhashLshSql),
+    q("minhash_signatures", Dedup.minhashSignatures, Dedup.minhashSignaturesSql),
+    q("dedup_simhash", Dedup.dedupSimhash, Dedup.dedupSimhashSql),
+    q("dedup_simhash_pairs", Dedup.dedupSimhashPairs, Dedup.dedupSimhashPairsSql),
+    q("dedup_ngram_jaccard", Dedup.dedupNgramJaccard, Dedup.dedupNgramJaccardSql),
+    q("dedup_containment", Dedup.dedupContainment, Dedup.dedupContainmentSql),
+    q("dedup_components", Dedup.dedupComponents, Dedup.dedupComponentsSql),
+    q("dedup_cluster_sizes", Dedup.dedupClusterSizes, Dedup.dedupClusterSizesSql),
+    q("dedup_source_profile", Dedup.dedupSourceProfile, Dedup.dedupSourceProfileSql),
+    q("dedup_apply", Dedup.dedupApply, Dedup.dedupApplySql),
+    q("dedup_edit_distance", Dedup.dedupEditDistance, Dedup.dedupEditDistanceSql),
+    q("eval_minhash", Dedup.evalMinhash, Dedup.evalMinhashSql),
+    q("embed_quantize", Similarity.embedQuantize, Similarity.embedQuantizeSql),
+    q("embed_centroid_outliers", Similarity.embedCentroidOutliers, Similarity.embedCentroidOutliersSql),
+    q("embed_gram", Similarity.embedGram, Similarity.embedGramSql),
+    q("embed_pca_project", Similarity.embedPcaProject, Similarity.embedPcaProjectSql),
     // -- text analysis [EXT]
-    "text_tokens"      -> (TextAnalysis.textTokens _),
-    "text_quality"     -> (TextAnalysis.textQuality _),
-    "text_langid"      -> (TextAnalysis.textLangid _),
-    "text_fingerprint" -> (TextAnalysis.textFingerprint _),
-    "text_pii_redact"  -> (TextAnalysis.textPiiRedact _),
-    "text_repetition"  -> (TextAnalysis.textRepetition _),
-    "text_ngram_vocab" -> (TextAnalysis.textNgramVocab _),
-    "text_boilerplate" -> (TextAnalysis.textBoilerplate _),
-    "text_unigram_lm"  -> (TextAnalysis.textUnigramLm _),
-    "text_bigram_lm"   -> (TextAnalysis.textBigramLm _),
-    "text_collocations" -> (TextAnalysis.textCollocations _),
-    "text_hashed_features" -> (TextAnalysis.textHashedFeatures _),
-    "text_chunks"      -> (TextAnalysis.textChunks _),
-    "text_bm25"        -> (TextAnalysis.textBm25 _),
-    "text_classifier"  -> (TextAnalysis.textClassifier _),
-    "pack_sequences"   -> (TextAnalysis.packSequences _),
-    "bpe_merges"       -> (TextAnalysis.bpeMerges _),
-    "bpe_encode"       -> (TextAnalysis.bpeEncode _),
-    "quality_c4_rules" -> (TextAnalysis.qualityC4Rules _),
-    "quality_gopher_rules" -> (TextAnalysis.qualityGopherRules _),
-    "quality_perplexity" -> (TextAnalysis.qualityPerplexity _),
-    "text_zipf_fit"      -> (TextAnalysis.textZipfFit _),
-    "text_token_fertility" -> (TextAnalysis.textTokenFertility _),
-    "text_span_dedup"  -> (TextAnalysis.textSpanDedup _),
-    "text_winnowing"   -> (TextAnalysis.textWinnowing _),
-    "eval_langid"      -> (TextAnalysis.evalLangid _),
-    "text_entropy"     -> (TextAnalysis.textEntropy _),
-    "text_vocab_growth" -> (TextAnalysis.textVocabGrowth _),
+    q("text_tokens", TextAnalysis.textTokens, TextAnalysis.textTokensSql),
+    q("text_quality", TextAnalysis.textQuality, TextAnalysis.textQualitySql),
+    q("text_langid", TextAnalysis.textLangid, TextAnalysis.textLangidSql),
+    q("text_fingerprint", TextAnalysis.textFingerprint, TextAnalysis.textFingerprintSql),
+    q("text_pii_redact", TextAnalysis.textPiiRedact, TextAnalysis.textPiiRedactSql),
+    q("text_repetition", TextAnalysis.textRepetition, TextAnalysis.textRepetitionSql),
+    q("text_ngram_vocab", TextAnalysis.textNgramVocab, TextAnalysis.textNgramVocabSql),
+    q("text_boilerplate", TextAnalysis.textBoilerplate, TextAnalysis.textBoilerplateSql),
+    q("text_unigram_lm", TextAnalysis.textUnigramLm, TextAnalysis.textUnigramLmSql),
+    q("text_bigram_lm", TextAnalysis.textBigramLm, TextAnalysis.textBigramLmSql),
+    q("text_collocations", TextAnalysis.textCollocations, TextAnalysis.textCollocationsSql),
+    q("text_hashed_features", TextAnalysis.textHashedFeatures, TextAnalysis.textHashedFeaturesSql),
+    q("text_chunks", TextAnalysis.textChunks, TextAnalysis.textChunksSql),
+    q("text_bm25", TextAnalysis.textBm25, TextAnalysis.textBm25Sql),
+    q("text_classifier", TextAnalysis.textClassifier, TextAnalysis.textClassifierSql),
+    q("pack_sequences", TextAnalysis.packSequences, TextAnalysis.packSequencesSql),
+    q("bpe_merges", TextAnalysis.bpeMerges, TextAnalysis.bpeMergesSql),
+    q("bpe_encode", TextAnalysis.bpeEncode, TextAnalysis.bpeEncodeSql),
+    q("quality_c4_rules", TextAnalysis.qualityC4Rules, TextAnalysis.qualityC4RulesSql),
+    q("quality_gopher_rules", TextAnalysis.qualityGopherRules, TextAnalysis.qualityGopherRulesSql),
+    q("quality_perplexity", TextAnalysis.qualityPerplexity, TextAnalysis.qualityPerplexitySql),
+    q("text_zipf_fit", TextAnalysis.textZipfFit, TextAnalysis.textZipfFitSql),
+    q("text_token_fertility", TextAnalysis.textTokenFertility, TextAnalysis.textTokenFertilitySql),
+    q("text_span_dedup", TextAnalysis.textSpanDedup, TextAnalysis.textSpanDedupSql),
+    q("text_winnowing", TextAnalysis.textWinnowing, TextAnalysis.textWinnowingSql),
+    q("eval_langid", TextAnalysis.evalLangid, TextAnalysis.evalLangidSql),
+    q("text_entropy", TextAnalysis.textEntropy, TextAnalysis.textEntropySql),
+    q("text_vocab_growth", TextAnalysis.textVocabGrowth, TextAnalysis.textVocabGrowthSql),
     // -- deterministic sampling / dataset splitting [EXT]
-    "sample_split"      -> (Sampling.sampleSplit _),
-    "sample_stratified" -> (Sampling.sampleStratified _),
-    "sample_weighted"   -> (Sampling.sampleWeighted _),
-    "sample_token_budget" -> (Sampling.sampleTokenBudget _),
-    "mix_domain_weights" -> (Sampling.mixDomainWeights _),
-    "mix_upsample_epochs" -> (Sampling.mixUpsampleEpochs _),
-    "corpus_ngram_coverage" -> (Sampling.corpusNgramCoverage _),
-    "mix_kl_divergence" -> (Sampling.mixKlDivergence _),
-    "text_rake_keywords" -> (TextAnalysis.textRakeKeywords _),
-    "text_kneser_ney"    -> (TextAnalysis.textKneserNey _),
-    "text_burstiness"    -> (TextAnalysis.textBurstiness _),
-    "text_bigram_coverage" -> (TextAnalysis.textBigramCoverage _),
-    "text_branching_entropy" -> (TextAnalysis.textBranchingEntropy _),
-    "mix_js_divergence"  -> (Sampling.mixJsDivergence _),
-    "embed_pq_distortion" -> (Similarity.embedPqDistortion _),
-    "corpus_shuffle_shard" -> (Sampling.corpusShuffleShard _),
-    "split_contamination" -> (Sampling.splitContamination _),
-    "split_ngram_decontam" -> (Sampling.splitNgramDecontam _),
-    "split_semantic_decontam" -> (Similarity.splitSemanticDecontam _),
-    "mix_domains"         -> (Sampling.mixDomains _),
-    "dsir_importance"     -> (Sampling.dsirImportance _),
-    "mix_temperature"     -> (Sampling.mixTemperature _),
-    "corpus_prep"         -> (Pipeline.corpusPrep _),
-    "corpus_attrition"    -> (Pipeline.corpusAttrition _),
-    "dedup_substr"        -> (Dedup.dedupSubstr _),
-    "dedup_suffix_array"  -> (Dedup.dedupSuffixArray _),
-    "dedup_incr"          -> (Dedup.dedupIncremental _),
-    "graph_pagerank"      -> (Graph.graphPagerank _),
-    "graph_triangles"     -> (Graph.graphTriangles _),
-    "graph_bfs"           -> (Graph.graphBfs _),
-    "graph_sssp"          -> (Graph.graphSssp _),
-    "graph_label_propagation" -> (Graph.graphLabelProp _),
-    "graph_kcore"         -> (Graph.graphKcore _),
-    "graph_hits"          -> (Graph.graphHits _),
-    "graph_common_neighbors" -> (Graph.graphCommonNeighbors _),
-    "graph_jaccard_links" -> (Graph.graphJaccardLinks _),
-    "graph_clustering_coeff" -> (Graph.graphClusteringCoeff _),
-    "graph_modularity"  -> (Graph.graphModularity _),
-    "graph_assortativity" -> (Graph.graphAssortativity _),
+    q("sample_split", Sampling.sampleSplit, Sampling.sampleSplitSql),
+    q("sample_stratified", Sampling.sampleStratified, Sampling.sampleStratifiedSql),
+    q("sample_weighted", Sampling.sampleWeighted, Sampling.sampleWeightedSql),
+    q("sample_token_budget", Sampling.sampleTokenBudget, Sampling.sampleTokenBudgetSql),
+    q("mix_domain_weights", Sampling.mixDomainWeights, Sampling.mixDomainWeightsSql),
+    q("mix_upsample_epochs", Sampling.mixUpsampleEpochs, Sampling.mixUpsampleEpochsSql),
+    q("corpus_ngram_coverage", Sampling.corpusNgramCoverage, Sampling.corpusNgramCoverageSql),
+    q("mix_kl_divergence", Sampling.mixKlDivergence, Sampling.mixKlDivergenceSql),
+    q("text_rake_keywords", TextAnalysis.textRakeKeywords, TextAnalysis.textRakeKeywordsSql),
+    q("text_kneser_ney", TextAnalysis.textKneserNey, TextAnalysis.textKneserNeySql),
+    q("text_burstiness", TextAnalysis.textBurstiness, TextAnalysis.textBurstinessSql),
+    q("text_bigram_coverage", TextAnalysis.textBigramCoverage, TextAnalysis.textBigramCoverageSql),
+    q("text_branching_entropy", TextAnalysis.textBranchingEntropy, TextAnalysis.textBranchingEntropySql),
+    q("mix_js_divergence", Sampling.mixJsDivergence, Sampling.mixJsDivergenceSql),
+    q("embed_pq_distortion", Similarity.embedPqDistortion, Similarity.embedPqDistortionSql),
+    q("corpus_shuffle_shard", Sampling.corpusShuffleShard, Sampling.corpusShuffleShardSql),
+    q("split_contamination", Sampling.splitContamination, Sampling.splitContaminationSql),
+    q("split_ngram_decontam", Sampling.splitNgramDecontam, Sampling.splitNgramDecontamSql),
+    q("split_semantic_decontam", Similarity.splitSemanticDecontam, Similarity.splitSemanticDecontamSql),
+    q("mix_domains", Sampling.mixDomains, Sampling.mixDomainsSql),
+    q("dsir_importance", Sampling.dsirImportance, Sampling.dsirImportanceSql),
+    q("mix_temperature", Sampling.mixTemperature, Sampling.mixTemperatureSql),
+    q("corpus_prep", Pipeline.corpusPrep, Pipeline.corpusPrepSql),
+    q("corpus_attrition", Pipeline.corpusAttrition, Pipeline.corpusAttritionSql),
+    q("dedup_substr", Dedup.dedupSubstr, Dedup.dedupSubstrSql),
+    q("dedup_suffix_array", Dedup.dedupSuffixArray, Dedup.dedupSuffixArraySql),
+    q("dedup_incr", Dedup.dedupIncremental, Dedup.dedupIncrementalSql),
+    q("graph_pagerank", Graph.graphPagerank, Graph.graphPagerankSql),
+    q("graph_triangles", Graph.graphTriangles, Graph.graphTrianglesSql),
+    q("graph_bfs", Graph.graphBfs, Graph.graphBfsSql),
+    q("graph_sssp", Graph.graphSssp, Graph.graphSsspSql),
+    q("graph_label_propagation", Graph.graphLabelProp, Graph.graphLabelPropSql),
+    q("graph_kcore", Graph.graphKcore, Graph.graphKcoreSql),
+    q("graph_hits", Graph.graphHits, Graph.graphHitsSql),
+    q("graph_common_neighbors", Graph.graphCommonNeighbors, Graph.graphCommonNeighborsSql),
+    q("graph_jaccard_links", Graph.graphJaccardLinks, Graph.graphJaccardLinksSql),
+    q("graph_clustering_coeff", Graph.graphClusteringCoeff, Graph.graphClusteringCoeffSql),
+    q("graph_modularity", Graph.graphModularity, Graph.graphModularitySql),
+    q("graph_assortativity", Graph.graphAssortativity, Graph.graphAssortativitySql),
     // -- similarity search [EXT]
-    "ann_bruteforce_topk" -> (Similarity.annBruteforceTopk _),
-    "ann_ivf_topk"        -> (Similarity.annIvfTopk _),
-    "ann_filtered_topk"   -> (Similarity.annFilteredTopk _),
-    "ann_range_search"    -> (Similarity.annRangeSearch _),
-    "ann_multiprobe_lsh"  -> (Similarity.annMultiprobeLsh _),
-    "eval_clustering"     -> (Similarity.evalClustering _),
-    "eval_knn_label"      -> (Similarity.evalKnnLabel _),
-    "ann_hard_negatives"  -> (Similarity.annHardNegatives _),
-    "ann_kmeans_topk"     -> (Similarity.annKmeansTopk _),
-    "ann_lsh_buckets"     -> (Similarity.annLshBuckets _),
-    "ann_rerank"          -> (Similarity.annRerank _),
-    "ann_pq_topk"         -> (Similarity.annPqTopk _),
-    "ann_ivfpq_topk"      -> (Similarity.annIvfpqTopk _),
-    "embed_matryoshka"    -> (Similarity.embedMatryoshka _),
-    "ann_hybrid_rrf"      -> (Similarity.annHybridRrf _),
-    "dedup_embedding"     -> (Similarity.dedupEmbedding _),
-    "dedup_semantic"      -> (Similarity.dedupSemantic _),
-    "ann_nndescent"       -> (Similarity.annNndescent _),
-    "eval_retrieval"      -> (Similarity.evalRetrieval _),
+    q("ann_bruteforce_topk", Similarity.annBruteforceTopk, Similarity.annBruteforceTopkSql),
+    q("ann_ivf_topk", Similarity.annIvfTopk, Similarity.annIvfTopkSql),
+    q("ann_filtered_topk", Similarity.annFilteredTopk, Similarity.annFilteredTopkSql),
+    q("ann_range_search", Similarity.annRangeSearch, Similarity.annRangeSearchSql),
+    q("ann_multiprobe_lsh", Similarity.annMultiprobeLsh, Similarity.annMultiprobeLshSql),
+    q("eval_clustering", Similarity.evalClustering, Similarity.evalClusteringSql),
+    q("eval_knn_label", Similarity.evalKnnLabel, Similarity.evalKnnLabelSql),
+    q("ann_hard_negatives", Similarity.annHardNegatives, Similarity.annHardNegativesSql),
+    q("ann_kmeans_topk", Similarity.annKmeansTopk, Similarity.annKmeansTopkSql),
+    q("ann_lsh_buckets", Similarity.annLshBuckets, Similarity.annLshBucketsSql),
+    q("ann_rerank", Similarity.annRerank, Similarity.annRerankSql),
+    q("ann_pq_topk", Similarity.annPqTopk, Similarity.annPqTopkSql),
+    q("ann_ivfpq_topk", Similarity.annIvfpqTopk, Similarity.annIvfpqTopkSql),
+    q("embed_matryoshka", Similarity.embedMatryoshka, Similarity.embedMatryoshkaSql),
+    q("ann_hybrid_rrf", Similarity.annHybridRrf, Similarity.annHybridRrfSql),
+    q("dedup_embedding", Similarity.dedupEmbedding, Similarity.dedupEmbeddingSql),
+    q("dedup_semantic", Similarity.dedupSemantic, Similarity.dedupSemanticSql),
+    q("ann_nndescent", Similarity.annNndescent, Similarity.annNndescentSql),
+    q("eval_retrieval", Similarity.evalRetrieval, Similarity.evalRetrievalSql),
     // -- multimodal binary columns [EXT]
-    "media_features" -> (Multimodal.mediaFeatures _),
-    "media_frames"   -> (Multimodal.mediaFrames _),
-    "media_dedup"    -> (Multimodal.mediaDedup _),
-    "media_frame_dedup" -> (Multimodal.mediaFrameDedup _),
-    "media_phash"       -> (Multimodal.mediaPhash _),
-    "media_resize"   -> (Multimodal.mediaResize _),
+    q("media_features", Multimodal.mediaFeatures, Multimodal.mediaFeaturesSql),
+    q("media_frames", Multimodal.mediaFrames, Multimodal.mediaFramesSql),
+    q("media_dedup", Multimodal.mediaDedup, Multimodal.mediaDedupSql),
+    q("media_frame_dedup", Multimodal.mediaFrameDedup, Multimodal.mediaFrameDedupSql),
+    q("media_phash", Multimodal.mediaPhash, Multimodal.mediaPhashSql),
+    q("media_resize", Multimodal.mediaResize, Multimodal.mediaResizeSql),
     // -- extended joins (as-of, range) [EXT]
-    "join_asof_clicks" -> (JoinsExt.joinAsofClicks _),
-    "join_asof_native" -> (JoinsExt.joinAsofNative _),
-    "join_asof_nearest" -> (JoinsExt.joinAsofNearest _),
-    "join_range_price" -> (JoinsExt.joinRangePrice _),
-    "join_interval_overlap" -> (JoinsExt.joinIntervalOverlap _),
+    q("join_asof_clicks", JoinsExt.joinAsofClicks, JoinsExt.joinAsofClicksSql),
+    q("join_asof_native", JoinsExt.joinAsofNative, JoinsExt.joinAsofClicksSql), // native exec
+    q("join_asof_nearest", JoinsExt.joinAsofNearest, JoinsExt.joinAsofNearestSql),
+    q("join_range_price", JoinsExt.joinRangePrice, JoinsExt.joinRangePriceSql),
+    q("join_interval_overlap", JoinsExt.joinIntervalOverlap, JoinsExt.joinIntervalOverlapSql),
     // -- grouping sets, tf-idf, sketches [EXT]
-    "agg_grouping_sets" -> (Relational.aggGroupingSets _),
-    "agg_percentiles"   -> (Relational.aggPercentiles _),
-    "agg_pivot"           -> (Relational.aggPivot _),
-    "agg_approx"          -> (Relational.aggApprox _),
-    "agg_argmax"          -> (Relational.aggArgmax _),
-    "window_range_frame"  -> (Relational.windowRangeFrame _),
-    "map_functions"       -> (Relational.mapFunctions _),
-    "subquery_correlated" -> (Relational.subqueryCorrelated _),
-    "text_tfidf"        -> (TextAnalysis.textTfidf _),
-    "kmv_distinct"      -> (Sketches.kmvDistinct _),
-    "kmv_overlap"       -> (Sketches.kmvOverlap _),
-    "quantile_sketch"   -> (Sketches.quantileSketch _),
-    "hll_distinct"      -> (Sketches.hllDistinct _),
-    "hll_native"        -> (Sketches.hllNative _),
-    "cms_heavy_hitters" -> (Sketches.cmsHeavyHitters _),
-    "bloom_membership"  -> (Sketches.bloomMembership _),
-    "data_profile"      -> (Profiling.dataProfile _),
-    "stats_ks_drift"    -> (Profiling.statsKsDrift _),
-    "stats_psi_drift"   -> (Profiling.statsPsiDrift _),
-    "stats_chi2_drift"  -> (Profiling.statsChi2Drift _),
-    "layout_zorder"     -> (Layout.layoutZorder _),
-    "layout_binpack"    -> (Layout.layoutBinpack _)
+    q("agg_grouping_sets", Relational.aggGroupingSets, Relational.aggGroupingSetsSql),
+    q("agg_percentiles", Relational.aggPercentiles, Relational.aggPercentilesSql),
+    q("agg_pivot", Relational.aggPivot, Relational.aggPivotSql),
+    q("agg_approx", Relational.aggApprox, Relational.aggApproxSql),
+    q("agg_argmax", Relational.aggArgmax, Relational.aggArgmaxSql),
+    q("window_range_frame", Relational.windowRangeFrame, Relational.windowRangeFrameSql),
+    q("map_functions", Relational.mapFunctions, Relational.mapFunctionsSql),
+    q("subquery_correlated", Relational.subqueryCorrelated, Relational.subqueryCorrelatedSql),
+    q("text_tfidf", TextAnalysis.textTfidf, TextAnalysis.textTfidfSql),
+    q("kmv_distinct", Sketches.kmvDistinct, Sketches.kmvDistinctSql),
+    q("kmv_overlap", Sketches.kmvOverlap, Sketches.kmvOverlapSql),
+    q("quantile_sketch", Sketches.quantileSketch, Sketches.quantileSketchSql),
+    q("hll_distinct", Sketches.hllDistinct, Sketches.hllDistinctSql),
+    q("hll_native", Sketches.hllNative, Sketches.hllDistinctSql), // same semantics, native UDAF
+    q("cms_heavy_hitters", Sketches.cmsHeavyHitters, Sketches.cmsHeavyHittersSql),
+    q("bloom_membership", Sketches.bloomMembership, Sketches.bloomMembershipSql),
+    q("data_profile", Profiling.dataProfile, Profiling.dataProfileSql),
+    q("stats_ks_drift", Profiling.statsKsDrift, Profiling.statsKsDriftSql),
+    q("stats_psi_drift", Profiling.statsPsiDrift, Profiling.statsPsiDriftSql),
+    q("stats_chi2_drift", Profiling.statsChi2Drift, Profiling.statsChi2DriftSql),
+    q("layout_zorder", Layout.layoutZorder, Layout.layoutZorderSql),
+    q("layout_binpack", Layout.layoutBinpack, Layout.layoutBinpackSql)
   )
+  for ((name, rows) <- table.groupBy(_.name))
+    require(rows.size == 1, s"query $name is declared ${rows.size} times")
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "mr_wordcount"          -> MrQueries.mrWordCountSql,
-    "mr_inverted_index"     -> MrQueries.mrInvertedIndexSql,
-    "mr_sorted_concat"      -> MrQueries.mrSortedConcatSql,
-    "wc_native"             -> MrQueries.wcNativeSql,
-    "inverted_index_native" -> MrQueries.invertedIndexNativeSql,
-    "q1_pricing_summary"    -> Relational.q1Sql,
-    "q3_shipping_priority"  -> Relational.q3Sql,
-    "q5_local_supplier"     -> Relational.q5Sql,
-    "q6_forecast_revenue"   -> Relational.q6Sql,
-    "q18_large_orders"      -> Relational.q18Sql,
-    "q21_waiting_orders"    -> Relational.q21Sql,
-    "q13_custdist"          -> Relational.q13Sql,
-    "q4_order_priority"     -> DecisionSupport.q4Sql,
-    "q7_volume_shipping"    -> DecisionSupport.q7Sql,
-    "q8_market_share"       -> DecisionSupport.q8Sql,
-    "q10_returned_items"    -> DecisionSupport.q10Sql,
-    "q14_promo_revenue"     -> DecisionSupport.q14Sql,
-    "q15_top_supplier"      -> DecisionSupport.q15Sql,
-    "q17_small_quantity"    -> DecisionSupport.q17Sql,
-    "q19_disjunctive"       -> DecisionSupport.q19Sql,
-    "q22_idle_customers"    -> DecisionSupport.q22Sql,
-    "q2_min_cost_supplier"  -> DecisionSupport.q2Sql,
-    "q11_important_parts"   -> DecisionSupport.q11Sql,
-    "q16_parts_suppliers"   -> DecisionSupport.q16Sql,
-    "q20_excess_suppliers"  -> DecisionSupport.q20Sql,
-    "q9_product_profit"     -> DecisionSupport.q9Sql,
-    "q12_priority_lines"    -> DecisionSupport.q12Sql,
-    "join_broadcast_part"   -> Relational.joinBroadcastPartSql,
-    "join_semi"             -> Relational.joinSemiSql,
-    "join_anti"             -> Relational.joinAntiSql,
-    "join_full_outer"       -> Relational.joinFullOuterSql,
-    "join_theta"            -> Relational.joinThetaSql,
-    "join_salted"           -> Skew.joinSaltedSql,
-    "window_topk"           -> Relational.windowTopkSql,
-    "window_analytics"      -> Relational.windowAnalyticsSql,
-    "agg_rollup"            -> Relational.aggRollupSql,
-    "agg_histogram"         -> Relational.aggHistogramSql,
-    "agg_correlation"       -> Relational.aggCorrelationSql,
-    "agg_cube"              -> Relational.aggCubeSql,
-    "agg_distinct"          -> Relational.aggDistinctSql,
-    "topk_orders"           -> Relational.topkOrdersSql,
-    "orders_market_basket"  -> Relational.ordersMarketBasketSql,
-    "set_ops"               -> Relational.setOpsSql,
-    "scalar_functions"      -> Relational.scalarFunctionsSql,
-    "json_extract"          -> Relational.jsonExtractSql,
-    "stream_hourly_counts"  -> graft.streaming.StreamQueries.streamHourlyCountsSql,
-    "stream_sessionize"     -> graft.streaming.StreamQueries.streamSessionizeSql,
-    "stream_dedup"          -> graft.streaming.StreamQueries.streamDedupSql,
-    "stream_late_data"      -> graft.streaming.StreamQueries.streamLateDataSql,
-    "stream_attribution"    -> graft.streaming.StreamQueries.streamAttributionSql,
-    "stream_minhash"        -> graft.streaming.StreamQueries.streamMinhashSql,
-    "events_hourly"         -> Events.eventsHourlySql,
-    "events_sliding"        -> Events.eventsSlidingSql,
-    "events_sessionize"     -> Events.eventsSessionizeSql,
-    "events_scd2"           -> Events.eventsScd2Sql,
-    "events_bot_filter"     -> Events.eventsBotFilterSql,
-    "events_stickiness"     -> Events.eventsStickinessSql,
-    "events_lifecycle"      -> Events.eventsLifecycleSql,
-    "events_pareto"         -> Events.eventsParetoSql,
-    "events_cohorts"        -> Events.eventsCohortsSql,
-    "events_outliers"       -> Events.eventsOutliersSql,
-    "events_gapfill"        -> Events.eventsGapfillSql,
-    "events_retention"      -> Events.eventsRetentionSql,
-    "events_transitions"    -> Events.eventsTransitionsSql,
-    "events_mad_outliers"   -> Events.eventsMadOutliersSql,
-    "events_rfm"            -> Events.eventsRfmSql,
-    "events_attribution"    -> Events.eventsAttributionSql,
-    "events_path_topk"      -> Events.eventsPathTopkSql,
-    "events_cusum"          -> Events.eventsCusumSql,
-    "events_ewma"           -> Events.eventsEwmaSql,
-    "events_trend"          -> Events.eventsTrendSql,
-    "events_kanon"          -> Events.eventsKanonSql,
-    "events_ldiversity"     -> Events.eventsLdiversitySql,
-    "events_funnel"         -> Events.eventsFunnelSql,
-    "events_hll_sliding"    -> Sketches.hllSlidingSql,
-    "window_distribution"   -> Relational.windowDistributionSql,
-    "dedup_exact"           -> Dedup.dedupExactSql,
-    "dedup_url"             -> Dedup.dedupUrlSql,
-    "dedup_best_quality"    -> Dedup.dedupBestQualitySql,
-    "dedup_minhash_lsh"     -> Dedup.dedupMinhashLshSql,
-    "minhash_signatures"    -> Dedup.minhashSignaturesSql,
-    "dedup_simhash"         -> Dedup.dedupSimhashSql,
-    "dedup_simhash_pairs"   -> Dedup.dedupSimhashPairsSql,
-    "dedup_ngram_jaccard"   -> Dedup.dedupNgramJaccardSql,
-    "dedup_containment"     -> Dedup.dedupContainmentSql,
-    "dedup_components"      -> Dedup.dedupComponentsSql,
-    "dedup_cluster_sizes"   -> Dedup.dedupClusterSizesSql,
-    "dedup_source_profile"  -> Dedup.dedupSourceProfileSql,
-    "dedup_apply"           -> Dedup.dedupApplySql,
-    "dedup_edit_distance"   -> Dedup.dedupEditDistanceSql,
-    "eval_minhash"          -> Dedup.evalMinhashSql,
-    "embed_quantize"        -> Similarity.embedQuantizeSql,
-    "embed_centroid_outliers" -> Similarity.embedCentroidOutliersSql,
-    "embed_gram"            -> Similarity.embedGramSql,
-    "embed_pca_project"     -> Similarity.embedPcaProjectSql,
-    "text_tokens"           -> TextAnalysis.textTokensSql,
-    "text_quality"          -> TextAnalysis.textQualitySql,
-    "text_langid"           -> TextAnalysis.textLangidSql,
-    "text_fingerprint"      -> TextAnalysis.textFingerprintSql,
-    "text_pii_redact"       -> TextAnalysis.textPiiRedactSql,
-    "text_repetition"       -> TextAnalysis.textRepetitionSql,
-    "text_ngram_vocab"      -> TextAnalysis.textNgramVocabSql,
-    "text_boilerplate"      -> TextAnalysis.textBoilerplateSql,
-    "text_unigram_lm"       -> TextAnalysis.textUnigramLmSql,
-    "text_bigram_lm"        -> TextAnalysis.textBigramLmSql,
-    "text_collocations"     -> TextAnalysis.textCollocationsSql,
-    "text_hashed_features"  -> TextAnalysis.textHashedFeaturesSql,
-    "text_chunks"           -> TextAnalysis.textChunksSql,
-    "text_bm25"             -> TextAnalysis.textBm25Sql,
-    "text_classifier"       -> TextAnalysis.textClassifierSql,
-    "pack_sequences"        -> TextAnalysis.packSequencesSql,
-    "bpe_merges"            -> TextAnalysis.bpeMergesSql,
-    "bpe_encode"            -> TextAnalysis.bpeEncodeSql,
-    "quality_c4_rules"      -> TextAnalysis.qualityC4RulesSql,
-    "quality_gopher_rules"  -> TextAnalysis.qualityGopherRulesSql,
-    "quality_perplexity"    -> TextAnalysis.qualityPerplexitySql,
-    "text_zipf_fit"         -> TextAnalysis.textZipfFitSql,
-    "text_token_fertility"  -> TextAnalysis.textTokenFertilitySql,
-    "text_span_dedup"       -> TextAnalysis.textSpanDedupSql,
-    "text_winnowing"        -> TextAnalysis.textWinnowingSql,
-    "eval_langid"           -> TextAnalysis.evalLangidSql,
-    "text_entropy"          -> TextAnalysis.textEntropySql,
-    "text_vocab_growth"     -> TextAnalysis.textVocabGrowthSql,
-    "sample_split"          -> Sampling.sampleSplitSql,
-    "sample_stratified"     -> Sampling.sampleStratifiedSql,
-    "sample_weighted"       -> Sampling.sampleWeightedSql,
-    "sample_token_budget"   -> Sampling.sampleTokenBudgetSql,
-    "mix_domain_weights"    -> Sampling.mixDomainWeightsSql,
-    "mix_upsample_epochs"   -> Sampling.mixUpsampleEpochsSql,
-    "corpus_ngram_coverage" -> Sampling.corpusNgramCoverageSql,
-    "mix_kl_divergence"     -> Sampling.mixKlDivergenceSql,
-    "text_rake_keywords"    -> TextAnalysis.textRakeKeywordsSql,
-    "text_kneser_ney"       -> TextAnalysis.textKneserNeySql,
-    "text_burstiness"       -> TextAnalysis.textBurstinessSql,
-    "text_bigram_coverage"  -> TextAnalysis.textBigramCoverageSql,
-    "text_branching_entropy" -> TextAnalysis.textBranchingEntropySql,
-    "mix_js_divergence"     -> Sampling.mixJsDivergenceSql,
-    "embed_pq_distortion"   -> Similarity.embedPqDistortionSql,
-    "corpus_shuffle_shard"  -> Sampling.corpusShuffleShardSql,
-    "split_contamination"   -> Sampling.splitContaminationSql,
-    "split_ngram_decontam"  -> Sampling.splitNgramDecontamSql,
-    "split_semantic_decontam" -> Similarity.splitSemanticDecontamSql,
-    "mix_domains"           -> Sampling.mixDomainsSql,
-    "dsir_importance"       -> Sampling.dsirImportanceSql,
-    "mix_temperature"       -> Sampling.mixTemperatureSql,
-    "corpus_prep"           -> Pipeline.corpusPrepSql,
-    "corpus_attrition"      -> Pipeline.corpusAttritionSql,
-    "dedup_substr"          -> Dedup.dedupSubstrSql,
-    "dedup_suffix_array"    -> Dedup.dedupSuffixArraySql,
-    "dedup_incr"            -> Dedup.dedupIncrementalSql,
-    "graph_pagerank"        -> Graph.graphPagerankSql,
-    "graph_triangles"       -> Graph.graphTrianglesSql,
-    "graph_bfs"             -> Graph.graphBfsSql,
-    "graph_sssp"            -> Graph.graphSsspSql,
-    "graph_label_propagation" -> Graph.graphLabelPropSql,
-    "graph_kcore"           -> Graph.graphKcoreSql,
-    "graph_hits"            -> Graph.graphHitsSql,
-    "graph_common_neighbors" -> Graph.graphCommonNeighborsSql,
-    "graph_jaccard_links"   -> Graph.graphJaccardLinksSql,
-    "graph_clustering_coeff" -> Graph.graphClusteringCoeffSql,
-    "graph_modularity"      -> Graph.graphModularitySql,
-    "graph_assortativity"   -> Graph.graphAssortativitySql,
-    "ann_bruteforce_topk"   -> Similarity.annBruteforceTopkSql,
-    "ann_ivf_topk"          -> Similarity.annIvfTopkSql,
-    "ann_filtered_topk"     -> Similarity.annFilteredTopkSql,
-    "ann_range_search"      -> Similarity.annRangeSearchSql,
-    "ann_multiprobe_lsh"    -> Similarity.annMultiprobeLshSql,
-    "eval_clustering"       -> Similarity.evalClusteringSql,
-    "eval_knn_label"        -> Similarity.evalKnnLabelSql,
-    "ann_hard_negatives"    -> Similarity.annHardNegativesSql,
-    "ann_kmeans_topk"       -> Similarity.annKmeansTopkSql,
-    "ann_lsh_buckets"       -> Similarity.annLshBucketsSql,
-    "ann_rerank"            -> Similarity.annRerankSql,
-    "ann_pq_topk"           -> Similarity.annPqTopkSql,
-    "ann_ivfpq_topk"        -> Similarity.annIvfpqTopkSql,
-    "embed_matryoshka"      -> Similarity.embedMatryoshkaSql,
-    "ann_hybrid_rrf"        -> Similarity.annHybridRrfSql,
-    "dedup_embedding"       -> Similarity.dedupEmbeddingSql,
-    "dedup_semantic"        -> Similarity.dedupSemanticSql,
-    "ann_nndescent"         -> Similarity.annNndescentSql,
-    "eval_retrieval"        -> Similarity.evalRetrievalSql,
-    "media_features"        -> Multimodal.mediaFeaturesSql,
-    "media_frames"          -> Multimodal.mediaFramesSql,
-    "media_dedup"           -> Multimodal.mediaDedupSql,
-    "media_frame_dedup"     -> Multimodal.mediaFrameDedupSql,
-    "media_phash"           -> Multimodal.mediaPhashSql,
-    "media_resize"          -> Multimodal.mediaResizeSql,
-    "join_asof_clicks"      -> JoinsExt.joinAsofClicksSql,
-    "join_asof_native"      -> JoinsExt.joinAsofClicksSql, // same semantics, native exec
-    "join_asof_nearest"     -> JoinsExt.joinAsofNearestSql,
-    "join_range_price"      -> JoinsExt.joinRangePriceSql,
-    "join_interval_overlap" -> JoinsExt.joinIntervalOverlapSql,
-    "agg_grouping_sets"     -> Relational.aggGroupingSetsSql,
-    "agg_percentiles"       -> Relational.aggPercentilesSql,
-    "agg_pivot"             -> Relational.aggPivotSql,
-    "agg_approx"            -> Relational.aggApproxSql,
-    "agg_argmax"            -> Relational.aggArgmaxSql,
-    "window_range_frame"    -> Relational.windowRangeFrameSql,
-    "map_functions"         -> Relational.mapFunctionsSql,
-    "subquery_correlated"   -> Relational.subqueryCorrelatedSql,
-    "text_tfidf"            -> TextAnalysis.textTfidfSql,
-    "kmv_distinct"          -> Sketches.kmvDistinctSql,
-    "kmv_overlap"           -> Sketches.kmvOverlapSql,
-    "quantile_sketch"       -> Sketches.quantileSketchSql,
-    "hll_distinct"          -> Sketches.hllDistinctSql,
-    "hll_native"            -> Sketches.hllDistinctSql, // same semantics, native UDAF
+  /** Every query's DataFrame function, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    table.map(e => e.name -> e.build).toMap
 
-    "cms_heavy_hitters"     -> Sketches.cmsHeavyHittersSql,
-    "bloom_membership"      -> Sketches.bloomMembershipSql,
-    "data_profile"          -> Profiling.dataProfileSql,
-    "stats_ks_drift"        -> Profiling.statsKsDriftSql,
-    "stats_psi_drift"       -> Profiling.statsPsiDriftSql,
-    "stats_chi2_drift"      -> Profiling.statsChi2DriftSql,
-    "layout_zorder"         -> Layout.layoutZorderSql,
-    "layout_binpack"        -> Layout.layoutBinpackSql
-  )
+  /** Every query's DuckDB oracle SQL, by name: the same key set as `queries`. */
+  lazy val oracleSql: Map[String, String] = table.map(e => e.name -> e.oracle).toMap
 }

@@ -26,7 +26,8 @@ final class CappedLongBuffer(val limit: Int) {
  * `collect_list` over a long column with a hard retention cap [EXT] —
  * the bounded-state posting-list builder for the df-capped inverted-index
  * family ([[graft.operators.Dedup.shinglePairCountsFromHashed]],
- * [[graft.operators.Sampling.splitNgramDecontam]]).
+ * [[graft.operators.Sampling.splitNgramDecontam]]) and the capped MinHash
+ * LSH buckets (`Dedup.bucketsOf`, cap [[graft.operators.Dedup.MaxBucketDocs]]).
  *
  * Those queries aggregate `(count(*) AS df, collect_list(doc_id))` per
  * token/shingle hash and then DISCARD rows with `df > cap` (boilerplate:

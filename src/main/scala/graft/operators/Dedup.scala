@@ -257,12 +257,21 @@ object Dedup {
     * the corpus and the run). The `spark.graft.hofPairs` A/B gate is
     * deleted with that proof. */
   private def bucketPairs(banded: DataFrame): DataFrame =
-    banded
-      .groupBy(col("band"), col("sig"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+    bucketsOf(banded)
       .filter(size(col("ids")) > 1 && size(col("ids")) <= MaxBucketDocs)
-      .select(explode(
-        graft.functions.CombinationPairs.combinationPairs(col("ids"))).as("p"))
+      .select(explode(graft.functions.CombinationPairs
+        .combinationPairs(sort_array(col("ids")))).as("p"))
+
+  /** Each (band, sig) bucket's doc ids, unordered. The collector stops
+    * RETAINING at MaxBucketDocs + 1 ids, so a templated band signature
+    * shared by millions of docs costs one bucket that many longs of
+    * executor buffer, not millions; the retained size is min(occupancy,
+    * cap + 1), so a caller's `size(ids) <= MaxBucketDocs` filter keeps
+    * exactly the buckets within the cap, with complete lists. */
+  private def bucketsOf(banded: DataFrame): DataFrame =
+    banded.groupBy(col("band"), col("sig"))
+      .agg(graft.functions.CollectLongsCapped
+        .collectLongsCapped(col("doc_id"), MaxBucketDocs + 1).as("ids"))
 
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
     minhashPairsOf(t(spark, dir, "documents"))
@@ -360,9 +369,7 @@ object Dedup {
   private[operators] def componentsOf(pairs: DataFrame): DataFrame = {
     // Lazy cut: the shuffle stages of `pairs` run here; the first round's
     // action computes and stores the blocks every later round reads.
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))),
-      eager = false)
+    val edges = Checkpoints.cut(Graph.undirected(pairs), eager = false)
     // No cut and no priming action on the initial label table (r18): its
     // consumers are the first round's join + union inside ONE
     // action, and the duplicated distinct subtree is deduplicated by
@@ -966,9 +973,7 @@ object Dedup {
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
     val newDocs = docs.filter(col("source") === "src0")
-    val oldBuckets = bandedSignaturesOf(docs.filter(col("source") =!= "src0"))
-      .groupBy(col("band"), col("sig"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
+    val oldBuckets = bucketsOf(bandedSignaturesOf(docs.filter(col("source") =!= "src0")))
       .filter(size(col("ids")) <= MaxBucketDocs)
     val perNew = bandedSignaturesOf(newDocs)
       .join(oldBuckets, Seq("band", "sig"))

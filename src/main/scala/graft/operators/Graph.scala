@@ -38,13 +38,21 @@ object Graph {
   /** Damping factor 0.85 in micro-units. */
   private val Damp = 850000L
 
+  /** The undirected edge list of a pair list: each row plus its copy with
+    * doc_a and doc_b swapped. Any other column (SSSP's `w`) rides along. */
+  private[operators] def undirected(pairs: DataFrame): DataFrame =
+    pairs.union(pairs.select(pairs.columns.toIndexedSeq.map {
+      case "doc_a" => col("doc_b").as("doc_a")
+      case "doc_b" => col("doc_a").as("doc_b")
+      case c => col(c)
+    }: _*))
+
   /** PageRank over the undirected LSH candidate graph: nodes are the
     * documents appearing in any candidate pair, every edge runs both
     * ways. Returns (doc_id, deg, pr) with pr in micro-units. */
   def graphPagerank(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.dedupMinhashLsh(spark, dir)
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val edges = Checkpoints.cut(undirected(pairs))
     val deg = Checkpoints.cut(
       edges.groupBy(col("doc_a").as("doc_id")).agg(count(lit(1)).as("deg")))
     var pr = deg.withColumn("pr", lit(PrOne))
@@ -170,8 +178,7 @@ object Graph {
     * [[Dedup.componentsOf]]. Seeds are the nodes divisible by
     * [[BfsSeedMod]]; distances are cut at [[BfsMaxHops]]. */
   private[operators] def bfsOf(pairs: DataFrame): DataFrame = {
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val edges = Checkpoints.cut(undirected(pairs))
     // no cut on the seed table (r18): its two round-1 consumers (the
     // visited side of the merge and the initial frontier) are the same
     // subtree inside ONE action, so exchange reuse already computes the
@@ -248,9 +255,7 @@ object Graph {
   private[operators] def ssspOf(wpairs: DataFrame): DataFrame = {
     val w = (lit(5L) - col("n_bands")).as("w")
     val edges = Checkpoints.cut(
-      wpairs.select(col("doc_a"), col("doc_b"), w)
-        .union(wpairs.select(col("doc_b").as("doc_a"),
-                             col("doc_a").as("doc_b"), w)))
+      undirected(wpairs.select(col("doc_a"), col("doc_b"), w)))
     // no cut on the seed table — same round-1 exchange-reuse argument as
     // [[bfsOf]]
     val seeds = edges.select(col("doc_a").as("doc_id")).distinct()
@@ -352,8 +357,7 @@ object Graph {
     * per round, the r17 BuildProf finding: ~95% of this family's wall
     * time is per-action fixed cost) bought nothing. */
   private[operators] def lpaLabelsOf(pairs: DataFrame): DataFrame = {
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val edges = Checkpoints.cut(undirected(pairs))
     var lab = edges.select(col("doc_a").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
     for (_ <- 1 to LpaIters) {
@@ -414,8 +418,7 @@ object Graph {
   /** The peeling loop over any undirected pair list (doc_a, doc_b) —
     * factored for direct testing on crafted graphs. */
   private[operators] def kcoreOf(pairs: DataFrame): DataFrame = {
-    val edges = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val edges = Checkpoints.cut(undirected(pairs))
     var alive = edges.select(col("doc_a").as("doc_id")).distinct()
     for (_ <- 1 to KcoreRounds) {
       // Lazy cut (r18): the peel's join and partial degree count run as
@@ -537,8 +540,7 @@ object Graph {
     // also computed the community-size aggregate + join only to discard
     // it, then cut the selection a second time (r18).
     val lab = lpaLabelsOf(pairs)
-    val edges = pairs.union(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    val edges = undirected(pairs)
     val deg = edges.groupBy(col("doc_a").as("doc_id"))
       .agg(count(lit(1)).as("deg"))
     val m = pairs.agg(count(lit(1)).as("m"))
@@ -618,8 +620,7 @@ object Graph {
    */
   def graphAssortativity(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Checkpoints.cut(Dedup.dedupMinhashLsh(spark, dir))
-    val edges = pairs.union(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    val edges = undirected(pairs)
     val deg = edges.groupBy(col("doc_a").as("doc_id"))
       .agg(count(lit(1)).as("deg"))
     // No broadcast hints: the degree table is NODE-count-sized (the LSH
@@ -824,8 +825,7 @@ object Graph {
   def graphCommonNeighbors(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.dedupMinhashLsh(spark, dir)
       .select(col("doc_a"), col("doc_b"))
-    val e = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val e = Checkpoints.cut(undirected(pairs))
     val deg = e.groupBy(col("doc_a").as("mid")).agg(count(lit(1)).as("deg"))
     val wedges = e
       .groupBy(col("doc_b").as("mid"))
@@ -883,8 +883,7 @@ object Graph {
   def graphJaccardLinks(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.dedupMinhashLsh(spark, dir)
       .select(col("doc_a"), col("doc_b"))
-    val e = Checkpoints.cut(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val e = Checkpoints.cut(undirected(pairs))
     val deg = e.groupBy(col("doc_a").as("nid")).agg(count(lit(1)).as("deg"))
     val wedges = e
       .groupBy(col("doc_b").as("mid"))
@@ -949,7 +948,7 @@ object Graph {
   def graphClusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
     val half = Checkpoints.cut(Dedup.dedupMinhashLsh(spark, dir)
       .select(col("doc_a"), col("doc_b")))
-    val deg = half.union(half.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    val deg = undirected(half)
       .groupBy(col("doc_a").as("doc_id")).agg(count(lit(1)).as("deg"))
     val wedges = half.as("e1")
       .join(half.as("e2"), col("e1.doc_b") === col("e2.doc_a"))

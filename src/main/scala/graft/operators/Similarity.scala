@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Tables._
 
@@ -46,6 +47,12 @@ object Similarity {
   private def cosine(a: Column, na: Column, b: Column, nb: Column): Column =
     dot(a, b) / (na * nb)
 
+  /** The first `k` rows of each `by` partition of `df` under `order` (score
+    * first, tie-break column last), numbered 1..k in column `rank`. */
+  private def topK(df: DataFrame, by: String, k: Int, rank: String, order: Column*): DataFrame =
+    df.withColumn(rank, row_number().over(Window.partitionBy(col(by)).orderBy(order: _*)))
+      .filter(col(rank) <= k)
+
   /** Corpus with double-cast vectors and precomputed L2 norms. */
   private def corpus(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "embeddings")
@@ -79,11 +86,7 @@ object Similarity {
     val scored = c.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
               cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
+    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
       .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
   }
 
@@ -114,17 +117,13 @@ object Similarity {
     * associative, so the centroid — and every downstream cosine — is
     * bit-identical under any partitioning and in the DuckDB oracle. */
   def annIvfTopk(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
     // search only the probed clusters (equi-join on label)
     val scored = c.join(broadcast(ivfProbes(c)), Seq("label"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
               cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
+    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
       .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
   }
 
@@ -134,17 +133,13 @@ object Similarity {
     * each query ranks centroids by cosine and keeps its [[NProbe]] probed
     * labels. Output (q_id, qv, qn, label) — one row per (query, probe). */
   private def ivfProbes(c: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cent = labelCentroids(c)
     val q = c.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("ccos").desc, col("label").asc)
-    q.crossJoin(broadcast(cent))
+    val cands = q.crossJoin(broadcast(cent))
       .select(col("q_id"), col("qv"), col("qn"), col("label"),
               cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("ccos"))
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= NProbe)
+    topK(cands, "q_id", NProbe, "crnk", col("ccos").desc, col("label").asc)
       .select(col("q_id"), col("qv"), col("qn"), col("label"))
   }
 
@@ -287,7 +282,6 @@ object Similarity {
    * [[annIvfTopk]]; ties break (cos DESC, neighbor_id ASC).
    */
   def annFilteredTopk(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
     val allowed = t(spark, dir, "documents")
       .filter(col("lang") === FilterLang)
@@ -297,10 +291,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
               cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
+    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
       .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
   }
 
@@ -342,7 +333,6 @@ object Similarity {
    * Determinism: same L2R cosines; ties break (cos DESC, neg_id ASC).
    */
   def annHardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
     val q = c.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -351,10 +341,7 @@ object Similarity {
       .select(col("q_id"), col("q_label"), col("vec_id").as("neg_id"),
               col("label").as("neg_label"),
               cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neg_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
+    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neg_id").asc)
       .select(col("q_id"), col("q_label"), col("rnk"),
               col("neg_id"), col("neg_label"), col("cos"))
   }
@@ -600,23 +587,16 @@ object Similarity {
     val cent = centDf(spark, cents)
     val q = c.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    import org.apache.spark.sql.expressions.Window
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("ccos").desc, col("cluster").asc)
-    val probes = q.crossJoin(broadcast(cent))
+    val cands = q.crossJoin(broadcast(cent))
       .select(col("q_id"), col("qv"), col("qn"), col("cluster"),
               cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("ccos"))
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= NProbe)
+    val probes = topK(cands, "q_id", NProbe, "crnk", col("ccos").desc, col("cluster").asc)
       .select(col("q_id"), col("qv"), col("qn"), col("cluster"))
     val scored = assigned.join(broadcast(probes), Seq("cluster"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
               cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
+    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
       .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
   }
 
@@ -778,7 +758,6 @@ object Similarity {
    * literals; cosines are L2R folds; ranking ties break on neighbor_id.
    */
   def annMultiprobeLsh(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
       .withColumn("bucket", lshBucket(col("v")))
     val probes = c.filter(col("vec_id") < NumQueries)
@@ -792,10 +771,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
               cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
+    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
       .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
   }
 
@@ -1215,7 +1191,6 @@ object Similarity {
     }
 
   def annPqTopk(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
     val books = pqTrainBooks(c)
     // encode the corpus: 8 literal-projection argmins, zero shuffle
@@ -1227,10 +1202,7 @@ object Similarity {
     val scored = codes.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
               pqAdcTerms(books).reduceLeft(_ + _).as("adc_ip"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_ip").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
+    topK(scored, "q_id", K, "rnk", col("adc_ip").desc, col("neighbor_id").asc)
       .select(col("q_id"), col("rnk"), col("neighbor_id"), col("adc_ip"))
   }
 
@@ -1328,7 +1300,6 @@ object Similarity {
    * the scores hash-match exactly, like [[annPqTopk]].
    */
   def annIvfpqTopk(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
     // coarse quantizer: per-label quantized-mean centroids (reuse the
     // k-means centroid aggregate keyed by label; norm column unused and
@@ -1360,13 +1331,10 @@ object Similarity {
     // constant and its residual-ADC lookup table on the probe row
     val q = c.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("qc_ip").desc, col("label").asc)
-    val probes = q.crossJoin(broadcast(cent))
+    val cands = q.crossJoin(broadcast(cent))
       .select(col("q_id"), col("qv"), col("label"),
               dot(col("qv"), col("cv")).as("qc_ip"))
-      .withColumn("crnk", row_number().over(wq))
-      .filter(col("crnk") <= NProbe)
+    val probes = topK(cands, "q_id", NProbe, "crnk", col("qc_ip").desc, col("label").asc)
       .withColumn("lut", pqLut(books, col("qv")))
       .select(col("q_id"), col("label"), col("qc_ip"), col("lut"))
     val scored = codes.join(broadcast(probes), Seq("label"))
@@ -1374,10 +1342,7 @@ object Similarity {
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
               (col("qc_ip") +: pqAdcTerms(books)).reduceLeft(_ + _)
                 .as("adc_ip"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_ip").desc, col("neighbor_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= K)
+    topK(scored, "q_id", K, "rnk", col("adc_ip").desc, col("neighbor_id").asc)
       .select(col("q_id"), col("rnk"), col("neighbor_id"), col("adc_ip"))
   }
 
@@ -1456,25 +1421,23 @@ object Similarity {
    * rows against K·|Q| rows.
    */
   def embedMatryoshka(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
     val qf = c.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val fullTop = c.join(broadcast(qf), col("vec_id") =!= col("q_id"))
+    // the same per-query top K over full and truncated cosines
+    def top(scored: DataFrame): DataFrame =
+      topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
+    val fullTop = top(c.join(broadcast(qf), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-              cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= K)
+              cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos")))
       .select(col("q_id"), col("neighbor_id"))
     val tc = c.select(col("vec_id"), slice(col("v"), 1, MatryDim).as("tv"))
       .withColumn("tn", sqrt(dot(col("tv"), col("tv"))))
     val qt = tc.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("tv").as("qv"), col("tn").as("qn"))
-    val truncTop = tc.join(broadcast(qt), col("vec_id") =!= col("q_id"))
+    val truncTop = top(tc.join(broadcast(qt), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-              cosine(col("qv"), col("qn"), col("tv"), col("tn")).as("cos"))
-      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= K)
+              cosine(col("qv"), col("qn"), col("tv"), col("tn")).as("cos")))
       .select(col("q_id"), col("neighbor_id"), lit(1L).as("hit"))
     fullTop.join(truncTop, Seq("q_id", "neighbor_id"), "left")
       .groupBy(col("q_id"))
@@ -1535,7 +1498,6 @@ object Similarity {
    * floor(·+0.5) per-vector max-abs scheme.
    */
   def annRerank(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
     val qz = c
       .withColumn("scale", array_max(transform(col("v"), x => abs(x))))
@@ -1552,10 +1514,7 @@ object Similarity {
               // aggregate(zip_with) pair was the corpus × queries hot loop
               graft.functions.VectorFunctions
                 .dotProductLong(col("qq"), col("q")).as("iscore"))
-    val wc = Window.partitionBy(col("q_id"))
-      .orderBy(col("iscore").desc, col("neighbor_id").asc)
-    val cand = coarse.withColumn("crnk", row_number().over(wc))
-      .filter(col("crnk") <= RerankC)
+    val cand = topK(coarse, "q_id", RerankC, "crnk", col("iscore").desc, col("neighbor_id").asc)
       .select(col("q_id"), col("neighbor_id"))
     val qFull = c.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -1565,10 +1524,7 @@ object Similarity {
       .join(broadcast(qFull), "q_id")
       .select(col("q_id"), col("neighbor_id"),
               cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    val wk = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    exact.withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= K)
+    topK(exact, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
       .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
   }
 
@@ -1736,7 +1692,6 @@ object Similarity {
    * (cos DESC, id ASC), votes on (count DESC, label ASC).
    */
   def evalKnnLabel(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir).withColumn("bkt", lshBucket(col("v")))
     val q = c.select(col("bkt"), col("vec_id").as("q_id"),
                      col("label").as("q_label"), col("v").as("qv"), col("nrm").as("qn"))
@@ -1755,10 +1710,7 @@ object Similarity {
     // (candidates per (q_id, task) stay near K under this LSH's bucket
     // occupancy, so map-side combining reduces little — the opposite
     // regime from window_topk's customer histories).
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos6").desc, col("n_id").asc)
-    val pred = scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= KnnK)
+    val pred = topK(scored, "q_id", KnnK, "rnk", col("cos6").desc, col("n_id").asc)
       .groupBy(col("q_id"), col("q_label"), col("n_label"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("q_id"), col("q_label"))
@@ -1891,16 +1843,12 @@ object Similarity {
    * PARTITIONED BY LABEL — never a global window.
    */
   def embedCentroidOutliers(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
     val scored = c.join(broadcast(labelCentroids(c)), Seq("label"))
       .select(col("label"), col("vec_id"),
         round(cosine(col("v"), col("nrm"), col("cv"), col("cn")), 6)
           .as("cos_centroid"))
-    val w = Window.partitionBy(col("label"))
-      .orderBy(col("cos_centroid").asc, col("vec_id").asc)
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= OutlierK)
+    topK(scored, "label", OutlierK, "rnk", col("cos_centroid").asc, col("vec_id").asc)
       .select(col("label"), col("rnk"), col("vec_id"), col("cos_centroid"))
   }
 
@@ -1945,7 +1893,6 @@ object Similarity {
    * order — no libm, bit-identical on any engine.
    */
   def annHybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
     val q = c.filter(col("vec_id") === 0)
       .select(col("v").as("qv"), col("nrm").as("qn"))
@@ -2115,7 +2062,6 @@ object Similarity {
    * it adds over the raw LSH seed.
    */
   def annNndescent(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = corpus(spark, dir)
     // ids-first: the banded self-join and its dedup carry ONLY
     // (band, blk, vec_id) — never the 0.5 KB vectors; vectors are
@@ -2144,9 +2090,8 @@ object Similarity {
               cosine(col("va"), col("na"), col("vb"), col("nb")).as("cos")))
     val seedEdges = seedPairs.select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
       .union(seedPairs.select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
-    val wSrc = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst").asc)
-    val g = seedEdges.withColumn("rnk", row_number().over(wSrc))
-      .filter(col("rnk") <= NnK).select(col("src"), col("dst"))
+    val g = topK(seedEdges, "src", NnK, "rnk", col("cos").desc, col("dst").asc)
+      .select(col("src"), col("dst"))
     val u = Checkpoints.cut(
       g.union(g.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     val cand = u.as("e1").join(u.as("e2"), col("e1.dst") === col("e2.src"))
@@ -2159,9 +2104,7 @@ object Similarity {
     val scored = cand.join(ca, "qa").join(cb, "qb")
       .select(col("qa"), col("qb"),
               cosine(col("va"), col("na"), col("vb"), col("nb")).as("cos"))
-    val wq = Window.partitionBy(col("qa")).orderBy(col("cos").desc, col("qb").asc)
-    scored.withColumn("rnk", row_number().over(wq))
-      .filter(col("rnk") <= NnK)
+    topK(scored, "qa", NnK, "rnk", col("cos").desc, col("qb").asc)
       .select(col("qa").as("vec_id"), col("rnk"), col("qb").as("neighbor_id"), col("cos"))
   }
 

@@ -7,9 +7,9 @@ import java.nio.file.{Files, Paths}
  * physical plan of every gated query at sf0.001 to `docs/PLANS.md`, so a
  * judge can audit plan shapes (exchanges, pushed filters, codegen spans,
  * join strategies) without running Spark. Expression IDs, local paths,
- * RDD call-site line numbers, lambda class names and identity hashes are
- * normalized out, so two runs write the same file and a regenerated dump
- * differs only where a plan changed.
+ * RDD ids, RDD call-site line numbers, lambda class names and identity
+ * hashes are normalized out, so two runs write the same file and a
+ * regenerated dump differs only where a plan changed.
  *
  * Regenerate after plan-affecting changes:
  *   sbt "runMain graft.tools.PlanDump"
@@ -30,6 +30,7 @@ object PlanDump {
       .replaceAll("file:[^\\s,\\]\\)]+", "file:<path>") // local paths
       .replaceAll("plan_id=\\d+", "plan_id=x")
       .replaceAll("Statistics\\([^)]*\\)", "Statistics(<elided>)")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[x]")       // RDD ids
       .replaceAll("at (\\w+\\.scala):\\d+", "at $1")  // RDD call-site lines
       .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda") // lambda class names
       .replaceAll("(?<=[\\w$\\]])@[0-9a-f]{1,8}\\b", "@x") // identity hashes
@@ -37,8 +38,8 @@ object PlanDump {
     val sb = new StringBuilder
     sb.append("# Physical plans of every gated query (sf0.001)\n\n")
     sb.append("Generated by `graft.tools.PlanDump`; expression IDs, paths,\n")
-    sb.append("statistics, call-site lines, lambda names and identity hashes\n")
-    sb.append("normalized. Streaming gates show the drained sink's plan —\n")
+    sb.append("statistics, RDD ids, call-site lines, lambda names and identity\n")
+    sb.append("hashes normalized. Streaming gates show the drained sink's plan —\n")
     sb.append("their incremental plans live in the streaming checkpoint logs,\n")
     sb.append("not here.\n")
     for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {

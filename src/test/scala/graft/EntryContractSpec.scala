@@ -23,6 +23,15 @@ class EntryContractSpec extends AnyFunSuite {
     assert((SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet).isEmpty)
   }
 
+  test("the registry declares 214 queries under 214 distinct names") {
+    // a name declared twice would fail SparkEntry's own require when the
+    // table loads; this pins the surface size the maps are derived from
+    val names = SparkEntry.table.map(_.name)
+    assert(names.size == 214)
+    assert(names.distinct.size == 214)
+    assert(SparkEntry.queries.size == 214 && SparkEntry.oracleSql.size == 214)
+  }
+
   /** Files under src/main/scala (relative paths, sorted) containing `text`. */
   private def mainSourcesWith(text: String): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")

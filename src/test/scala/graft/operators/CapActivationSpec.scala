@@ -54,10 +54,16 @@ class CapActivationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = (0L until 300L).map(i => i -> clone) ++
                Seq(1000L -> base, 1001L -> (base.split(" ").init.mkString(" ") + " zzz"))
     val d = writeDocs("minhash_cap", docs)
-    val pairs = Dedup.dedupMinhashLsh(spark, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val q = Dedup.dedupMinhashLsh(spark, d)
+    val pairs = q.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1000L, 1001L)),
       s"expected only the near-dup pair, got ${pairs.size} pairs: ${pairs.take(5)}")
+    // each bucket's posting list stops retaining at cap + 1 ids, so the
+    // 300-clone bucket never holds all 300 in one buffer
+    val plan = q.queryExecution.executedPlan.toString
+    assert(s"graft_collect_longs_capped\\(doc_id#\\d+L?, ${Dedup.MaxBucketDocs + 1},".r
+      .findFirstIn(plan).nonEmpty, plan)
+    assert(!plan.contains("collect_list"), plan)
   }
 
   test("SimHash bucket cap: a 300-clone prefix bucket is dropped; duplicates in small buckets survive") {
