@@ -41,9 +41,8 @@ case class HllSketchAgg(
 
   private val M = 256
 
-  // SQL-registered as graft_hll_sketch: pin the input to LongType so a
-  // non-long column fails (or casts) at ANALYSIS, not with a runtime
-  // ClassCastException inside update()
+  // pin the input to LongType so a non-long column fails (or casts) at
+  // ANALYSIS, not with a runtime ClassCastException inside update()
   override def inputTypes: Seq[GraftShims.AbstractType] = Seq(LongType)
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
@@ -93,9 +92,4 @@ object HllSketch {
   def hllSketch(hash: Column): Column =
     GraftShims.column(
       HllSketchAgg(GraftShims.expression(hash)).toAggregateExpression())
-
-  /** Make `graft_hll_sketch` callable from SQL in a live session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftShims.registerFunction(spark, "graft_hll_sketch",
-      children => HllSketchAgg(children.head).toAggregateExpression())
 }

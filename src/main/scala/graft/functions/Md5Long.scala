@@ -67,9 +67,4 @@ object Md5Long60 {
   /** Column form over a string/binary column. */
   def md5Long60(c: Column): Column =
     GraftShims.column(Md5Long60(GraftShims.expression(c)))
-
-  /** Make `graft_md5long` callable from SQL in a running session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftShims.registerFunction(spark, "graft_md5long",
-      children => Md5Long60(children.head))
 }

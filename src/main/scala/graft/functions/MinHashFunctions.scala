@@ -24,8 +24,7 @@ import org.apache.spark.sql.types._
  * subexpression elimination outside whole-stage codegen). This
  * expression takes the shingle strings directly and runs md5 → mod →
  * 16 running mins in one fused loop (the [[WsTokens]]/[[NgramsJoined]]
- * treatment applied to the minhash family); an `array<bigint>` input
- * skips the md5 and hashes pre-hashed values.
+ * treatment applied to the minhash family).
  *
  * BIT-EXACT equivalence to the HOF form (MinHashSigsSpec pins it): same
  * [[Md5Long60.hash]] digest-to-long, same Java long arithmetic (inputs
@@ -43,55 +42,29 @@ case class MinHashSigs(child: Expression, numHashes: Int, m: Long)
   require(m > 0, "MinHashSigs needs m > 0")
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) | ArrayType(StringType, _) =>
-      TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires an array<bigint> or array<string> argument, got $t")
+      s"$prettyName requires an array<string> argument, got $t")
   }
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "graft_minhash_sigs"
 
-  private def fromStrings: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == StringType
-
   override def nullSafeEval(a: Any): Any =
-    if (fromStrings)
-      MinHashSigs.computeStrings(a.asInstanceOf[ArrayData], numHashes, m)
-    else
-      MinHashSigs.compute(a.asInstanceOf[ArrayData], numHashes, m)
+    MinHashSigs.computeStrings(a.asInstanceOf[ArrayData], numHashes, m)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val fn = if (fromStrings) "computeStrings" else "compute"
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.MinHashSigs.$fn($a, $numHashes, ${m}L);")
-  }
+      s"${ev.value} = graft.functions.MinHashSigs.computeStrings($a, $numHashes, ${m}L);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object MinHashSigs {
-  /** Running mins of ((2i+1)·x + (i+1)·7919) % m over the array's
-    * non-null elements, one fused pass. Called from generated code (named
-    * `compute`, not `eval` — see [[NgramsJoined.compute]] for why). */
-  def compute(hs: ArrayData, numHashes: Int, m: Long): ArrayData = {
-    val mins = new Array[Long](numHashes)
-    java.util.Arrays.fill(mins, Long.MaxValue)
-    var seen = false
-    val n = hs.numElements()
-    var j = 0
-    while (j < n) {
-      if (!hs.isNullAt(j)) {
-        seen = true
-        step(hs.getLong(j), mins, numHashes, m)
-      }
-      j += 1
-    }
-    finish(seen, mins, numHashes)
-  }
-
-  /** Same mins fed by `md5Long(s) % m` per non-null shingle string —
-    * the md5 pass fused in. Called from generated code. */
+  /** Running mins of ((2i+1)·x + (i+1)·7919) % m, x = `md5Long(s) % m`
+    * per non-null shingle string, in one fused pass. Called from
+    * generated code (named `computeStrings`, not `eval` — see
+    * [[NgramsJoined.compute]] for why). */
   def computeStrings(ss: ArrayData, numHashes: Int, m: Long): ArrayData = {
     val mins = new Array[Long](numHashes)
     java.util.Arrays.fill(mins, Long.MaxValue)
@@ -123,7 +96,7 @@ object MinHashSigs {
     else new GenericArrayData(mins)
 
   /** Column form: all `numHashes` minhash values as array<bigint>, over
-    * either pre-hashed array<bigint> or raw shingle array<string>. */
+    * a raw shingle array<string>. */
   def minHashSigs(hs: Column, numHashes: Int, m: Long): Column =
     GraftShims.column(MinHashSigs(GraftShims.expression(hs), numHashes, m))
 }

@@ -343,10 +343,4 @@ object VectorFunctions {
   def pqAssign(v: Column, books: Array[Array[Array[Double]]],
                codes: Array[Array[Long]], subDim: Int): Column =
     GraftShims.column(PqAssign(GraftShims.expression(v), books, codes, subDim))
-
-  /** Make `graft_dot` callable from SQL in an already-running session
-    * (new sessions can use [[graft.plans.GraftExtensions]] instead). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    GraftShims.registerFunction(spark, "graft_dot",
-      children => DotProduct(children.head, children(1)))
 }

@@ -36,17 +36,16 @@ trait MrApp extends Serializable {
 /**
  * App registry — the Spark-native twin of the reference's runtime dylib
  * loader (`common/src/lib.rs:22-39`, `declare_app!` macro `:12-20`).
- * Three resolution tiers, first hit wins:
+ * Two resolution tiers, first hit wins:
  *
- *  1. runtime registrations ([[MrApps.register]] — tests, embedding code);
- *  2. classpath DISCOVERY via `java.util.ServiceLoader`: any jar carrying
+ *  1. classpath DISCOVERY via `java.util.ServiceLoader`: any jar carrying
  *     a `META-INF/services/graft.mr.MrApp` entry contributes its apps by
  *     name with no compile-time registration — the faithful analogue of
  *     the reference's `load_app(name)` dlopen: on a cluster,
  *     `spark-submit --jars app.jar` is `worker -a app_name`'s "drop a
  *     dylib next to the binary" (the service file plays `declare_app!`,
  *     exporting the well-known entry point);
- *  3. the built-in apps compiled into the engine jar.
+ *  2. the built-in apps compiled into the engine jar.
  */
 object MrApps {
   private val builtin: Map[String, MrApp] = Seq(
@@ -67,16 +66,11 @@ object MrApps {
       .iterator().asScala.map(a => a.name -> a).toMap
   }
 
-  @volatile private var extra: Map[String, MrApp] = Map.empty
-
-  /** Register an app at runtime (tests, user extensions). */
-  def register(app: MrApp): Unit = synchronized { extra += app.name -> app }
-
   def load(name: String): MrApp =
-    extra.getOrElse(name, discovered.getOrElse(name, builtin.getOrElse(name,
+    discovered.getOrElse(name, builtin.getOrElse(name,
       throw new NoSuchElementException(
-        s"unknown MR app '$name'; known: ${names.mkString(", ")}"))))
+        s"unknown MR app '$name'; known: ${names.mkString(", ")}")))
 
   def names: Seq[String] =
-    (builtin.keySet ++ discovered.keySet ++ extra.keySet).toSeq.sorted
+    (builtin.keySet ++ discovered.keySet).toSeq.sorted
 }

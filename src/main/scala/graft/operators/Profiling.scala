@@ -100,8 +100,6 @@ object Profiling {
   /** Salt for the drift check's two-sample split over event ids (mirrors
     * [[Sampling]]'s 80/10/10 scheme on its own key space). */
   private[operators] val KsSalt = "graft_ks_v1:"
-  private val KsTrainUpTo = 80
-  private val KsValidUpTo = 90
 
   /** α=0.05 two-sample KS critical coefficient c(α)² = 1.358², scaled by
     * 10⁴ so the drift test is pure integer arithmetic. */
@@ -130,11 +128,9 @@ object Profiling {
    */
   def statsKsDrift(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bucket = md5Long(concat(lit(KsSalt), col("event_id").cast("string"))) % 100
-    val split = when(bucket < KsTrainUpTo, "train")
-      .when(bucket < KsValidUpTo, "valid").otherwise("test")
     val h = events(spark, dir)
-      .select(col("event_type"), col("value"), split.as("split"))
+      .select(col("event_type"), col("value"),
+              Sampling.splitCol(col("event_id"), KsSalt).as("split"))
       .filter(col("split") =!= "test")
       .groupBy(col("event_type"), col("value"))
       .agg(sum(when(col("split") === "train", 1L).otherwise(0L)).as("a_tr"),
@@ -200,11 +196,9 @@ object Profiling {
    * whose categories correlate with the slice.
    */
   def statsChi2Drift(spark: SparkSession, dir: String): DataFrame = {
-    val bucket = md5Long(concat(lit(Chi2Salt), col("event_id").cast("string"))) % 100
-    val split = when(bucket < KsTrainUpTo, "train")
-      .when(bucket < KsValidUpTo, "valid").otherwise("test")
     val h = events(spark, dir)
-      .select(split.as("split"), col("event_type"))
+      .select(Sampling.splitCol(col("event_id"), Chi2Salt).as("split"),
+              col("event_type"))
       .filter(col("split") =!= "test")
       .groupBy(col("event_type"))
       .agg(sum(when(col("split") === "train", 1L).otherwise(0L)).as("o_tr"),
@@ -243,8 +237,8 @@ object Profiling {
       s"WHEN n_cat - 1 = $df THEN ${c}::BIGINT" }.mkString(" ")
     s"""WITH s AS (
        |  SELECT event_type,
-       |    CASE WHEN $bucket < $KsTrainUpTo THEN 'train'
-       |         WHEN $bucket < $KsValidUpTo THEN 'valid'
+       |    CASE WHEN $bucket < ${Sampling.TrainUpTo} THEN 'train'
+       |         WHEN $bucket < ${Sampling.ValidUpTo} THEN 'valid'
        |         ELSE 'test' END AS split
        |  FROM events),
        |h AS (
@@ -281,8 +275,8 @@ object Profiling {
       s"CAST(('0x' || substring(md5('$KsSalt' || CAST(event_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100"
     s"""WITH s AS (
        |  SELECT event_type, value,
-       |    CASE WHEN $bucket < $KsTrainUpTo THEN 'train'
-       |         WHEN $bucket < $KsValidUpTo THEN 'valid'
+       |    CASE WHEN $bucket < ${Sampling.TrainUpTo} THEN 'train'
+       |         WHEN $bucket < ${Sampling.ValidUpTo} THEN 'valid'
        |         ELSE 'test' END AS split
        |  FROM events),
        |h AS (

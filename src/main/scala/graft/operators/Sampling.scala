@@ -23,30 +23,33 @@ object Sampling {
   private val Salt = "graft_split_v1:"
 
   /** 80/10/10 split boundaries over the 100 hash buckets. */
-  private val TrainUpTo = 80
-  private val ValidUpTo = 90
+  private[operators] val TrainUpTo = 80
+  private[operators] val ValidUpTo = 90
 
-  /** The split assignment over any doc_id column — shared with pipeline
-    * compositions ([[Pipeline.corpusPrep]]); twin of [[splitSqlExpr]]. */
-  private[operators] def splitCol(docId: Column): Column = {
-    val bucket = md5Long(concat(lit(Salt), docId.cast("string"))) % 100
+  /** Hash bucket in [0, 100) of a salted id column. */
+  private def bucketCol(id: Column, salt: String): Column =
+    md5Long(concat(lit(salt), id.cast("string"))) % 100
+
+  /** The 80/10/10 thresholds over a bucket column. */
+  private def splitOf(bucket: Column): Column =
     when(bucket < TrainUpTo, "train")
       .when(bucket < ValidUpTo, "valid")
       .otherwise("test")
-  }
+
+  /** The split assignment over any id column — shared with pipeline
+    * compositions ([[Pipeline.corpusPrep]]) and, under their own salts,
+    * the drift checks ([[Profiling.statsKsDrift]]); twin of
+    * [[splitSqlExpr]]. */
+  private[operators] def splitCol(id: Column, salt: String = Salt): Column =
+    splitOf(bucketCol(id, salt))
 
   /** Per-document split assignment: bucket = md5-hash of the salted doc id
     * mod 100, then fixed 80/10/10 thresholds. Pure map — at 100 TB this
     * pushes down to the scan with zero data movement. */
   def sampleSplit(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
-      .select(col("doc_id"), col("lang"),
-              (md5Long(concat(lit(Salt), col("doc_id").cast("string"))) % 100)
-                .as("bucket"))
-      .withColumn("split",
-        when(col("bucket") < TrainUpTo, "train")
-          .when(col("bucket") < ValidUpTo, "valid")
-          .otherwise("test"))
+      .select(col("doc_id"), col("lang"), bucketCol(col("doc_id"), Salt).as("bucket"))
+      .withColumn("split", splitOf(col("bucket")))
 
   /** The split-assignment SQL expressions, shared with every oracle that
     * composes on the split (e.g. [[splitContamination]]). Defined BEFORE

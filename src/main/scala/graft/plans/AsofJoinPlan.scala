@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
  * As-of join as a first-class operator: logical node → planner strategy →
  * physical sort-merge exec. This is tier (c) of the custom-operator
  * ladder (whole-operator semantics as `LogicalPlan` + `SparkStrategy` +
- * `SparkPlan`, registered through `SparkSessionExtensions`) — the
+ * `SparkPlan`, the strategy installed by the query that uses it) — the
  * declarative union+window composition in
  * [[graft.operators.JoinsExt.asofJoin]] stays as the zero-custom-code
  * twin, and JoinsExtNativeSpec holds the two row-for-row equal.
@@ -45,8 +45,9 @@ case class AsofJoinPlan(left: LogicalPlan, right: LogicalPlan,
     copy(left = newLeft, right = newRight)
 }
 
-/** Planner rule lowering [[AsofJoinPlan]] to [[AsofJoinExec]]. Inject via
-  * [[GraftExtensions]] or `spark.experimental.extraStrategies`. */
+/** Planner rule lowering [[AsofJoinPlan]] to [[AsofJoinExec]]; the
+  * query that builds the node installs it in
+  * `spark.experimental.extraStrategies`. */
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoinPlan(l, r, lk, rk, lt, rt, ro) =>
@@ -64,64 +65,6 @@ object AsofJoinStrategy extends SparkStrategy {
 // to the scans' ReadSchema on its own. Verified by a negative-control
 // experiment (a hand-written pruning rule changed nothing) and pinned by
 // AsofJoinNativeSpec's plan-shape test.
-//
-// FILTER pushdown is the opposite story: PushDownPredicate only knows
-// the stock operators, so a Filter sitting on an AsofJoinPlan stays
-// above the join — both children get fully shuffled and merged before a
-// single row is dropped. The rule below closes that gap.
-
-/**
- * Optimizer rule: push filters through [[AsofJoinPlan]].
- *
- *  - A deterministic conjunct referencing only LEFT output moves into
- *    the left child. Safe because the join is left-preserving
- *    exactly-once: every left row yields exactly one output row with its
- *    left attributes unchanged, so filtering before ≡ filtering after.
- *  - A conjunct referencing only the left KEY is additionally MIRRORED
- *    onto the right child with the key attribute substituted — the
- *    as-of twin of Catalyst's equi-join constraint propagation. Safe
- *    because a right row can only ever pair with a left row of equal
- *    key (nulls pair with nulls), and the same deterministic predicate
- *    evaluates identically on equal values: every right row the mirror
- *    drops could only have matched left rows the pushed filter already
- *    dropped.
- *
- * At 100 TB this is the difference between shuffling both full tables
- * into the merge and scanning two pruned parquet partitions: the pushed
- * conjuncts keep sinking through the stock rules into PushedFilters on
- * BOTH scans (plan-shape pinned in AsofJoinNativeSpec).
- *
- * Inject via [[GraftExtensions]] (`injectOptimizerRule`) or, on a live
- * session, `spark.experimental.extraOptimizations`.
- */
-object AsofJoinFilterPushdown
-    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]
-    with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
-  import org.apache.spark.sql.catalyst.plans.logical.Filter
-  import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet}
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, j: AsofJoinPlan) =>
-      val (pushable, rest) = splitConjunctivePredicates(cond)
-        .partition(p => p.deterministic && p.references.subsetOf(j.left.outputSet))
-      if (pushable.isEmpty) f
-      else {
-        val mirrored = (j.leftKey, j.rightKey) match {
-          case (lk: Attribute, rk: Attribute) =>
-            pushable
-              .filter(p => p.references.nonEmpty &&
-                           p.references.subsetOf(AttributeSet(lk :: Nil)))
-              .map(_.transform { case a: Attribute if a.semanticEquals(lk) => rk })
-          case _ => Nil
-        }
-        val newLeft = Filter(pushable.reduce(And), j.left)
-        val newRight =
-          if (mirrored.isEmpty) j.right else Filter(mirrored.reduce(And), j.right)
-        val pushed = j.copy(left = newLeft, right = newRight)
-        if (rest.isEmpty) pushed else Filter(rest.reduce(And), pushed)
-      }
-  }
-}
 
 case class AsofJoinExec(leftKey: Expression, rightKey: Expression,
                         leftTime: Expression, rightTime: Expression,

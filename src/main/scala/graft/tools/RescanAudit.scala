@@ -179,7 +179,7 @@ object RescanAudit extends AdaptiveSparkPlanHelper {
     val unexplained =
       multi.toSeq.flatMap { case (name, dup) => violation(name, dup) } ++
       errs.map(e => s"ERR $e")
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    import graft.Verify.{jsonString => q}
     val entries = multi.map { case (name, dup) =>
       val reason = allowed.get(name).map(_._2).getOrElse("UNEXPLAINED")
       s"${q(name)}: {\"scans\": {${dup.toSeq.sorted.map { case (t, n) => s"${q(t)}: $n" }.mkString(", ")}}, " +

@@ -20,13 +20,6 @@ object GraftShims {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Register a native function into a LIVE session's registry (the
-    * extensions path only applies at session construction). */
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
-
   /** Block until the listener bus has delivered every event posted so
     * far (`listenerBus` is `private[spark]`). */
   def drainListeners(spark: SparkSession): Unit =

@@ -86,78 +86,6 @@ class AsofJoinNativeSpec extends AnyFunSuite {
            s"no scan should read the unused wide columns:\n${scans.mkString("\n")}")
   }
 
-  test("AsofJoinFilterPushdown pushes left filters through, mirrors key filters to the right") {
-    import graft.plans.{AsofJoinFilterPushdown, AsofJoinPlan => AsofNode}
-    if (!spark.experimental.extraOptimizations.contains(AsofJoinFilterPushdown))
-      spark.experimental.extraOptimizations =
-        AsofJoinFilterPushdown +: spark.experimental.extraOptimizations
-    val (purchases, clicks) = purchasesAndClicks
-    def query() = AsofJoinPlan.asofJoinNative(
-        purchases, clicks, "user_id", "ts_us", "click_id")
-      .filter(col("user_id") < 40 && col("purchase_id") >= 0)
-    val withRule = query()
-    assert(withRule.count() > 0)
-    // the extraOptimizations batch runs AFTER the stock pushdown rules,
-    // so assert the rule's own transformation on the optimized logical
-    // plan: no Filter remains above the as-of node, the left child
-    // filters on user_id, and the right child got the key MIRROR on the
-    // renamed asof_user_id (the full sink-to-scan behavior under the
-    // operator-optimization batch is covered below with GraftExtensions)
-    val opt = withRule.queryExecution.optimizedPlan
-    val joins = opt.collect { case j: graft.plans.AsofJoinPlan => j }
-    assert(joins.size == 1 && opt.isInstanceOf[graft.plans.AsofJoinPlan],
-           s"Filter must be consumed, as-of node at root:\n$opt")
-    val j = joins.head
-    def filters(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-      p.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.sql }.mkString(" ; ")
-    assert(filters(j.left).contains("user_id"), filters(j.left))
-    assert(filters(j.right).contains("asof_user_id"), filters(j.right))
-    // and it must not change a single row: compare against the rule-free run
-    val before = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      before.filterNot(_ == AsofJoinFilterPushdown)
-    try {
-      val cols = Seq("user_id", "purchase_id", "ts_us", "asof_click_id")
-      assert(canon(withRule, cols) == canon(query(), cols))
-    } finally spark.experimental.extraOptimizations = before
-  }
-
-  test("with GraftExtensions the pushed predicates reach PushedFilters on BOTH scans") {
-    import org.apache.spark.sql.SparkSession
-    val prev = SparkSession.getDefaultSession
-    SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()
-    try {
-      // fresh session on the SAME SparkContext, but built through the
-      // extension point — the rule lands inside the operator-optimization
-      // fixed point, where the stock rules keep sinking what it pushes
-      val s2 = SparkSession.builder()
-        .config(graft.operators.Tables.NanosConf, "true")
-        .withExtensions(new graft.plans.GraftExtensions).getOrCreate()
-      val ev = graft.operators.Tables.events(s2, TestSpark.Sf0001)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-                unix_micros(col("ts")).as("ts_us"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"), col("ts_us"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts_us"), col("event_id").as("click_id"))
-      val q = AsofJoinPlan.asofJoinNative(
-          purchases, clicks, "user_id", "ts_us", "click_id")
-        .filter(col("user_id") < 40)
-      assert(q.count() > 0)
-      val scans = q.queryExecution.executedPlan.toString
-        .split("\n").filter(_.contains("PushedFilters")).toSeq
-      assert(scans.size == 2, scans.mkString("\n"))
-      assert(scans.forall(_.contains("LessThan(user_id,40)")),
-             s"user_id predicate must reach BOTH scans:\n${scans.mkString("\n")}")
-    } finally {
-      SparkSession.clearActiveSession()
-      prev.foreach { p =>
-        SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p)
-      }
-    }
-  }
-
   test("randomized corpora: native == declarative across 10 seeds") {
     // Dense random keys/times with heavy collisions — many same-(key,time)
     // ties, empty keys, and left rows before/after all right rows.

@@ -62,6 +62,15 @@ class EntryContractSpec extends AnyFunSuite {
     assert(sleepers.isEmpty, s"Thread.sleep under graft/tools: $sleepers")
   }
 
+  test("Verify.jsonString round-trips control characters through a JSON parser") {
+    // RescanAudit writes Spark error messages (multi-line) through the
+    // same escaper Verify writes oracle_sql.json with
+    val msg = "ERR q: [X] failed\nline 2\twith \"quotes\" \\ and \u0001"
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Verify.jsonString(msg), classOf[String])
+    assert(parsed == msg)
+  }
+
   /** Queries whose correct answer on this data is legitimately empty. */
   private val mayBeEmpty = Set("join_anti",
     // sf0.001's near-dup clusters are cliques: every wedge closes, so

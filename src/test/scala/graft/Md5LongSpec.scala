@@ -48,14 +48,6 @@ class Md5LongSpec extends AnyFunSuite {
     assert(fromCol == fromScala)
   }
 
-  test("graft_md5long is callable from SQL after registration") {
-    graft.functions.Md5Long60.register(spark)
-    val v = spark.sql(
-      "SELECT graft_md5long('abc') = CAST(conv(substring(md5('abc'), 1, 15), 16, 10) AS BIGINT) AS eq,"
-        + " graft_md5long(CAST(NULL AS STRING)) IS NULL AS n").head()
-    assert(v.getBoolean(0) && v.getBoolean(1))
-  }
-
   test("interpreted (non-codegen) eval matches codegen") {
     // nullSafeEval path, as the interpreted projection would run it
     val lit = org.apache.spark.sql.catalyst.expressions.Literal("abc")

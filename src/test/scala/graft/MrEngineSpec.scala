@@ -5,7 +5,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{AnalysisException, GraftShims}
-import org.apache.spark.sql.functions.{col, input_file_name}
+import org.apache.spark.sql.functions.{col, explode, input_file_name, lit, split}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.mr.{MrApp, MrApps, MrJob}
 
@@ -223,15 +223,6 @@ class MrEngineSpec extends AnyFunSuite {
     }
   }
 
-  /** Registers `graft_mr_reduce` into the live session: the same builder
-    * GraftExtensions injects. */
-  private def registerMrReduce(): Unit =
-    org.apache.spark.sql.GraftShims.registerFunction(spark, "graft_mr_reduce",
-      children => {
-        val app = MrApps.load(children.head.eval().toString)
-        graft.functions.HolisticReduce(children(1), children(2), app.reduce _)
-      })
-
   /** Looks through adaptive query stages for the plan nodes `pf` matches. */
   private def planNodes[B](df: org.apache.spark.sql.Dataset[_])(
       pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, B]): Seq[B] =
@@ -251,14 +242,12 @@ class MrEngineSpec extends AnyFunSuite {
       def reduce(k: String, vs: Seq[String]): String =
         (if (vs == vs.sorted) "sorted:" else "UNSORTED:") + vs.mkString(",")
     }
-    MrApps.register(probe)
-    registerMrReduce()
     val values = (0 until 200).map(i => f"v$i%03d")
-    scala.util.Random.shuffle(values).map(v => MrJob.KV("v", v)).toDS()
-      .repartition(16).createOrReplaceTempView("merge_probe_in")
-    val result = spark.sql(
-      """SELECT key, graft_mr_reduce('merge_probe', key, value) AS value
-        |FROM merge_probe_in GROUP BY key""".stripMargin).as[MrJob.KV]
+    val result = scala.util.Random.shuffle(values).map(v => MrJob.KV("v", v)).toDS()
+      .repartition(16)
+      .groupBy(col("key"))
+      .agg(graft.functions.HolisticReduce(probe.reduce _)(col("key"), col("value")).as("value"))
+      .as[MrJob.KV]
     assert(result.collect().toSeq == Seq(MrJob.KV("v", "sorted:" + values.mkString(","))))
     // one partial buffer per input partition crossed the aggregate's shuffle
     import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
@@ -322,20 +311,17 @@ class MrEngineSpec extends AnyFunSuite {
     assert(pairs(MrJob.run(ds, probe, 2)) == expected)
   }
 
-  test("graft_mr_reduce is callable from SQL (extensions-equivalent registration)") {
-    registerMrReduce()
+  test("HolisticReduce under a plain groupBy matches the sequential wc oracle") {
     import spark.implicits._
     val input = corpus(seed = 5, nDocs = 10)
-    spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
-      .createOrReplaceTempView("mr_in")
-    val viaSql = spark.sql(
-      """SELECT key, graft_mr_reduce('wc', key, value) AS value
-        |FROM (SELECT w AS key, '1' AS value
-        |      FROM mr_in LATERAL VIEW explode(split(value, '[^A-Za-z]+')) t AS w
-        |      WHERE w <> '')
-        |GROUP BY key ORDER BY key""".stripMargin).as[MrJob.KV].collect().toSeq
-    val oracle = MrJob.runSequential(MrApps.load("wc"), input)
-    assert(viaSql.map(kv => (kv.key, kv.value)) == oracle)
+    val app = MrApps.load("wc")
+    val got = spark.createDataset(input.map { case (k, v) => MrJob.KV(k, v) })
+      .select(explode(split(col("value"), "[^A-Za-z]+")).as("key"), lit("1").as("value"))
+      .filter(col("key") =!= "")
+      .groupBy(col("key"))
+      .agg(graft.functions.HolisticReduce(app.reduce _)(col("key"), col("value")).as("value"))
+      .orderBy(col("key")).as[MrJob.KV].collect().toSeq
+    assert(got.map(kv => (kv.key, kv.value)) == MrJob.runSequential(app, input))
   }
 
   test("unknown app name fails with the known-apps listing (E11 registry)") {

@@ -4,23 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 
-/** Native DotProduct expression: SQL registration, codegen correctness,
-  * and bit-equality with the HOF fold it replaced. */
+/** Native vector expressions: codegen correctness and bit-equality with
+  * the HOF formulations they replaced. */
 class VectorFunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  test("graft_dot is callable from SQL after registration") {
-    VectorFunctions.register(spark)
-    val d = spark.sql(
-      "SELECT graft_dot(array(1.0d, 2.0d, 3.0d), array(4.0d, 5.0d, 6.0d)) AS d")
-      .head.getDouble(0)
-    assert(d == 32.0)
-  }
-
-  test("extensions class installs without error") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(ext) // must not throw
-  }
 
   test("native expression is bit-identical to the HOF fold on random vectors") {
     import spark.implicits._
@@ -36,8 +23,8 @@ class VectorFunctionsSpec extends AnyFunSuite {
     val mismatches = both.filter(col("native") =!= col("hof")).count()
     assert(mismatches == 0)
     // null propagation
-    assert(spark.sql(
-      "SELECT graft_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1.0d)) IS NULL AS n")
+    assert(spark.range(1).select(VectorFunctions.dotProduct(
+        lit(null).cast("array<double>"), array(lit(1.0))).isNull)
       .head.getBoolean(0))
   }
 

@@ -591,13 +591,11 @@ class CorpusOps3Spec extends AnyFunSuite with BeforeAndAfterAll {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
     assert(rows(Sketches.hllNative(spark, sf)) == rows(Sketches.hllDistinct(spark, sf)))
-    // the SQL-registered form returns the raw 256-register array
-    graft.functions.HllSketch.register(spark)
-    Tables.events(spark, sf)
-      .select(col("event_type"), Tables.md5Long(col("user_id").cast("string")).as("h"))
-      .createOrReplaceTempView("hll_in")
-    val regs = spark.sql(
-      "SELECT event_type, graft_hll_sketch(h) AS regs FROM hll_in GROUP BY 1")
+    // the aggregate itself returns the raw 256-register array
+    val regs = Tables.events(spark, sf)
+      .groupBy(col("event_type"))
+      .agg(graft.functions.HllSketch.hllSketch(
+        Tables.md5Long(col("user_id").cast("string"))).as("regs"))
     val collected = regs.select(size(col("regs")).as("n"),
                                 expr("aggregate(regs, 0, (a, r) -> greatest(a, r))").as("mx"))
       .collect()
