@@ -823,14 +823,20 @@ object Dedup {
     // no lineage cut here: the posting-list aggregate is the SOLE
     // consumer of the hashed shingle rows, so tokenize + explode + md5
     // fuse into its map side (the old two-consumer hot-list/anti-join
-    // shape needed the cut; see shinglePairCountsFromHashed)
-    shinglePairCountsFromHashed(
-      t(spark, dir, "documents")
-        .select(col("doc_id"), col("lang"), toks(col("text")).as("ts"))
-        .select(col("doc_id"), explode(shingles3(col("ts"))).as("shingle"),
-                col("lang"))
-        .select(col("doc_id"),
-                md5Long(concat_ws("\u0001", col("lang"), col("shingle"))).as("h")))
+    // shape needed the cut; see shinglePairCountsFromHashed). No
+    // [[shingled]] guard either: it tokenizes each document a second
+    // time and removes no shingle row (NOTES.md).
+    shinglePairCountsFromHashed(hashedShingles(t(spark, dir, "documents")
+      .select(col("doc_id"), col("lang"), shingles3(toks(col("text"))).as("shingles"))))
+
+  /** The hashed shingle table (doc_id, h) of a (doc_id, lang, shingles)
+    * table: each distinct (lang, shingle) becomes one md5-derived 60-bit
+    * key. Shared by [[shinglePairCounts]] (so [[dedupNgramJaccard]] and
+    * [[dedupContainment]]) and [[evalMinhash]]. */
+  private def hashedShingles(sh: DataFrame): DataFrame =
+    sh.select(col("doc_id"), col("lang"), explode(col("shingles")).as("shingle"))
+      .select(col("doc_id"),
+              md5Long(concat_ws("\u0001", col("lang"), col("shingle"))).as("h"))
 
   /** The Jaccard/containment pair machinery over a hashed shingle table
     * (doc_id, h) — also fed by [[evalMinhash]], which shares one
@@ -1095,8 +1101,9 @@ object Dedup {
     * O(corpus-positions) distinct classes; every task here sorts only
     * its own range slice, which is what survives 100 TB. Rank VALUES are
     * identical to `dense_rank() OVER (ORDER BY ra, rb)` (proven in
-    * SuffixArraySpec), so order preservation across doubling rounds —
-    * which prefix doubling requires — is unchanged. */
+    * CorpusOps3Spec's `dedupSuffixArray` and `doublingRound` tests), so
+    * order preservation across doubling rounds — which prefix doubling
+    * requires — is unchanged. */
   private[graft] def classRank(df: DataFrame, out: String): DataFrame = {
     val spark = df.sparkSession
     val classes = df.select(col("ra"), col("rb")).distinct()
@@ -1293,18 +1300,15 @@ object Dedup {
     // pass (the heaviest map work in either): cut `(doc_id, lang,
     // shingles)` once, so the corpus is scanned and shingled exactly
     // once for the whole scorecard. The LSH side signs the shingle
-    // column in the map; the Jaccard side explodes it and hashes each
-    // (lang, shingle) as [[shinglePairCounts]] does. Each side's hash is
+    // column in the map; the Jaccard side hashes it with
+    // [[hashedShingles]], as [[shinglePairCounts]] does. Each side's hash is
     // bit-identical to its standalone query's, so the eval scores
     // exactly the gated [[dedupMinhashLsh]]/[[dedupNgramJaccard]]
     // artifacts.
     val sh = Checkpoints.cut(shingled(t(spark, dir, "documents"), col("lang")))
     val cand = minhashPairsFromBanded(bandedSignaturesFromWide(signaturesOf(sh)))
       .select(col("doc_a"), col("doc_b"), lit(1L).as("in_cand"))
-    val truth = jaccardPairsFrom(shinglePairCountsFromHashed(sh
-        .select(col("doc_id"), col("lang"), explode(col("shingles")).as("shingle"))
-        .select(col("doc_id"),
-                md5Long(concat_ws("\u0001", col("lang"), col("shingle"))).as("h"))))
+    val truth = jaccardPairsFrom(shinglePairCountsFromHashed(hashedShingles(sh)))
       .select(col("doc_a"), col("doc_b"), lit(1L).as("in_truth"))
     cand.join(truth, Seq("doc_a", "doc_b"), "full_outer")
       .agg(

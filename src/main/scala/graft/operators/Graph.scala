@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Tables._
 
@@ -160,65 +160,27 @@ object Graph {
    * runs when a set of documents is flagged (benchmark leaks, takedowns)
    * and everything within k near-dup hops must be reviewed.
    *
-   * Scale shape: textbook semi-naive frontier expansion — each round is
-   * ONE equi-join of the edge list against the current frontier plus one
-   * anti-join against the visited set, so the shuffled data is
+   * Scale shape: [[graphSssp]]'s semi-naive relaxation with unit edge
+   * costs — each round joins the edge list against the frontier only and
+   * merges by `min` into the settled table, so the shuffled data is
    * proportional to the frontier, never the graph; rounds are a fixed
    * unroll (no per-round driver action), with [[Checkpoints.cut]]
-   * keeping the visited-set lineage flat (and durable under the reliable-
-   * checkpoint flag). The oracle is DuckDB's semi-naive recursive CTE —
-   * the same algorithm in the other paradigm, a cross-engine
-   * differential of the whole iteration, like `dedup_components`.
+   * keeping the settled-table lineage flat (and durable under the
+   * reliable-checkpoint flag). The oracle is DuckDB's semi-naive
+   * recursive CTE — an independent check of the shared loop in the other
+   * paradigm, like `dedup_components`.
    */
   def graphBfs(spark: SparkSession, dir: String): DataFrame =
     bfsOf(Dedup.dedupMinhashLsh(spark, dir))
 
-  /** The BFS loop over any undirected pair list (doc_a, doc_b) —
-    * factored for direct testing on crafted graphs, like
-    * [[Dedup.componentsOf]]. Seeds are the nodes divisible by
-    * [[BfsSeedMod]]; distances are cut at [[BfsMaxHops]]. */
-  private[operators] def bfsOf(pairs: DataFrame): DataFrame = {
-    val edges = Checkpoints.cut(undirected(pairs))
-    // no cut on the seed table (r18): its two round-1 consumers (the
-    // visited side of the merge and the initial frontier) are the same
-    // subtree inside ONE action, so exchange reuse already computes the
-    // seed distinct once — the cut bought a Catalyst-planned action.
-    val seeds = edges.select(col("doc_a").as("doc_id")).distinct()
-      .filter(pmod(col("doc_id"), lit(BfsSeedMod)) === 0)
-    var dist = seeds.withColumn("dist", lit(0))
-    var frontier = dist.select(col("doc_id"))
-    for (r <- 1 to BfsMaxHops) {
-      // ONE cut and ONE aggregate per round (r18): the old form ran
-      // frontier-expand → distinct → anti-join → cut, then union → cut —
-      // two Catalyst-planned actions and three exchanges per round of
-      // dataflow, with ~95% of this family's wall time per-action fixed
-      // cost (BuildProf r17). Instead the raw neighbor expansion streams
-      // into the SAME min-aggregate that merges the visited set: a
-      // visited node carries its dist on both columns, a reached node
-      // carries (r, null) — min(d) is the new dist (visited dists are
-      // all < r, so a visited node keeps its dist), min(old) witnesses
-      // prior membership (null ⇔ newly reached ⇔ next frontier). The
-      // neighbor distinct() collapses inside the aggregate, map-side
-      // combined. Row-for-row identical to union(dist, reached ∖ dist).
-      val reached = edges.join(frontier, edges("doc_a") === frontier("doc_id"))
-        .select(col("doc_b").as("doc_id"), lit(r).as("d"),
-                lit(null).cast("int").as("old"))
-      // Lazy cut: its shuffle stage runs here; its final aggregate runs
-      // once, in the first job that reads it (the next round's cut), and
-      // both consumers (visited side + frontier) read those blocks
-      val merged = Checkpoints.cut(
-        dist.select(col("doc_id"), col("dist").as("d"), col("dist").as("old"))
-          .union(reached)
-          .groupBy(col("doc_id"))
-          .agg(min(col("d")).as("dist"), min(col("old")).as("settled"))
-          .select(col("doc_id"), col("dist"),
-                  col("settled").isNull.as("isnew")),
-        eager = false)
-      dist = merged.select(col("doc_id"), col("dist"))
-      frontier = merged.filter(col("isnew")).select(col("doc_id"))
-    }
-    dist.select(col("doc_id"), col("dist").cast("int").as("dist"))
-  }
+  /** BFS over any undirected pair list (doc_a, doc_b) — factored for
+    * direct testing on crafted graphs, like [[Dedup.componentsOf]]: the
+    * [[relaxOf]] loop with every edge weighing 1. With unit weights a
+    * settled node never improves, so "improved" is exactly BFS's "newly
+    * reached" and the cost is the hop distance, cut at [[BfsMaxHops]]. */
+  private[operators] def bfsOf(pairs: DataFrame): DataFrame =
+    relaxOf(pairs, lit(1L), BfsMaxHops)
+      .select(col("doc_id"), col("cost").cast("int").as("dist"))
 
   // ------------------------------------------------------------- graph_sssp
 
@@ -248,33 +210,37 @@ object Graph {
   def graphSssp(spark: SparkSession, dir: String): DataFrame =
     ssspOf(Dedup.minhashWeightedPairsOf(t(spark, dir, "documents")))
 
-  /** The bounded-relaxation loop over any weighted undirected pair list
-    * (doc_a, doc_b, n_bands) — factored for direct testing on crafted
-    * graphs, like [[bfsOf]]. Seeds are the nodes divisible by
-    * [[BfsSeedMod]]. */
-  private[operators] def ssspOf(wpairs: DataFrame): DataFrame = {
-    val w = (lit(5L) - col("n_bands")).as("w")
+  /** The weighted pass over any undirected pair list (doc_a, doc_b,
+    * n_bands) — factored for direct testing on crafted graphs, like
+    * [[bfsOf]]: the [[relaxOf]] loop with edges costing 5 − n_bands. */
+  private[operators] def ssspOf(wpairs: DataFrame): DataFrame =
+    relaxOf(wpairs, lit(5L) - col("n_bands"), SsspMaxHops)
+
+  /** The bounded-relaxation loop of [[bfsOf]] and [[ssspOf]] over the
+    * undirected pairs (doc_a, doc_b, …) with edge cost `w` (a long
+    * expression over the pair columns): (doc_id, cost), the min cost over
+    * paths of at most `hops` edges from the seeds (the nodes divisible by
+    * [[BfsSeedMod]]). */
+  private def relaxOf(pairs: DataFrame, w: Column, hops: Int): DataFrame = {
     val edges = Checkpoints.cut(
-      undirected(wpairs.select(col("doc_a"), col("doc_b"), w)))
-    // no cut on the seed table — same round-1 exchange-reuse argument as
-    // [[bfsOf]]
+      undirected(pairs.select(col("doc_a"), col("doc_b"), w.as("w"))))
+    // no cut on the seed table (r18): its two round-1 consumers (the
+    // settled side of the merge and the initial frontier) are the same
+    // subtree inside ONE action, so exchange reuse already computes the
+    // seed distinct once — the cut bought a Catalyst-planned action.
     val seeds = edges.select(col("doc_a").as("doc_id")).distinct()
       .filter(pmod(col("doc_id"), lit(BfsSeedMod)) === 0)
     var dist = seeds.withColumn("cost", lit(0L))
     var frontier = dist
-    for (_ <- 1 to SsspMaxHops) {
-      // ONE cut and ONE aggregate per round (r18, the bfsOf merge applied
-      // to weighted relaxation): the old form ran relax → min-aggregate →
-      // left-join+filter → cut, then union → re-aggregate → cut — two
-      // Catalyst-planned actions and three exchanges per round, ~95% of
-      // wall time per-action fixed cost (BuildProf r17). Instead the raw
-      // relaxations stream into the SAME min-aggregate that merges the
-      // settled table: a settled node carries its cost on both columns, a
-      // relaxation carries (cost + w, null) — min(c) is the new settled
-      // cost (integer min is associative, so this equals the old
-      // candidate-min-then-union-min), min(old) recovers the prior
-      // settled cost (null ⇔ new node). improved ⇔ new or the round beat
-      // the settled cost; improved rows' cost IS the winning relaxation.
+    for (_ <- 1 to hops) {
+      // ONE cut and ONE aggregate per round (r18; the r17 form's two
+      // actions and three exchanges per round were ~95% fixed cost): the
+      // raw relaxations stream into the SAME min-aggregate that merges
+      // the settled table. A settled node carries its cost on both
+      // columns, a relaxation carries (cost + w, null) — min(c) is the new
+      // settled cost (integer min is associative), min(old) the prior one
+      // (null ⇔ new node). improved ⇔ new or the round beat the settled
+      // cost; improved rows' cost IS the winning relaxation.
       val relax = edges.join(frontier, edges("doc_a") === frontier("doc_id"))
         .select(col("doc_b").as("doc_id"), (col("cost") + col("w")).as("c"),
                 lit(null).cast("long").as("old"))

@@ -46,8 +46,8 @@ object Layout {
    * suppkey span are ~1/2^(ZBits/2) of their domains (the `area` column),
    * so a point predicate on EITHER key prunes ~15/16 of buckets, where a
    * partkey-sorted linear layout leaves l_suppkey unprunable (every file
-   * spans the whole supplier domain). LayoutSpec asserts both pruning
-   * fractions against the linear-sort strawman.
+   * spans the whole supplier domain). CorpusOps3Spec's `layoutZorder`
+   * test asserts both pruning fractions against the linear-sort strawman.
    *
    * Scale shape: the z value is a pure per-row map (pushes to the scan);
    * the audit is ONE aggregate keyed by the 256-value bucket domain. The

@@ -705,6 +705,31 @@ object Sampling {
   private val KlBuckets = 512L
   private val KlScale = 1000000000L
 
+  /** The add-one smoothing grid of [[mixKlDivergence]] and
+    * [[mixJsDivergence]]: tokens hash to [[KlBuckets]] md5 buckets, ONE
+    * corpus-scan aggregate counts them per (source, b), and the dense
+    * sources × buckets grid carries each cell's count `c_sb` (0 if
+    * absent), the source total `n_s`, the corpus marginal `c_b` and the
+    * corpus total `n`. Everything after the aggregate is arithmetic on
+    * its KB-sized result; no join ever carries text. */
+  private def smoothingGrid(spark: SparkSession, dir: String): DataFrame = {
+    val toks = t(spark, dir, "documents")
+      .select(col("source"),
+              explode(graft.functions.TextFunctions.wsTokens(col("text"))).as("tok"))
+      .select(col("source"), (md5Long(col("tok")) % KlBuckets).as("b"))
+    // four consumers below — cut so the scan+hash pass runs once
+    val sb = Checkpoints.cut(
+      toks.groupBy(col("source"), col("b")).agg(count(lit(1)).as("c_sb")),
+      eager = false)
+    val qb = sb.groupBy(col("b")).agg(sum(col("c_sb")).as("c_b"))
+    val ns = sb.groupBy(col("source")).agg(sum(col("c_sb")).as("n_s"))
+    val nAll = broadcast(sb.agg(sum(col("c_sb")).as("n")))
+    ns.crossJoin(broadcast(spark.range(KlBuckets).select(col("id").as("b"))))
+      .join(sb, Seq("source", "b"), "left").na.fill(0L, Seq("c_sb"))
+      .join(broadcast(qb), Seq("b"), "left").na.fill(0L, Seq("c_b"))
+      .crossJoin(nAll)
+  }
+
   /**
    * Per-source KL divergence from the corpus token distribution [EXT] —
    * the domain-shift meter a mixing pass reads before setting weights:
@@ -718,31 +743,12 @@ object Sampling {
    * p·ln(p/q) is quantized ONCE to nano-nats, so the per-source total is
    * an exact integer sum — never a float fold whose order could differ.
    *
-   * Scale shape: ONE corpus-scan aggregate to (source, bucket) counts;
-   * everything after (corpus marginals, totals, the sources × 512
-   * smoothing grid, the term table) is arithmetic on that KB-sized
-   * result — the dense grid here is sketch-sized (sources × buckets),
-   * intrinsic to smoothing, and independent of corpus size. No join
-   * ever carries text.
+   * Scale shape: [[smoothingGrid]] — one corpus-scan aggregate, then
+   * arithmetic on the sketch-sized sources × buckets grid, intrinsic to
+   * smoothing and independent of corpus size.
    */
   def mixKlDivergence(spark: SparkSession, dir: String): DataFrame = {
-    val toks = t(spark, dir, "documents")
-      .select(col("source"),
-              explode(graft.functions.TextFunctions.wsTokens(col("text"))).as("tok"))
-      .select(col("source"), (md5Long(col("tok")) % KlBuckets).as("b"))
-    // four consumers below — cut so the scan+hash pass runs once
-    val sb = Checkpoints.cut(
-      toks.groupBy(col("source"), col("b")).agg(count(lit(1)).as("c_sb")),
-      eager = false)
-    val qb = sb.groupBy(col("b")).agg(sum(col("c_sb")).as("c_b"))
-    val ns = sb.groupBy(col("source")).agg(sum(col("c_sb")).as("n_s"))
-    val nAll = broadcast(sb.agg(sum(col("c_sb")).as("n")))
-    val grid = ns.crossJoin(
-      broadcast(spark.range(KlBuckets).select(col("id").as("b"))))
-    val terms = grid
-      .join(sb, Seq("source", "b"), "left").na.fill(0L, Seq("c_sb"))
-      .join(broadcast(qb), Seq("b"), "left").na.fill(0L, Seq("c_b"))
-      .crossJoin(nAll)
+    val terms = smoothingGrid(spark, dir)
       .select(col("source"), col("n_s"), expr(
         s"""CAST(round(((CAST(c_sb + 1 AS DOUBLE) / CAST(n_s + $KlBuckets AS DOUBLE))
            |  * ln((CAST(c_sb + 1 AS DOUBLE) / CAST(n_s + $KlBuckets AS DOUBLE))
@@ -801,26 +807,10 @@ object Sampling {
    * fp columns carry 2·JS and the double `js_nats` divides by 2·scale
    * at the end, identically in both engines.
    *
-   * Scale shape: identical to the KL gate — one corpus-scan aggregate to
-   * (source, bucket), then arithmetic on the sources × 512 grid.
+   * Scale shape: the KL gate's [[smoothingGrid]].
    */
   def mixJsDivergence(spark: SparkSession, dir: String): DataFrame = {
-    val toks = t(spark, dir, "documents")
-      .select(col("source"),
-              explode(graft.functions.TextFunctions.wsTokens(col("text"))).as("tok"))
-      .select(col("source"), (md5Long(col("tok")) % KlBuckets).as("b"))
-    val sb = Checkpoints.cut(
-      toks.groupBy(col("source"), col("b")).agg(count(lit(1)).as("c_sb")),
-      eager = false)
-    val qb = sb.groupBy(col("b")).agg(sum(col("c_sb")).as("c_b"))
-    val ns = sb.groupBy(col("source")).agg(sum(col("c_sb")).as("n_s"))
-    val nAll = broadcast(sb.agg(sum(col("c_sb")).as("n")))
-    val grid = ns.crossJoin(
-      broadcast(spark.range(KlBuckets).select(col("id").as("b"))))
-    val withPq = grid
-      .join(sb, Seq("source", "b"), "left").na.fill(0L, Seq("c_sb"))
-      .join(broadcast(qb), Seq("b"), "left").na.fill(0L, Seq("c_b"))
-      .crossJoin(nAll)
+    val withPq = smoothingGrid(spark, dir)
       .selectExpr("source", "n_s",
         s"CAST(c_sb + 1 AS DOUBLE) / CAST(n_s + $KlBuckets AS DOUBLE) AS p",
         s"CAST(c_b + 1 AS DOUBLE) / CAST(n + $KlBuckets AS DOUBLE) AS q")

@@ -54,11 +54,28 @@ object Similarity {
       .filter(col(rank) <= k)
 
   /** Corpus with double-cast vectors and precomputed L2 norms. */
-  private def corpus(spark: SparkSession, dir: String): DataFrame =
+  private[operators] def corpus(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
               col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+
+  /** The query batch: the [[NumQueries]] smallest vec_ids of the corpus
+    * `c` as (q_id, qv, qn). Read by [[annBruteforceTopk]], [[ivfProbes]]
+    * (so every IVF query), [[annPqTopk]], [[annIvfpqTopk]],
+    * [[embedMatryoshka]] and [[annRerank]]. */
+  private def queryBatch(c: DataFrame): DataFrame =
+    c.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
+
+  /** Each query's [[K]] best-scored neighbors of `scored` (q_id,
+    * neighbor_id, cos) as (q_id, rnk, neighbor_id, cos), ties to the
+    * smaller neighbor_id: the ranking of [[annBruteforceTopk]],
+    * [[annIvfTopk]], [[annFilteredTopk]], [[annKmeansTopk]],
+    * [[annMultiprobeLsh]], [[embedMatryoshka]] and [[annRerank]]. */
+  private def nearestK(scored: DataFrame): DataFrame =
+    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
+      .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
 
   /** DuckDB twins: double-cast corpus with norms; sequential-fold dot. */
   private def dotSql(a: String, b: String): String =
@@ -81,13 +98,9 @@ object Similarity {
     * rank per query with a deterministic tiebreak. */
   def annBruteforceTopk(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val q = c.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    nearestK(c.join(broadcast(queryBatch(c)), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-              cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
-      .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
+              cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos")))
   }
 
   val annBruteforceTopkSql: String =
@@ -109,48 +122,59 @@ object Similarity {
     * each query probes its NProbe nearest centroids and searches only those
     * clusters — the candidate set arrives via an equi-join on `label`, so
     * at 100 TB only the probed fraction of the corpus is ever scored.
-    *
-    * Centroid means are computed over 1e-6-quantized components summed as
-    * exact integers, NOT `avg` over doubles: double summation is
-    * accumulation-order-dependent across partitions/engines, and a last-ulp
-    * centroid wobble could flip a probe (cluster) ranking. Integer sums are
-    * associative, so the centroid — and every downstream cosine — is
-    * bit-identical under any partitioning and in the DuckDB oracle. */
+    * Centroids are [[quantizedMean]]s, so every cosine is bit-identical
+    * under any partitioning and in the DuckDB oracle. */
   def annIvfTopk(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    // search only the probed clusters (equi-join on label)
-    val scored = c.join(broadcast(ivfProbes(c)), Seq("label"))
+    nearestK(ivfSearch(c, c, labelCentroids(c), "label"))
+  }
+
+  /** The IVF coarse level, shared by every probe-and-search query (through
+    * [[ivfSearch]]): each query of [[queryBatch]] ranks the centroid
+    * table `cent` (key, cv, cn) by cosine and keeps its [[NProbe]] probed
+    * clusters, ties to the smaller key. Output (q_id, qv, qn, key) — one
+    * row per (query, probe). */
+  private def ivfProbes(c: DataFrame, cent: DataFrame, key: String): DataFrame = {
+    val cands = queryBatch(c).crossJoin(broadcast(cent))
+      .select(col("q_id"), col("qv"), col("qn"), col(key),
+              cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("ccos"))
+    topK(cands, "q_id", NProbe, "crnk", col("ccos").desc, col(key).asc)
+      .select(col("q_id"), col("qv"), col("qn"), col(key))
+  }
+
+  /** The probe-and-search step of [[annIvfTopk]], [[annRangeSearch]],
+    * [[annFilteredTopk]] and [[annKmeansTopk]]: each `cands` row (vec_id,
+    * v, nrm, key) in a cluster [[ivfProbes]] picked is scored against the
+    * probing query by cosine, the query itself excluded — an equi-join on
+    * the key, so only the probed clusters are ever scored. Output (q_id,
+    * neighbor_id, cos). */
+  private def ivfSearch(c: DataFrame, cands: DataFrame, cent: DataFrame,
+                        key: String): DataFrame =
+    cands.join(broadcast(ivfProbes(c, cent, key)), Seq(key))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
               cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
-      .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
-  }
 
-  /** The IVF coarse level, shared by [[annIvfTopk]] and
-    * [[annFilteredTopk]]: per-label quantized-mean centroids (element-wise
-    * explode → exact integer partial-agg → rebuild ordered by dim), then
-    * each query ranks centroids by cosine and keeps its [[NProbe]] probed
-    * labels. Output (q_id, qv, qn, label) — one row per (query, probe). */
-  private def ivfProbes(c: DataFrame): DataFrame = {
-    val cent = labelCentroids(c)
-    val q = c.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val cands = q.crossJoin(broadcast(cent))
-      .select(col("q_id"), col("qv"), col("qn"), col("label"),
-              cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("ccos"))
-    topK(cands, "q_id", NProbe, "crnk", col("ccos").desc, col("label").asc)
-      .select(col("q_id"), col("qv"), col("qn"), col("label"))
-  }
-
-  /** Per-label quantized-mean centroid table (label, cv, cn): element-wise
-    * explode → exact integer partial-agg → rebuild ordered by dim, with
-    * L2 norms. Shared by [[ivfProbes]] and [[evalClustering]]. */
-  private def labelCentroids(c: DataFrame): DataFrame =
-    c.select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim"))
+  /** The one centroid mean: `m`, the mean of `x` per `keys` group, over
+    * 1e-6-quantized components summed as exact integers, NOT `avg` over
+    * doubles: double summation is accumulation-order-dependent across
+    * partitions and engines, and a last-ulp centroid wobble could flip a
+    * probe ranking. Integer sums are associative, so the mean is
+    * bit-identical under any partitioning and in the oracle. Every
+    * centroid is this aggregate: [[labelCentroids]], [[trainCents]] and
+    * both [[pqTrainBooks]] passes. */
+  private def quantizedMean(rows: DataFrame, keys: String*): DataFrame =
+    rows.groupBy(keys.map(col): _*)
       .agg((sum(floor(col("x") * lit(1e6))).cast("double")
               / (count(lit(1)).cast("double") * lit(1e6))).as("m"))
+
+  /** Per-label quantized-mean centroid table (label, cv, cn): element-wise
+    * explode → [[quantizedMean]] → rebuild ordered by dim, with L2 norms.
+    * Shared by [[annIvfTopk]], [[annRangeSearch]], [[annFilteredTopk]],
+    * [[evalClustering]], [[embedCentroidOutliers]] and [[annIvfpqTopk]]. */
+  private[operators] def labelCentroids(c: DataFrame): DataFrame =
+    quantizedMean(c.select(col("label"), posexplode(col("v")).as(Seq("dim", "x"))),
+                  "label", "dim")
       .groupBy(col("label"))
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
                      s => s.getField("m")).as("cv"))
@@ -232,11 +256,7 @@ object Similarity {
    */
   def annRangeSearch(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    c.join(broadcast(ivfProbes(c)), Seq("label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-              cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-      .filter(col("cos") >= RangeCos)
+    ivfSearch(c, c, labelCentroids(c), "label").filter(col("cos") >= RangeCos)
   }
 
   /** Oracle: identical probe CTEs, the same threshold in place of the
@@ -286,13 +306,8 @@ object Similarity {
     val allowed = t(spark, dir, "documents")
       .filter(col("lang") === FilterLang)
       .select(col("doc_id").as("vec_id"))
-    val scored = c.join(allowed, Seq("vec_id"), "left_semi")
-      .join(broadcast(ivfProbes(c)), Seq("label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-              cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
-      .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
+    nearestK(ivfSearch(c, c.join(allowed, Seq("vec_id"), "left_semi"),
+                       labelCentroids(c), "label"))
   }
 
   /** Oracle: identical probe CTEs; the pre-filter is an IN-subquery
@@ -484,23 +499,9 @@ object Similarity {
     * together. */
   private val KmIters = 1
 
-  /** Quantized centroid table of an assignment: per-cluster element-wise
-    * mean over 1e-6-quantized components summed as exact integers (same
-    * determinism argument as [[annIvfTopk]]); cluster count is k (tiny), so
-    * the result is always the broadcast side downstream. */
-  private def kmCentroids(assigned: DataFrame): DataFrame =
-    assigned.select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg((sum(floor(col("x") * lit(1e6))).cast("double")
-              / (count(lit(1)).cast("double") * lit(1e6))).as("m"))
-      .groupBy(col("cluster"))
-      .agg(transform(array_sort(collect_list(struct(col("dim"), col("m")))),
-                     s => s.getField("m")).as("cv"))
-      .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
-
   /** One collected centroid: id, vector, norm. k is tiny (the coarse
     * quantizer), so centroids always travel as plan literals. */
-  private case class Cent(cluster: Long, cv: Seq[Double], cn: Double)
+  private[operators] case class Cent(cluster: Long, cv: Seq[Double], cn: Double)
 
   /** Nearest-centroid assignment (argmax cosine, ties to the smaller
     * cluster id) as a ZERO-SHUFFLE map: one native
@@ -524,39 +525,53 @@ object Similarity {
           cents.map(_.cluster).toArray))
       .select(col("vec_id"), col("label"), col("v"), col("nrm"), col("cluster"))
 
-  /** One Lloyd centroid training pass, collected to literal form: runs
-    * ONLY the (cluster, dim) quantized-mean aggregation (map-side
-    * partial sums, one k·dim-row shuffle) and assembles the vectors +
-    * norms on the driver — the k·dim result (~640 values) is driver-
-    * sized at any corpus scale, so the per-step vector rebuild
-    * (`collect_list` + `array_sort` + a second shuffle stage) the
-    * DataFrame form pays is pure overhead here. Bit-identical to
-    * [[kmCentroids]] + collect: `m` is the same exact-integer-sum
-    * double, the dim sort is the same total order, and the norm is the
-    * same strictly left-to-right fold ([[dot]] semantics) in IEEE
-    * doubles. Sorted by cluster for a stable plan. */
-  private def trainCents(assigned: DataFrame): Seq[Cent] = {
-    val rows = assigned
-      .select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg((sum(floor(col("x") * lit(1e6))).cast("double")
-              / (count(lit(1)).cast("double") * lit(1e6))).as("m"))
-      .collect()
-    rows.groupBy(_.getAs[Number]("cluster").longValue()) // label arrives int32
-      .map { case (cl, rs) =>
-        val cv = rs.sortBy(_.getAs[Number]("dim").longValue())
-          .map(_.getAs[Double]("m")).toSeq
+  /** Driver-side assembly of a collected (keys…, dim, m) [[quantizedMean]]
+    * table into dim-ordered vectors, sorted by key. The table is k·dim
+    * rows at any corpus scale, so this skips the `collect_list` +
+    * `array_sort` shuffle stage [[labelCentroids]] pays. Serves
+    * [[trainCents]] and both [[pqTrainBooks]] passes (so the k-means and
+    * PQ queries). */
+  private def collectVectors(means: DataFrame): Seq[(Seq[Long], Seq[Double])] = {
+    val nk = means.columns.length - 2
+    means.collect().toSeq
+      .groupBy(r => (0 until nk).map(r.getAs[Number](_).longValue())) // label arrives int32
+      .map { case (k, rs) =>
+        (k: Seq[Long], rs.sortBy(_.getAs[Number](nk).longValue()).map(_.getDouble(nk + 1))) }
+      .toSeq.sortBy(_._1)(Ordering.Implicits.seqOrdering)
+  }
+
+  /** One Lloyd centroid training pass, collected to literal form: the
+    * (cluster, dim) [[quantizedMean]] (map-side partial sums, one
+    * k·dim-row shuffle) assembled by [[collectVectors]], with norms.
+    * Bit-identical to [[labelCentroids]] + collect: `m` is the same
+    * exact-integer-sum double, the dim sort is the same total order, and
+    * the norm is the same strictly left-to-right fold ([[dot]] semantics)
+    * in IEEE doubles. Sorted by cluster for a stable plan. Every step of
+    * [[kmeansCents]] (so [[annKmeansTopk]] and [[dedupSemantic]]). */
+  private[operators] def trainCents(assigned: DataFrame): Seq[Cent] =
+    collectVectors(quantizedMean(
+        assigned.select(col("cluster"), posexplode(col("v")).as(Seq("dim", "x"))),
+        "cluster", "dim"))
+      .map { case (Seq(cl), cv) =>
         var acc = 0.0
         cv.foreach(x => acc += x * x) // left-to-right, same fold as dot(cv, cv)
         Cent(cl, cv, math.sqrt(acc))
-      }.toSeq.sortBy(_.cluster)
-  }
+      }
 
-  /** The collected centroids back as a (broadcastable) k-row DataFrame.
-    * Encoded via public tuples, NOT `createDataset(Seq[Cent])`: Cent is
-    * a private class, so Janino cannot access its getters from the
-    * generated serializer and Spark silently falls back to interpreted
-    * row encoding (a CompileException per query at every scale). */
+  /** Seeded k-means, the one Lloyd loop of [[annKmeansTopk]] and
+    * [[dedupSemantic]]: centroids start from the label partition (the
+    * [[annIvfTopk]] quantizer), then [[KmIters]] steps of assign
+    * ([[kmAssign]]) and re-mean ([[trainCents]]), one collect each. */
+  private def kmeansCents(c: DataFrame): Seq[Cent] =
+    (1 to KmIters).foldLeft(trainCents(c.select(col("label").as("cluster"), col("v")))) {
+      (cents, _) => trainCents(kmAssign(c, cents).select(col("cluster"), col("v")))
+    }
+
+  /** The collected centroids back as a (broadcastable) k-row DataFrame,
+    * encoded via tuples: `createDataset(Seq[Cent])` on the then-private
+    * Cent left Janino unable to reach its getters, and Spark silently
+    * fell back to interpreted row encoding (a CompileException per query
+    * at every scale). */
   private def centDf(spark: SparkSession, cents: Seq[Cent]): DataFrame = {
     import spark.implicits._
     cents.map(ct => (ct.cluster, ct.cv, ct.cn)).toDF("cluster", "cv", "cn")
@@ -580,24 +595,8 @@ object Similarity {
    */
   def annKmeansTopk(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    var cents = trainCents(c.select(col("label").as("cluster"), col("v")))
-    for (_ <- 1 to KmIters)
-      cents = trainCents(kmAssign(c, cents).select(col("cluster"), col("v")))
-    val assigned = kmAssign(c, cents)
-    val cent = centDf(spark, cents)
-    val q = c.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val cands = q.crossJoin(broadcast(cent))
-      .select(col("q_id"), col("qv"), col("qn"), col("cluster"),
-              cosine(col("qv"), col("qn"), col("cv"), col("cn")).as("ccos"))
-    val probes = topK(cands, "q_id", NProbe, "crnk", col("ccos").desc, col("cluster").asc)
-      .select(col("q_id"), col("qv"), col("qn"), col("cluster"))
-    val scored = assigned.join(broadcast(probes), Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-              cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
-      .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
+    val cents = kmeansCents(c)
+    nearestK(ivfSearch(c, kmAssign(c, cents), centDf(spark, cents), "cluster"))
   }
 
   /** Oracle: the same fixed Lloyd unroll, CTE-for-CTE. Centroid CTE i is a
@@ -767,12 +766,10 @@ object Similarity {
       .select(col("q_id"), col("qv"), col("qn"),
         when(col("flip") === -1, col("bucket"))
           .otherwise(expr(s"bucket ^ shiftleft(1L, flip)")).as("bucket"))
-    val scored = c.join(probes, Seq("bucket"))
+    nearestK(c.join(probes, Seq("bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
-              cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
-      .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
+              cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos")))
   }
 
   /** Oracle: identical bucket table, the probe set as an unnested flip
@@ -1037,9 +1034,6 @@ object Similarity {
   private def l2sqSql(a: String, b: String): String =
     s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(list_zip($a, $b), p -> (p[1] - p[2]) * (p[1] - p[2]))), (acc, x) -> acc + x)"
 
-  /** Nearest-code assignment for one subspace as a zero-shuffle literal
-    * projection: argmin squared-L2, ties to the smaller code
-    * (`array_min` over (dist, code) structs). */
   /** One subspace codebook as a SINGLE literal array-of-structs (cv, c)
     * in code order — the argmin/LUT lambdas iterate it with `transform`,
     * so the distance arithmetic appears ONCE in the plan instead of
@@ -1064,6 +1058,73 @@ object Similarity {
     graft.functions.VectorFunctions.pqAssign(v,
       books.map(_.map(_._2.toArray).toArray).toArray,
       books.map(_.map(_._1).toArray).toArray, PqSubDim)
+
+  /** PQ codebook training over ANY (vec_id, v) table — [[annPqTopk]]
+    * trains on raw vectors, [[annIvfpqTopk]] on coarse residuals.
+    *
+    * cent0 builds all subspaces in ONE aggregation: the init partition
+    * (vec_id % k — uncorrelated with geometry ≙ standard PQ random
+    * init, deterministic and oracle-reproducible) is shared by every
+    * subspace, so the per-(cluster, dim) quantized means of the full
+    * 64-dim vector slice into the 8 subspace codebooks for free.
+    * (The first formulation aggregated each subspace separately:
+    * 16 shuffles + 16 collects, measured 4.9 s → 2.6 s fused.)
+    * Then ONE Lloyd step: all 8 per-subspace argmin assignments in one
+    * zero-shuffle projection, and all 8 codebooks re-estimated in ONE
+    * aggregation keyed by (subspace, code, dim-in-subspace) — the same
+    * partitions as per-subspace (code, dim), so every mean is
+    * bit-identical to the oracle's per-subspace CTEs. Both passes are a
+    * [[quantizedMean]] assembled on the driver by [[collectVectors]]. */
+  private def pqTrainBooks(cIn: DataFrame): Seq[Seq[(Long, Seq[Double])]] = {
+    val base = cIn.select(col("vec_id"), col("v"))
+    val c0 = collectVectors(quantizedMean(base
+      .select((col("vec_id") % PqK).cast("long").as("cluster"),
+              posexplode(col("v")).as(Seq("dim", "x"))), "cluster", "dim"))
+    val books0: Seq[Seq[(Long, Seq[Double])]] = (0 until PqM).map(m =>
+      c0.map { case (Seq(cl), cv) =>
+        (cl, cv.slice(m * PqSubDim, (m + 1) * PqSubDim)) })
+    // the Lloyd step: assignments by the native argmin ([[pqCodes]])
+    val c1 = collectVectors(quantizedMean(base
+      .select(pqCodes(col("v"), books0).as("cs"),
+              posexplode(col("v")).as(Seq("dim", "x")))
+      .select(expr(s"dim div $PqSubDim").as("sub"),
+              element_at(col("cs"),
+                         expr(s"CAST(dim div $PqSubDim AS INT) + 1"))
+                .as("cluster"),
+              (col("dim") % PqSubDim).as("dim_in"), col("x")),
+      "sub", "cluster", "dim_in"))
+    (0 until PqM).map { m =>
+      c1.collect { case (Seq(sub, cl), cv) if sub == m => (cl, cv) }
+    }
+  }
+
+  /** Zero-shuffle PQ encode: ONE native all-subspace argmin projection
+    * ([[pqCodes]]), fanned out to the `code{m}` columns the ADC lookup
+    * terms read. */
+  private def pqEncode(base: DataFrame, books: Seq[Seq[(Long, Seq[Double])]],
+                       keep: Seq[String]): DataFrame =
+    base.withColumn("cs", pqCodes(col("v"), books))
+      .select(keep.map(col) ++
+        (0 until PqM).map(m => element_at(col("cs"), m + 1).as(s"code$m")): _*)
+
+  /** Per-query ADC lookup table as a plan expression over the literal
+    * codebooks: an array of per-subspace MAPS code → <query subvector m,
+    * codebook m centroid code> (a map, not a position-indexed array, so
+    * the scoring side needs no code→position CASE chain and sparse codes
+    * — a Lloyd step can empty one — need no index bookkeeping). */
+  private def pqLut(books: Seq[Seq[(Long, Seq[Double])]], qv: Column): Column =
+    array((0 until PqM).map { m =>
+      map_from_entries(transform(bookLit(books(m)), cb =>
+        struct(cb.getField("c"), dot(pqSub(m, qv), cb.getField("cv")))))
+    }: _*)
+
+  /** Per-subspace ADC lookup terms over `lut` and `code{m}` columns —
+    * one two-level lookup each; the caller folds them left-to-right
+    * (matching the oracle's `+` chain). */
+  private def pqAdcTerms(books: Seq[Seq[(Long, Seq[Double])]]): Seq[Column] =
+    (0 until PqM).map { m =>
+      element_at(element_at(col("lut"), m + 1), col(s"code$m"))
+    }
 
   /**
    * Product-quantization top-k [EXT] — the billion-scale ANN memory
@@ -1097,106 +1158,12 @@ object Similarity {
    * [[annRerank]] demonstrates. The gate here pins the dataflow and the
    * bit-exact cross-engine determinism, not the synthetic-data recall.
    */
-  /** PQ codebook training over ANY (vec_id, v) table — [[annPqTopk]]
-    * trains on raw vectors, [[annIvfpqTopk]] on coarse residuals.
-    *
-    * cent0 builds all subspaces in ONE aggregation: the init partition
-    * (vec_id % k — uncorrelated with geometry ≙ standard PQ random
-    * init, deterministic and oracle-reproducible) is shared by every
-    * subspace, so the per-(cluster, dim) quantized means of the full
-    * 64-dim vector slice into the 8 subspace codebooks for free.
-    * (The first formulation aggregated each subspace separately:
-    * 16 shuffles + 16 collects, measured 4.9 s → 2.6 s fused.)
-    * Then ONE Lloyd step: all 8 per-subspace argmin assignments in one
-    * zero-shuffle projection, and all 8 codebooks re-estimated in ONE
-    * aggregation keyed by (subspace, code, dim-in-subspace) — the same
-    * partitions as per-subspace (code, dim), so every mean is
-    * bit-identical to the oracle's per-subspace CTEs. */
-  private def pqTrainBooks(cIn: DataFrame): Seq[Seq[(Long, Seq[Double])]] = {
-    val base = cIn.select(col("vec_id"), col("v"))
-    // init codebooks: ONE (cluster, dim) quantized-mean aggregation,
-    // assembled on the driver — k·dim rows, driver-sized at any corpus
-    // scale. (The former collect_list+array_sort vector rebuild was a
-    // second shuffle stage per barrier — the [[trainCents]] scheme
-    // applied to PQ, r12.) Bit-identical: same exact-integer-sum m,
-    // same dim sort order.
-    val rows0 = base
-      .select((col("vec_id") % PqK).cast("long").as("cluster"),
-              posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg((sum(floor(col("x") * lit(1e6))).cast("double")
-              / (count(lit(1)).cast("double") * lit(1e6))).as("m"))
-      .collect()
-    val c0 = rows0.groupBy(_.getAs[Number]("cluster").longValue())
-      .map { case (cl, rs) =>
-        (cl, rs.sortBy(_.getAs[Number]("dim").longValue())
-               .map(_.getAs[Double]("m")).toSeq) }
-      .toSeq.sortBy(_._1)
-    val books0: Seq[Seq[(Long, Seq[Double])]] = (0 until PqM).map(m =>
-      c0.map { case (cl, cv) =>
-        (cl, cv.slice(m * PqSubDim, (m + 1) * PqSubDim)) })
-    // ONE Lloyd step: all 8 per-subspace argmin assignments in one
-    // native projection ([[pqCodes]]), all 8 codebooks re-estimated in
-    // ONE aggregation keyed by (subspace, code, dim-in-subspace) — the
-    // same partitions as per-subspace (code, dim), so every mean is
-    // bit-identical to the oracle's per-subspace CTEs.
-    val rows1 = base
-      .select(pqCodes(col("v"), books0).as("cs"),
-              posexplode(col("v")).as(Seq("dim", "x")))
-      .select(expr(s"dim div $PqSubDim").as("sub"),
-              element_at(col("cs"),
-                         expr(s"CAST(dim div $PqSubDim AS INT) + 1"))
-                .as("cluster"),
-              (col("dim") % PqSubDim).as("dim_in"), col("x"))
-      .groupBy(col("sub"), col("cluster"), col("dim_in"))
-      .agg((sum(floor(col("x") * lit(1e6))).cast("double")
-              / (count(lit(1)).cast("double") * lit(1e6))).as("m"))
-      .collect()
-    (0 until PqM).map { m =>
-      rows1.filter(_.getAs[Number]("sub").longValue() == m)
-        .groupBy(_.getAs[Number]("cluster").longValue())
-        .map { case (cl, rs) =>
-          (cl, rs.sortBy(_.getAs[Number]("dim_in").longValue())
-                 .map(_.getAs[Double]("m")).toSeq) }
-        .toSeq.sortBy(_._1)
-    }
-  }
-
-  /** Zero-shuffle PQ encode: ONE native all-subspace argmin projection
-    * ([[pqCodes]]), fanned out to the `code{m}` columns the ADC lookup
-    * terms read. */
-  private def pqEncode(base: DataFrame, books: Seq[Seq[(Long, Seq[Double])]],
-                       keep: Seq[String]): DataFrame =
-    base.withColumn("cs", pqCodes(col("v"), books))
-      .select(keep.map(col) ++
-        (0 until PqM).map(m => element_at(col("cs"), m + 1).as(s"code$m")): _*)
-
-  /** Per-query ADC lookup table as a plan expression over the literal
-    * codebooks: an array of per-subspace MAPS code → <query subvector m,
-    * codebook m centroid code> (a map, not a position-indexed array, so
-    * the scoring side needs no code→position CASE chain and sparse codes
-    * — a Lloyd step can empty one — need no index bookkeeping). */
-  private def pqLut(books: Seq[Seq[(Long, Seq[Double])]], qv: Column): Column =
-    array((0 until PqM).map { m =>
-      map_from_entries(transform(bookLit(books(m)), cb =>
-        struct(cb.getField("c"), dot(pqSub(m, qv), cb.getField("cv")))))
-    }: _*)
-
-  /** Per-subspace ADC lookup terms over `lut` and `code{m}` columns —
-    * one two-level lookup each; the caller folds them left-to-right
-    * (matching the oracle's `+` chain). */
-  private def pqAdcTerms(books: Seq[Seq[(Long, Seq[Double])]]): Seq[Column] =
-    (0 until PqM).map { m =>
-      element_at(element_at(col("lut"), m + 1), col(s"code$m"))
-    }
-
   def annPqTopk(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
     val books = pqTrainBooks(c)
     // encode the corpus: 8 literal-projection argmins, zero shuffle
     val codes = pqEncode(c, books, Seq("vec_id"))
-    val q = c.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    val q = queryBatch(c)
       .withColumn("lut", pqLut(books, col("qv")))
       .select(col("q_id"), col("lut"))
     val scored = codes.join(broadcast(q), col("vec_id") =!= col("q_id"))
@@ -1301,12 +1268,9 @@ object Similarity {
    */
   def annIvfpqTopk(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    // coarse quantizer: per-label quantized-mean centroids (reuse the
-    // k-means centroid aggregate keyed by label; norm column unused and
-    // pruned by the optimizer)
-    val cent = Checkpoints.cut(
-      kmCentroids(c.select(col("label").as("cluster"), col("v")))
-        .select(col("cluster").cast("int").as("label"), col("cv")),
+    // coarse quantizer: the per-label quantized-mean centroids (norm
+    // column unused and pruned by the optimizer)
+    val cent = Checkpoints.cut(labelCentroids(c).select(col("label"), col("cv")),
       eager = false) // the k-row centroid table feeds the residual join,
                      // the probe crossJoin, and both training passes —
                      // uncut, each re-runs the full corpus aggregate
@@ -1329,9 +1293,7 @@ object Similarity {
     // probes: each query ranks the coarse centroids by raw inner
     // product and keeps NProbe lists, carrying its <q, centroid>
     // constant and its residual-ADC lookup table on the probe row
-    val q = c.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val cands = q.crossJoin(broadcast(cent))
+    val cands = queryBatch(c).crossJoin(broadcast(cent))
       .select(col("q_id"), col("qv"), col("label"),
               dot(col("qv"), col("cv")).as("qc_ip"))
     val probes = topK(cands, "q_id", NProbe, "crnk", col("qc_ip").desc, col("label").asc)
@@ -1422,12 +1384,9 @@ object Similarity {
    */
   def embedMatryoshka(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val qf = c.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
+    val qf = queryBatch(c)
     // the same per-query top K over full and truncated cosines
-    def top(scored: DataFrame): DataFrame =
-      topK(scored, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
-    val fullTop = top(c.join(broadcast(qf), col("vec_id") =!= col("q_id"))
+    val fullTop = nearestK(c.join(broadcast(qf), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
               cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos")))
       .select(col("q_id"), col("neighbor_id"))
@@ -1435,7 +1394,7 @@ object Similarity {
       .withColumn("tn", sqrt(dot(col("tv"), col("tv"))))
     val qt = tc.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("q_id"), col("tv").as("qv"), col("tn").as("qn"))
-    val truncTop = top(tc.join(broadcast(qt), col("vec_id") =!= col("q_id"))
+    val truncTop = nearestK(tc.join(broadcast(qt), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id").as("neighbor_id"),
               cosine(col("qv"), col("qn"), col("tv"), col("tn")).as("cos")))
       .select(col("q_id"), col("neighbor_id"), lit(1L).as("hit"))
@@ -1516,16 +1475,14 @@ object Similarity {
                 .dotProductLong(col("qq"), col("q")).as("iscore"))
     val cand = topK(coarse, "q_id", RerankC, "crnk", col("iscore").desc, col("neighbor_id").asc)
       .select(col("q_id"), col("neighbor_id"))
-    val qFull = c.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
+    val qFull = queryBatch(c)
     val exact = cand
       .join(c.select(col("vec_id"), col("v"), col("nrm")),
             col("neighbor_id") === col("vec_id"))
       .join(broadcast(qFull), "q_id")
       .select(col("q_id"), col("neighbor_id"),
               cosine(col("qv"), col("qn"), col("v"), col("nrm")).as("cos"))
-    topK(exact, "q_id", K, "rnk", col("cos").desc, col("neighbor_id").asc)
-      .select(col("q_id"), col("rnk"), col("neighbor_id"), col("cos"))
+    nearestK(exact)
   }
 
   val annRerankSql: String =
@@ -1951,7 +1908,7 @@ object Similarity {
   /**
    * SemDeDup [EXT] (Abbas et al. 2023 — semantic deduplication, the
    * embedding-space complement of MinHash): k-means-cluster the corpus
-   * embeddings (the [[annKmeansTopk]] Lloyd unroll, reused verbatim),
+   * embeddings (the [[kmeansCents]] Lloyd loop [[annKmeansTopk]] runs),
    * then within each cluster mark as duplicates the pairs with cosine ≥
    * [[SemTau]] and REMOVE the more-central member of each pair —
    * SemDeDup's keep-the-outlier rule (low centroid-similarity examples
@@ -1975,12 +1932,9 @@ object Similarity {
    */
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    var cents = trainCents(c.select(col("label").as("cluster"), col("v")))
-    for (_ <- 1 to KmIters)
-      cents = trainCents(kmAssign(c, cents).select(col("cluster"), col("v")))
-    val cent = centDf(spark, cents)
+    val cents = kmeansCents(c)
     val m = kmAssign(c, cents)
-      .join(broadcast(cent), "cluster")
+      .join(broadcast(centDf(spark, cents)), "cluster")
       .select(col("cluster"), col("vec_id"), col("v"), col("nrm"),
               cosine(col("v"), col("nrm"), col("cv"), col("cn")).as("c_cos"))
     val sized = m.join(

@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
  * `SparkPlan`, the strategy installed by the query that uses it) — the
  * declarative union+window composition in
  * [[graft.operators.JoinsExt.asofJoin]] stays as the zero-custom-code
- * twin, and JoinsExtNativeSpec holds the two row-for-row equal.
+ * twin, and AsofJoinNativeSpec holds the two row-for-row equal.
  *
  * Semantics (matching the declarative form): for each left row, the
  * right row of the same key with the greatest `rightTime <= leftTime`;

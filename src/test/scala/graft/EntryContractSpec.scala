@@ -32,16 +32,34 @@ class EntryContractSpec extends AnyFunSuite {
     assert(SparkEntry.queries.size == 214 && SparkEntry.oracleSql.size == 214)
   }
 
+  /** The .scala files under `dir`, sorted by relative path. */
+  private def scalaSources(dir: String): Seq[java.nio.file.Path] = {
+    val root = java.nio.file.Paths.get(dir)
+    assert(java.nio.file.Files.isDirectory(root), s"$root not found")
+    val files = java.nio.file.Files.walk(root)
+    try files.iterator.asScala.toSeq.filter(_.toString.endsWith(".scala"))
+      .sortBy(root.relativize(_).toString)
+    finally files.close()
+  }
+
   /** Files under src/main/scala (relative paths, sorted) containing `text`. */
   private def mainSourcesWith(text: String): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"$root not found")
-    val files = java.nio.file.Files.walk(root)
-    try files.iterator.asScala.toSeq
-      .filter(p => p.toString.endsWith(".scala") &&
-        java.nio.file.Files.readString(p).contains(text))
-      .map(root.relativize(_).toString).sorted
-    finally files.close()
+    scalaSources("src/main/scala")
+      .filter(p => java.nio.file.Files.readString(p).contains(text))
+      .map(root.relativize(_).toString)
+  }
+
+  test("every spec named in src/main has a file under src/test") {
+    // a comment citing a renamed or folded spec sends its reader nowhere;
+    // WindowSpec is Spark's window type, not a spec
+    val named = scalaSources("src/main/scala")
+      .flatMap(p => "\\b[A-Z]\\w*Spec\\b".r.findAllIn(java.nio.file.Files.readString(p)))
+      .toSet - "WindowSpec"
+    val specs = scalaSources("src/test/scala")
+      .map(_.getFileName.toString.stripSuffix(".scala")).toSet
+    assert(named.nonEmpty && (named -- specs).isEmpty,
+      s"specs named in src/main with no file under src/test: ${(named -- specs).toSeq.sorted}")
   }
 
   test("only Sessions.scala builds a SparkSession in src/main") {

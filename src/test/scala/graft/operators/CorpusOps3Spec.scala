@@ -999,6 +999,26 @@ class CorpusOps3Spec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // ------------------------------------------------- centroid forms agree
+
+  test("trainCents (collected, keyed by cluster) and labelCentroids " +
+       "(DataFrame) give bit-identical cv and cn per label") {
+    // annKmeansTopk seeds its Lloyd loop from the collected form; the IVF
+    // queries and evalClustering read the DataFrame form — one mean
+    val c = Similarity.corpus(spark, sf)
+    def bits(cv: Seq[Double], cn: Double): (Seq[Long], Long) =
+      (cv.map(java.lang.Double.doubleToRawLongBits),
+       java.lang.Double.doubleToRawLongBits(cn))
+    val collected = Similarity
+      .trainCents(c.select(col("label").as("cluster"), col("v")))
+      .map(ct => ct.cluster -> bits(ct.cv, ct.cn)).toMap
+    val frame = Similarity.labelCentroids(c).collect()
+      .map(r => r.getInt(0).toLong -> bits(r.getSeq[Double](1), r.getDouble(2)))
+      .toMap
+    assert(collected.size >= 2 && collected.values.forall(_._1.length == 64))
+    assert(collected == frame)
+  }
+
   // --------------------------------------------------------- quantile_sketch
 
   test("quantileSketch: every rank verdict holds, estimates are monotone, " +
